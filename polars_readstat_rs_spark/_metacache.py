@@ -23,6 +23,21 @@ from functools import wraps
 _MAXSIZE = 64
 
 
+def bounded_put(cache: dict, key, value, maxsize: int = _MAXSIZE) -> None:
+    """Insert into a FIFO-bounded memo dict, evicting the oldest entries
+    first. Callers include maintenance._run_jobs worker threads, so
+    concurrent evictions can race on the same FIFO head: the pop default
+    swallows a lost key race, and the try/except covers iter() itself
+    (emptied or resized by a peer between iter and next) — a lost race
+    is a no-op, and a double-insert just overwrites with an equal value."""
+    while len(cache) >= maxsize:
+        try:
+            cache.pop(next(iter(cache)), None)
+        except (StopIteration, RuntimeError):
+            break
+    cache[key] = value
+
+
 def stat_keyed_cache(fn=None, *, maxsize=_MAXSIZE):
     """Cache ``fn(path, *args, **kwargs)`` keyed by the path's
     (realpath, size, mtime_ns) stat fingerprint plus the remaining
@@ -30,12 +45,7 @@ def stat_keyed_cache(fn=None, *, maxsize=_MAXSIZE):
     default; pass a small value for functions whose entries are large —
     the SAS page index caps one entry at ~6 MB, so 64 of them would pin
     ~384 MB per reused worker). A path that cannot be stat'ed bypasses
-    the cache so the wrapped function raises its native error.
-
-    Thread-safety: callers include maintenance._run_jobs worker threads,
-    so concurrent evictions can race on the same FIFO head — the pops
-    use a default so a lost race is a no-op, and a double-insert just
-    overwrites with an equal value."""
+    the cache so the wrapped function raises its native error."""
     if fn is None:  # used as @stat_keyed_cache(maxsize=N)
         return lambda f: stat_keyed_cache(f, maxsize=maxsize)
     cache: dict = {}
@@ -55,12 +65,7 @@ def stat_keyed_cache(fn=None, *, maxsize=_MAXSIZE):
         if hit is not None:
             return hit
         out = fn(path, *args, **kwargs)
-        while len(cache) >= maxsize:
-            try:
-                cache.pop(next(iter(cache)), None)
-            except (StopIteration, RuntimeError):  # emptied/resized by a peer thread
-                break
-        cache[key] = out
+        bounded_put(cache, key, out, maxsize)
         return out
 
     wrapper._cache = cache  # test/introspection hook

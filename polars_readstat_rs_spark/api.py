@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ._metacache import bounded_put
 from .datasource import ReadstatDataSource
 from .formats.stata import parser as stata_parser
 from .formats.stata import writer as stata_writer
@@ -58,19 +59,26 @@ def plan_rle_partitions(
     """
     import json
 
-    from .datasource import TARGET_PARTITION_BYTES, expand_paths
+    from .datasource import expand_paths, split_target
+    from .formats.spss import parser as spss_parser
 
-    tb = target_bytes or TARGET_PARTITION_BYTES
     files = expand_paths(path)
 
-    def _plan_one(p: str) -> tuple[str, list] | None:
-        from .formats.spss import parser as spss_parser
-
+    def _meta(p: str):
         try:
-            meta = spss_parser.read_metadata(p)
+            return spss_parser.read_metadata(p)
         except Exception:
             return None  # not SPSS (mixed dir) — nothing to plan
-        if spss_parser.splittable(meta):
+
+    # the split target follows the whole scan's record bytes, as the
+    # DataSource planner sizes it (O(header) per file on the driver)
+    tb = target_bytes or split_target(
+        sum(m.row_count * m.record_len for m in map(_meta, files) if m is not None)
+    )
+
+    def _plan_one(p: str) -> tuple[str, list] | None:
+        meta = _meta(p)
+        if meta is None or spss_parser.splittable(meta):
             return None
         plan = spss_parser.rle_partition_plan(p, meta, 0, meta.row_count, partitions, tb)
         return (p, [list(t) for t in plan]) if plan else None
@@ -199,16 +207,7 @@ def readstat_scan(
     r = r.option("row_index", str(row_index).lower())
     df = r.load(path)
     if cache_key is not None:
-        while len(_SCAN_CACHE) >= 64:
-            # concurrent evictions (maintenance worker threads) can race
-            # on the FIFO head: pop default swallows a lost key race, and
-            # the try/except covers iter() itself (emptied / resized by a
-            # peer between iter and next) — a lost race is a no-op
-            try:
-                _SCAN_CACHE.pop(next(iter(_SCAN_CACHE)), None)
-            except (StopIteration, RuntimeError):
-                break
-        _SCAN_CACHE[cache_key] = df
+        bounded_put(_SCAN_CACHE, cache_key, df)
     return df
 
 

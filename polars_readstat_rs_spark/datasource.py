@@ -19,8 +19,11 @@ Options:
 - ``offset`` / ``limit``: row slice (reference P2/P3) applied before
   partition planning -> O(1) byte seek for fixed-width formats.
 - ``batch_size``: rows per Arrow batch (default 65536).
-- ``partitions``: target partition count (default: one per ~48MB of
-  record bytes, at least 1).
+- ``partitions``: target partition count. Default: Spark's
+  ``FilePartition.maxSplitBytes`` rule over the bytes the scan decodes
+  (see ``split_target``) — splits of min(16 MiB, max(1 MiB, scan
+  bytes / cores)), so one file spreads over the idle cores and a
+  directory of small files stays at one partition per file.
 - ``row_index``: emit a ``_row_idx`` long column for order recovery
   (reference P10 preserve_order: Spark partitions keep intra-partition
   order, so sorting by _row_idx reconstructs file order).
@@ -28,7 +31,10 @@ Options:
   (default true): reference P5/P8 semantics.
 - ``filter_pushdown`` (default FALSE): accept Catalyst filters for
   batch-side application (P4). Opt-in because Spark reuses the planned
-  scan across queries on the same relation — see _ReadstatReader.
+  scan across queries on the same relation — see _ReadstatReader. It
+  also needs the session conf
+  ``spark.sql.python.filterPushdown.enabled=true``; without it Spark
+  refuses the scan with ``DATA_SOURCE_PUSHDOWN_DISABLED``.
 - ``union_by_name`` (default false): multi-file scans with EVOLVING
   schemas (survey waves) read as the by-name union of all files'
   fields — missing columns null-fill, type conflicts fail at plan time.
@@ -130,16 +136,16 @@ def _from_arrow_schema(schema):
         fields.append(T.StructField(f.name, ft, f.nullable))
     return T.StructType(fields)
 
-# Default split target for row-range/page-range partition planning.
-# Sized to the PYTHON decode rate, not the JVM's: these readers decode
-# ~100-150 MB/s per core (numpy structured-view + Arrow build), so a
-# 16 MB split is ~0.1-0.15 s of task work — the same duration a 128 MB
-# parquet split costs whole-stage codegen at ~1 GB/s. The r9 default
-# (48 MB) left a 62 MB single file running 2-wide on a 32-core
-# executor; splits here are O(1)-seek byte ranges (no footer/stripe
-# overhead per split), so the finer default costs only task-scheduling
-# floor, which multi-file 100 TB scans amortize by the file axis
-# anyway. SPARK_GRAFT_READSTAT_TARGET overrides for deployments.
+# Cap of the split target for row-range/page-range partition planning
+# (split_target below sizes the actual splits). Sized to the PYTHON
+# decode rate, not the JVM's: these readers decode ~100-150 MB/s per
+# core (numpy structured-view + Arrow build), so a 16 MB split is
+# ~0.1-0.15 s of task work — the same duration a 128 MB parquet split
+# costs whole-stage codegen at ~1 GB/s. Splits are O(1)-seek byte
+# ranges (no footer/stripe overhead per split), so the cap costs only
+# task-scheduling floor, which multi-file 100 TB scans amortize by the
+# file axis anyway. SPARK_GRAFT_READSTAT_TARGET overrides for
+# deployments.
 def _partition_target_bytes() -> int:
     raw = os.environ.get("SPARK_GRAFT_READSTAT_TARGET", str(16 << 20))
     try:
@@ -155,6 +161,40 @@ def _partition_target_bytes() -> int:
 
 
 TARGET_PARTITION_BYTES = _partition_target_bytes()
+# floor of the split target (Spark's openCostInBytes default): below it
+# a split's task floor outweighs the decode it parallelizes
+MIN_SPLIT_BYTES = 1 << 20
+
+
+def _cores() -> int:
+    """Cores the planning process may run on."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity masks on this platform
+        return os.cpu_count() or 1
+
+
+def split_target(scan_bytes: int) -> int:
+    """Split size for a scan that decodes ``scan_bytes`` in total —
+    Spark's FilePartition.maxSplitBytes rule: min(cap, max(floor, bytes
+    per core)). One file alone spreads over every core; a directory of
+    small files sums to a target above each file, so it stays at one
+    partition per file. On a cluster the driver's cores can only
+    under-split compared with defaultParallelism."""
+    per_core = -(-scan_bytes // _cores())
+    return min(TARGET_PARTITION_BYTES, max(MIN_SPLIT_BYTES, per_core))
+
+
+def split_count(nbytes: int, target: int) -> int:
+    """Splits of at most ``target`` bytes covering ``nbytes``, at least 1."""
+    return max(1, -(-nbytes // target))
+
+
+def _even_bounds(start: int, count: int, n: int) -> list[tuple[int, int]]:
+    """[lo, hi) bounds of ``n`` near-equal slices of [start, start+count)."""
+    n = max(1, n)
+    cuts = [start + i * count // n for i in range(n + 1)]
+    return [(lo, hi) for lo, hi in zip(cuts, cuts[1:]) if hi > lo]
 
 
 @dataclass
@@ -415,9 +455,14 @@ class ReadstatDataSource(DataSource):
         return _from_arrow_schema(pa_lib.schema([pa_lib.field(n, fields[n]) for n in names]))
 
     def reader(self, schema) -> DataSourceReader:
-        return _ReadstatReader(
-            self.options, self._fmt(), self._columns(), self._read_opts(), schema
-        )
+        # Only an opted-in scan defines pushFilters. While the session
+        # conf is on, Spark plans every filtered query through an extra
+        # pushdown worker (reader(), pushFilters(), partitions() again);
+        # a reader that defines pushFilters needs the conf on, so the
+        # default one must not define it.
+        pushdown = _true(self.options.get("filter_pushdown"), default=False)
+        cls = _ReadstatReader if pushdown else _ReadstatScan
+        return cls(self.options, self._fmt(), self._columns(), self._read_opts(), schema)
 
     def streamReader(self, schema):
         """spark.readStream.format("readstat").load(dir): Structured
@@ -709,7 +754,11 @@ class _ReadstatStreamReader(DataSourceStreamReader):
         pass  # offsets are recomputable from the directory listing
 
 
-class _ReadstatReader(DataSourceReader):
+class _ReadstatScan(DataSourceReader):
+    """The default reader: plans row/page ranges and decodes them. It
+    defines no pushFilters, so Catalyst applies every filter JVM-side
+    and Spark plans the scan without a pushdown worker."""
+
     def __init__(self, options, fmt: str, columns, opts, spark_schema=None):
         self.path = options["path"]
         self.fmt = fmt
@@ -730,31 +779,322 @@ class _ReadstatReader(DataSourceReader):
         import json as _json
 
         self.rle_plan: dict[str, list] = _json.loads(options.get("rle_plan", "{}"))
+
+    def partitions(self):
+        paths = expand_paths(self.path)
+        if len(paths) > 1:
+            self._check_multifile(paths)
+        target = split_target(sum(self._decode_bytes(p) for p in paths))
+        # intra-file RLE split planning decompresses the file on the
+        # driver — fine for one file, O(corpus) driver work for a
+        # directory. Multi-file scans parallelize on the file axis
+        # instead: one partition per compressed file.
+        return [
+            part
+            for p in paths
+            for part in self._file_partitions(p, target, allow_expensive_split=len(paths) == 1)
+        ]
+
+    def _check_multifile(self, paths: list[str]) -> None:
+        # multi-file scan: per-file partition plans concatenate; row
+        # slicing across a concatenated corpus is ambiguous, so offset/
+        # limit stay single-file-only (Catalyst's own limit still applies
+        # post-scan)
+        if self.offset != 0 or self.limit >= 0:
+            raise ValueError("offset/limit options require a single input file")
+        if self.union_by_name:
+            return  # per-file schemas may differ; read() aligns batches
+        first_schema = self._arrow_schema_of(paths[0])
+        for p in paths[1:]:
+            s = self._arrow_schema_of(p)
+            if s != first_schema:
+                raise ValueError(
+                    f"schema mismatch in multi-file scan: {p!r} has {s} "
+                    f"!= {paths[0]!r} {first_schema}. Pass "
+                    "option('union_by_name','true') to read evolving "
+                    "schemas as their by-name union (missing -> null)."
+                )
+
+    def _layout(self, path: str):
+        """(metadata, rows, {column: record bytes}, row-compressed?) of
+        one file (.por has no such layout and is planned apart)."""
+        if self.fmt == "stata":
+            meta = stata_parser.read_metadata(path)
+            return meta, meta.nobs, {v.name: v.width for v in meta.variables}, False
+        if self.fmt == "spss":
+            from .formats.spss import parser as spss_parser
+
+            meta = spss_parser.read_metadata(path)
+            widths = {v.name: 8 * v.width for v in meta.variables}
+            return meta, meta.row_count, widths, not spss_parser.splittable(meta)
+        if self.fmt == "sas":
+            from .formats.sas import parser as sas_parser
+
+            meta = sas_parser.read_metadata(path)
+            widths = {c.name: c.length for c in meta.columns}
+            return meta, meta.row_count, widths, bool(meta.compression)
+        if self.fmt == "xport":
+            from .formats.sas import xport
+
+            meta = xport.read_metadata(path)
+            return meta, meta.row_count, {v.name: v.length for v in meta.variables}, False
+        raise ValueError(self.fmt)
+
+    def _decode_bytes(self, path: str) -> int:
+        """Record bytes one read of ``path`` decodes, the split planner's
+        work measure: the selected columns' widths for fixed-width
+        records, whole records for row-compressed ones (every column is
+        decompressed), and the file size for .por, whose header carries
+        no case count."""
+        if self.fmt == "por":
+            return os.path.getsize(path)
+        _, rows, widths, compressed = self._layout(path)
+        _, count = self._slice(rows)
+        if self.columns and not compressed:
+            return count * sum(widths.get(c, 0) for c in self.columns)
+        return count * sum(widths.values())
+
+    def _arrow_schema_of(self, path: str):
+        if self.fmt == "stata":
+            return stata_parser.arrow_schema(stata_parser.read_metadata(path), self.opts, self.columns)
+        if self.fmt == "spss":
+            from .formats.spss import parser as spss_parser
+
+            return spss_parser.arrow_schema(spss_parser.read_metadata(path), self.opts, self.columns)
+        if self.fmt == "xport":
+            from .formats.sas import xport
+
+            return xport.arrow_schema(xport.read_metadata(path), self.opts, self.columns)
+        if self.fmt == "por":
+            from .formats.spss import portable
+
+            return portable.arrow_schema(portable.read_metadata(path), self.opts, self.columns)
+        from .formats.sas import parser as sas_parser
+
+        return sas_parser.arrow_schema(
+            sas_parser.read_metadata(path),
+            self.columns,
+            row_index=self.opts.row_index,
+            informative_nulls=self.opts.informative_nulls,
+            informative_null_columns=self.opts.informative_null_columns,
+            informative_null_suffix=self.opts.informative_null_suffix,
+            catalog_formats=self.opts.catalog_formats,
+        )
+
+    def _file_partitions(self, path: str, target: int, allow_expensive_split: bool = True):
+        if self.fmt == "por":
+            # .por is a single self-delimiting character stream with no
+            # case count in the header and no random access — one
+            # partition per file, the same stance the reference takes
+            # for compressed .sav (src/spss/polars_output.rs:403-405).
+            # Multi-file scans still parallelize on the file axis, and
+            # .por is a legacy interchange format (small by construction).
+            return [_RowRange(path, self.offset, self.limit)]
+        meta, rows, _, compressed = self._layout(path)
+        start, count = self._slice(rows)
+        if compressed and self.fmt == "spss":
+            if path in self.rle_plan and self.offset == 0 and self.limit < 0:
+                # executor-computed plan (api.plan_rle_partitions):
+                # no driver-side stream scan at all. Precomputed plans
+                # cover the WHOLE file, so an offset/limit request must
+                # fall through to the slicing planner below instead of
+                # silently returning every row.
+                return [
+                    _RlePartition(path, s, c, anchor, skip, ub)
+                    for s, c, anchor, skip, ub in self.rle_plan[path]
+                ]
+            if not allow_expensive_split:
+                return [_RowRange(path, start, count)]
+            # compressed (.sav RLE / .zsav): one planning pass records
+            # RLE command-group recovery points, then executors decode
+            # disjoint block/byte ranges independently — beyond the
+            # reference, which is sequential-only here
+            # (src/spss/data.rs:1687-1761). This in-planner scan is
+            # O(file bytes); api.readstat_scan auto-routes single
+            # compressed files through the api.plan_rle_partitions
+            # executor job instead, so this branch only runs for raw
+            # spark.read.format("readstat") use without a plan option.
+            from .formats.spss import parser as spss_parser
+
+            plan = spss_parser.rle_partition_plan(
+                path, meta, start, count, self.n_partitions, target
+            )
+            if plan:
+                return [
+                    _RlePartition(path, s, c, anchor, skip, ub)
+                    for s, c, anchor, skip, ub in plan
+                ]
+            return [_RowRange(path, start, count)]
+        if compressed:  # SAS RLE/RDC
+            # RLE/RDC rows are independent subheaders -> page-parallel
+            # (improvement over the reference's sequential-only path),
+            # unless a row slice / row index needs global ordering.
+            plain = self.offset == 0 and self.limit < 0 and not getattr(self.opts, "row_index", False)
+            if plain and meta.page_count > 1:
+                n = self.n_partitions or min(16, split_count(self._decode_bytes(path), target))
+                return [
+                    _PageRange(path, lo, hi)
+                    for lo, hi in _even_bounds(0, meta.page_count, min(n, meta.page_count))
+                ]
+            return [_RowRange(path, start, count)]
+        # fixed-width records: O(1)-seek analytical byte-range splits
+        n = self.n_partitions or split_count(self._decode_bytes(path), target)
+        return [
+            _RowRange(path, lo, hi - lo) for lo, hi in _even_bounds(start, count, min(n, count))
+        ] or [_RowRange(path, start, 0)]
+
+    def _slice(self, nobs: int) -> tuple[int, int]:
+        start = min(self.offset, nobs)
+        count = nobs - start
+        if self.limit >= 0:
+            count = min(count, self.limit)
+        return start, count
+
+    def _target_schema(self):
+        if self._target_arrow is None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            self._target_arrow = to_arrow_schema(self.spark_schema)
+        return self._target_arrow
+
+    def _file_cols(self, path: str) -> list[str] | None:
+        """union_by_name projection for ONE file: the target fields that
+        actually exist in it (file order). A file contributing no
+        projected column still contributes its ROWS — keep one real
+        column so the parser preserves the row count; _align drops it."""
+        have = [f.name for f in self._arrow_schema_of(path)]
+        want = set(f.name for f in self._target_schema())
+        cols = [n for n in have if n in want]
+        return cols or have[:1]
+
+    def _align(self, batch):
+        """Null-fill, reorder, and cast one record batch to the union
+        schema (union_by_name mode only)."""
+        target = self._target_schema()
+        present = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
+        n = batch.num_rows
+        arrays = []
+        for f in target:
+            a = present.get(f.name)
+            if a is None:
+                arrays.append(pa_lib.nulls(n, f.type))
+            elif a.type != f.type:
+                arrays.append(a.cast(f.type))
+            else:
+                arrays.append(a)
+        return pa_lib.RecordBatch.from_arrays(arrays, schema=target)
+
+    def read(self, partition: _RowRange):
+        if self.union_by_name:
+            # per-task copy of the reader: narrowing the projection to
+            # THIS file's fields is task-local state
+            self.columns = self._file_cols(partition.path)
+            for b in self._read_raw(partition):
+                yield self._align(b)
+            return
+        yield from self._read_raw(partition)
+
+    def _read_raw(self, partition: _RowRange):
+        if isinstance(partition, _PageRange):
+            from .formats.sas import parser as sas_parser
+
+            yield from sas_parser.read_page_range(
+                partition.path, partition.lo, partition.hi, self.columns, self.batch_size, self.opts
+            )
+            return
+        if isinstance(partition, _RlePartition):
+            from .formats.spss import parser as spss_parser
+
+            yield from spss_parser.read_rle_partition(
+                partition.path, partition.start, partition.count, self.columns,
+                self.opts, self.batch_size, partition.anchor, partition.skip,
+                partition.unit_base,
+            )
+            return
+        if self.fmt == "stata":
+            batches = self._read_stata(partition)
+        elif self.fmt == "por":
+            from .formats.spss import portable
+
+            t = portable.read_table(
+                partition.path, self.opts, self.columns,
+                offset=partition.start, limit=partition.count,
+            )
+            batches = t.to_batches(self.batch_size)
+        elif self.fmt == "xport":
+            from .formats.sas import xport
+
+            batches = xport.read_partition(
+                partition.path, partition.start, partition.count, self.columns,
+                self.batch_size, self.opts,
+            )
+        elif self.fmt == "spss":
+            from .formats.spss import parser as spss_parser
+
+            batches = spss_parser.read_partition(
+                partition.path, partition.start, partition.count, self.columns,
+                self.opts, self.batch_size,
+            )
+        else:
+            from .formats.sas import parser as sas_parser
+
+            batches = sas_parser.read_partition(
+                partition.path, partition.start, partition.count, self.columns,
+                self.batch_size, self.opts,
+            )
+        yield from batches
+
+    def _read_stata(self, p: _RowRange):
+        import pyarrow as pa
+
+        meta = stata_parser.read_metadata(p.path)
+        sel = self.columns
+        need_strl = any(
+            v.kind == "strl" for v in meta.variables if sel is None or v.name in set(sel)
+        )
+        strl_map = stata_parser.load_strls(p.path, meta) if need_strl else None
+        schema = stata_parser.arrow_schema(meta, self.opts, sel)
+        rec = meta.record_len
+        with open(p.path, "rb") as f:
+            f.seek(meta.data_offset + p.start * rec)
+            done = 0
+            while done < p.count:
+                take = min(self.batch_size, p.count - done)
+                raw = f.read(take * rec)
+                if not raw:
+                    break
+                cols = stata_parser.decode_records(
+                    raw, meta, sel, strl_map, self.opts, row_offset=p.start + done
+                )
+                yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
+                done += take
+
+
+class _ReadstatReader(_ReadstatScan):
+    """option("filter_pushdown","true"): the scan plus batch-side
+    application of the simple filters Catalyst pushes.
+
+    Batch-side filter application is OPT-IN (r9): Spark caches the
+    planned scan per relation and REUSES it for later queries on the
+    same DataFrame/SQL view — a scan planned with query A's filters
+    then serves filterless query B, silently dropping rows (reproduced
+    on plain `df.filter(...).count(); df.count()` and on `CREATE
+    TEMPORARY VIEW ... USING readstat`). Nothing inside the reader can
+    see which query is executing, so the only sound default is the
+    filterless _ReadstatScan (Catalyst applies every filter JVM-side —
+    correctness never depended on acceptance). This reader restores the
+    Arrow-transfer shrink for single-action reads (gates, benches, ETL
+    jobs that read once per relation)."""
+
+    def __init__(self, options, fmt: str, columns, opts, spark_schema=None):
+        super().__init__(options, fmt, columns, opts, spark_schema)
         self.pushed: list = []
-        # Batch-side filter application is OPT-IN (r9): Spark caches the
-        # planned scan per relation and REUSES it for later queries on
-        # the same DataFrame/SQL view — a scan planned with query A's
-        # filters then serves filterless query B, silently dropping rows
-        # (reproduced on plain `df.filter(...).count(); df.count()` and
-        # on `CREATE TEMPORARY VIEW ... USING readstat`). Nothing inside
-        # the reader can see which query is executing, so the only sound
-        # default is to decline the filters (Catalyst re-applies every
-        # one JVM-side — correctness never depended on acceptance).
-        # option("filter_pushdown","true") restores the Arrow-transfer
-        # shrink for single-action reads (gates, benches, ETL jobs that
-        # read once per relation).
-        self.accept_filters = _true(options.get("filter_pushdown"), default=False)
 
     def pushFilters(self, filters):
         """Predicate pushdown (absent in the reference — P4). Simple
         comparisons are applied batch-side in the Python worker before
         Arrow crosses to the JVM, shrinking the transfer; every filter is
-        also returned so Catalyst re-applies them (belt and braces) —
-        which is also what makes declining them (the default, see
-        __init__) always correct."""
-        if not self.accept_filters:
-            yield from filters
-            return
+        also returned so Catalyst re-applies them (belt and braces)."""
         from pyspark.sql.datasource import (
             EqualTo,
             GreaterThan,
@@ -844,289 +1184,9 @@ class _ReadstatReader(DataSourceReader):
             mask = m if mask is None else pc.and_(mask, m)
         return batch.filter(mask) if mask is not None else batch
 
-    def partitions(self):
-        paths = expand_paths(self.path)
-        if len(paths) == 1:
-            return self._file_partitions(paths[0])
-        # multi-file scan: per-file partition plans concatenate; row
-        # slicing across a concatenated corpus is ambiguous, so offset/
-        # limit stay single-file-only (Catalyst's own limit still applies
-        # post-scan)
-        if self.offset != 0 or self.limit >= 0:
-            raise ValueError("offset/limit options require a single input file")
-        first_schema = None
-        out = []
-        for p in paths:
-            if self.union_by_name:
-                pass  # per-file schemas may differ; read() aligns batches
-            elif first_schema is None:
-                first_schema = self._arrow_schema_of(p)
-            else:
-                s = self._arrow_schema_of(p)
-                if s != first_schema:
-                    raise ValueError(
-                        f"schema mismatch in multi-file scan: {p!r} has {s} "
-                        f"!= {paths[0]!r} {first_schema}. Pass "
-                        "option('union_by_name','true') to read evolving "
-                        "schemas as their by-name union (missing -> null)."
-                    )
-            # intra-file RLE split planning decompresses the file on the
-            # driver — fine for one file, O(corpus) driver work for a
-            # directory. Multi-file scans parallelize on the file axis
-            # instead: one partition per compressed file.
-            out.extend(self._file_partitions(p, allow_expensive_split=len(paths) == 1))
-        return out
-
-    def _arrow_schema_of(self, path: str):
-        if self.fmt == "stata":
-            return stata_parser.arrow_schema(stata_parser.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            return spss_parser.arrow_schema(spss_parser.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "xport":
-            from .formats.sas import xport
-
-            return xport.arrow_schema(xport.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "por":
-            from .formats.spss import portable
-
-            return portable.arrow_schema(portable.read_metadata(path), self.opts, self.columns)
-        from .formats.sas import parser as sas_parser
-
-        return sas_parser.arrow_schema(
-            sas_parser.read_metadata(path),
-            self.columns,
-            row_index=self.opts.row_index,
-            informative_nulls=self.opts.informative_nulls,
-            informative_null_columns=self.opts.informative_null_columns,
-            informative_null_suffix=self.opts.informative_null_suffix,
-            catalog_formats=self.opts.catalog_formats,
-        )
-
-    def _file_partitions(self, path: str, allow_expensive_split: bool = True):
-        if self.fmt == "stata":
-            meta = stata_parser.read_metadata(path)
-            nobs, rec = meta.nobs, max(1, meta.record_len)
-        elif self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            meta = spss_parser.read_metadata(path)
-            if not spss_parser.splittable(meta):
-                if path in self.rle_plan and self.offset == 0 and self.limit < 0:
-                    # executor-computed plan (api.plan_rle_partitions):
-                    # no driver-side stream scan at all. Precomputed plans
-                    # cover the WHOLE file, so an offset/limit request must
-                    # fall through to the slicing planner below instead of
-                    # silently returning every row.
-                    return [
-                        _RlePartition(path, s, c, anchor, skip, ub)
-                        for s, c, anchor, skip, ub in self.rle_plan[path]
-                    ]
-                if not allow_expensive_split:
-                    start, count = self._slice(meta.row_count)
-                    return [_RowRange(path, start, count)]
-                # compressed (.sav RLE / .zsav): one planning pass records
-                # RLE command-group recovery points, then executors decode
-                # disjoint block/byte ranges independently — beyond the
-                # reference, which is sequential-only here
-                # (src/spss/data.rs:1687-1761). This in-planner scan is
-                # O(file bytes); api.readstat_scan auto-routes single
-                # compressed files through the api.plan_rle_partitions
-                # executor job instead, so this branch only runs for raw
-                # spark.read.format("readstat") use without a plan option.
-                start, count = self._slice(meta.row_count)
-                plan = spss_parser.rle_partition_plan(
-                    path, meta, start, count, self.n_partitions, TARGET_PARTITION_BYTES
-                )
-                if plan:
-                    return [
-                        _RlePartition(path, s, c, anchor, skip, ub)
-                        for s, c, anchor, skip, ub in plan
-                    ]
-                return [_RowRange(path, start, count)]
-            nobs, rec = meta.row_count, max(1, meta.record_len)
-        elif self.fmt == "sas":
-            from .formats.sas import parser as sas_parser
-
-            meta = sas_parser.read_metadata(path)
-            if meta.compression:
-                # RLE/RDC rows are independent subheaders -> page-parallel
-                # (improvement over the reference's sequential-only path),
-                # unless a row slice / row index needs global ordering.
-                plain = self.offset == 0 and self.limit < 0 and not getattr(self.opts, "row_index", False)
-                if plain and meta.page_count > 1:
-                    n = self.n_partitions or max(
-                        1, min(16, (meta.page_count * meta.page_length) // TARGET_PARTITION_BYTES + 1)
-                    )
-                    n = min(n, meta.page_count)
-                    per = (meta.page_count + n - 1) // n
-                    return [
-                        _PageRange(path, lo, min(lo + per, meta.page_count))
-                        for lo in range(0, meta.page_count, per)
-                    ]
-                start, count = self._slice(meta.row_count)
-                return [_RowRange(path, start, count)]
-            nobs, rec = meta.row_count, max(1, meta.row_length)
-        elif self.fmt == "xport":
-            from .formats.sas import xport
-
-            meta = xport.read_metadata(path)
-            # fixed-width records: O(1)-seek analytical byte-range splits
-            nobs, rec = meta.row_count, max(1, meta.row_length)
-        elif self.fmt == "por":
-            # .por is a single self-delimiting character stream with no
-            # case count in the header and no random access — one
-            # partition per file, the same stance the reference takes
-            # for compressed .sav (src/spss/polars_output.rs:403-405).
-            # Multi-file scans still parallelize on the file axis, and
-            # .por is a legacy interchange format (small by construction).
-            return [_RowRange(path, self.offset, self.limit)]
-        else:
-            raise ValueError(self.fmt)
-
-        start, count = self._slice(nobs)
-        if self.n_partitions > 0:
-            n = self.n_partitions
-        else:
-            n = max(1, min(count, (count * rec) // TARGET_PARTITION_BYTES + 1))
-        per = (count + n - 1) // max(1, n)
-        out = []
-        pos = start
-        while pos < start + count:
-            take = min(per, start + count - pos)
-            out.append(_RowRange(path, pos, take))
-            pos += take
-        return out or [_RowRange(path, start, 0)]
-
-    def _slice(self, nobs: int) -> tuple[int, int]:
-        start = min(self.offset, nobs)
-        count = nobs - start
-        if self.limit >= 0:
-            count = min(count, self.limit)
-        return start, count
-
-    def _target_schema(self):
-        if self._target_arrow is None:
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            self._target_arrow = to_arrow_schema(self.spark_schema)
-        return self._target_arrow
-
-    def _file_cols(self, path: str) -> list[str] | None:
-        """union_by_name projection for ONE file: the target fields that
-        actually exist in it (file order). A file contributing no
-        projected column still contributes its ROWS — keep one real
-        column so the parser preserves the row count; _align drops it."""
-        have = [f.name for f in self._arrow_schema_of(path)]
-        want = set(f.name for f in self._target_schema())
-        cols = [n for n in have if n in want]
-        return cols or have[:1]
-
-    def _align(self, batch):
-        """Null-fill, reorder, and cast one record batch to the union
-        schema (union_by_name mode only)."""
-        target = self._target_schema()
-        present = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
-        n = batch.num_rows
-        arrays = []
-        for f in target:
-            a = present.get(f.name)
-            if a is None:
-                arrays.append(pa_lib.nulls(n, f.type))
-            elif a.type != f.type:
-                arrays.append(a.cast(f.type))
-            else:
-                arrays.append(a)
-        return pa_lib.RecordBatch.from_arrays(arrays, schema=target)
-
-    def read(self, partition: _RowRange):
-        if self.union_by_name:
-            # per-task copy of the reader: narrowing the projection to
-            # THIS file's fields is task-local state
-            self.columns = self._file_cols(partition.path)
-            for b in self._read_raw(partition):
-                yield self._align(b)
-            return
-        yield from self._read_raw(partition)
-
-    def _read_raw(self, partition: _RowRange):
-        if isinstance(partition, _PageRange):
-            from .formats.sas import parser as sas_parser
-
-            for batch in sas_parser.read_page_range(
-                partition.path, partition.lo, partition.hi, self.columns, self.batch_size, self.opts
-            ):
-                yield self._apply_filters(batch)
-            return
-        if isinstance(partition, _RlePartition):
-            from .formats.spss import parser as spss_parser
-
-            for batch in spss_parser.read_rle_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.opts, self.batch_size, partition.anchor, partition.skip,
-                partition.unit_base,
-            ):
-                yield self._apply_filters(batch)
-            return
-        if self.fmt == "stata":
-            batches = self._read_stata(partition)
-        elif self.fmt == "por":
-            from .formats.spss import portable
-
-            t = portable.read_table(
-                partition.path, self.opts, self.columns,
-                offset=partition.start, limit=partition.count,
-            )
-            batches = t.to_batches(self.batch_size)
-        elif self.fmt == "xport":
-            from .formats.sas import xport
-
-            batches = xport.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.batch_size, self.opts,
-            )
-        elif self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            batches = spss_parser.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.opts, self.batch_size,
-            )
-        else:
-            from .formats.sas import parser as sas_parser
-
-            batches = sas_parser.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.batch_size, self.opts,
-            )
-        for batch in batches:
+    def read(self, partition):
+        for batch in super().read(partition):
             yield self._apply_filters(batch)
-
-    def _read_stata(self, p: _RowRange):
-        import pyarrow as pa
-
-        meta = stata_parser.read_metadata(p.path)
-        sel = self.columns
-        need_strl = any(
-            v.kind == "strl" for v in meta.variables if sel is None or v.name in set(sel)
-        )
-        strl_map = stata_parser.load_strls(p.path, meta) if need_strl else None
-        schema = stata_parser.arrow_schema(meta, self.opts, sel)
-        rec = meta.record_len
-        with open(p.path, "rb") as f:
-            f.seek(meta.data_offset + p.start * rec)
-            done = 0
-            while done < p.count:
-                take = min(self.batch_size, p.count - done)
-                raw = f.read(take * rec)
-                if not raw:
-                    break
-                cols = stata_parser.decode_records(
-                    raw, meta, sel, strl_map, self.opts, row_offset=p.start + done
-                )
-                yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-                done += take
 
 
 class _DtaCommit(WriterCommitMessage):

@@ -665,7 +665,9 @@ def rle_partition_plan(
     rec = meta.record_len
     if count <= 0 or rec == 0:
         return None
-    n = n_partitions if n_partitions > 0 else max(1, min(count, (count * rec) // target_bytes + 1))
+    # splits of at most target_bytes of whole records (the caller sizes
+    # the target to the scan, datasource.split_target)
+    n = n_partitions if n_partitions > 0 else min(count, -(-(count * rec) // target_bytes))
     if n <= 1:
         return None
     if meta.compression == 2:

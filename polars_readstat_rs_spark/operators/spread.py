@@ -13,15 +13,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# (applicationId, analyzed-plan semanticHash) -> partition count. The
-# probe is a pure driver-side physical-planning pass whose answer only
-# depends on the analyzed plan + session scan confs, and the bench/
-# driver re-builds the same plans every run — so memoize it per
-# session (r15: the probe was 0.1-0.3 s of build time PER CALL, and
-# p06 pays it twice per invocation). A stale hit can only mis-size the
-# widening (parallelism, never correctness), and the key dies with the
-# session.
+from .._metacache import bounded_put
+
+# (applicationId, analyzed-plan semanticHash, scan split confs) ->
+# partition count, FIFO-bounded at 64 entries. The probe is a pure
+# driver-side physical-planning pass whose answer only depends on the
+# analyzed plan + the session's scan split confs, and the bench/driver
+# re-builds the same plans every run — so memoize it per session (r15:
+# the probe was 0.1-0.3 s of build time PER CALL, and p06 pays it twice
+# per invocation). A stale hit can only mis-size the widening
+# (parallelism, never correctness), and the key dies with the session.
 _PROBE_CACHE: dict[tuple, int] = {}
+# the file-scan split confs a partition count depends on
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
 
 
 def spread(df: DataFrame, minimum: int | None = None) -> DataFrame:
@@ -37,14 +41,19 @@ def spread(df: DataFrame, minimum: int | None = None) -> DataFrame:
     try:
         sc = df.sparkSession.sparkContext
         try:
-            key = (sc.applicationId, df._jdf.queryExecution().analyzed().semanticHash())
+            conf = df.sparkSession.conf
+            key = (
+                sc.applicationId,
+                df._jdf.queryExecution().analyzed().semanticHash(),
+                *(conf.get(k, None) for k in _SPLIT_CONFS),
+            )
         except Exception:
             key = None
         current = _PROBE_CACHE.get(key) if key is not None else None
         if current is None:
             current = df._jdf.queryExecution().toRdd().getNumPartitions()
             if key is not None:
-                _PROBE_CACHE[key] = current
+                bounded_put(_PROBE_CACHE, key, current)
     except Exception:  # Spark Connect: no RDD access
         return df
     target = minimum or sc.defaultParallelism

@@ -500,6 +500,9 @@ def r12_pushdown_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
         )
         write_dta(cust, path)
+    # an opted-in reader defines pushFilters, which Spark refuses to plan
+    # unless the session enables Python DataSource filter pushdown
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = spark.read.format("readstat").option("filter_pushdown", "true").load(path)
     return (
         df.filter(

@@ -87,8 +87,8 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the result is bit-identical to the direct per-row decimal
     # formulation (verified at sf10: collected outputs of this shape
     # and the r9 per-row-cents shape compare equal tuple-for-tuple;
-    # tools/q01_ab_sf10.py measured 2.15 -> 1.61 s at 16m splits,
-    # 1.85 -> 1.35 s at 64m, DuckDB warm 0.48 s).
+    # an interleaved sf10 A/B measured 2.15 -> 1.61 s at 16m splits,
+    # 1.85 -> 1.35 s at 64m, DuckDB warm 0.48 s; KNOB_Q01_AB_r14.json).
     # Scale bounds: a level-1 price-cents long sum overflows at 9.2e18
     # cents (~$92 quadrillion per (flag,status,d,t) cell); a per-cell
     # quantity sum loses exactness at 2^53 (~9e15 units) — both beyond

@@ -20,13 +20,15 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # Confs the engine depends on, applied defensively at runtime when code
 # runs under a SparkSession we did not build (e.g. the harness driver's):
-# ns-timestamp parquet reads, UTC comparisons, and the Python DataSource
-# filter-pushdown gate (Spark errors if a reader defines pushFilters
-# while the conf is off).
+# ns-timestamp parquet reads and UTC comparisons. The Python DataSource
+# filter-pushdown conf is deliberately absent: while it is on, Spark
+# plans every filtered query through an extra pushdown worker, and the
+# default readstat reader declines every filter anyway. A read with
+# option("filter_pushdown","true") needs the session to set
+# spark.sql.python.filterPushdown.enabled=true itself.
 _REQUIRED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.python.filterPushdown.enabled": "true",
     # testdata events.ts is parquet timestamp[us] (not UTC-adjusted); read
     # it as plain TIMESTAMP (identical micros under the UTC session zone)
     # instead of TIMESTAMP_NTZ, which unix_millis/window reject.
@@ -122,8 +124,6 @@ def get_spark(app_name: str = "polars_readstat_rs_spark", cpus: str | int | None
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # allow Python DataSources (the readstat reader) to receive filters
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # testdata events.ts is parquet TIMESTAMP(NANOS) which Spark has no
         # native type for; read as long ns and normalize in tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

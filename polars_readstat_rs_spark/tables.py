@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._metacache import bounded_put
+
 TABLES = (
     "region",
     "nation",
@@ -32,11 +34,12 @@ TABLES = (
 )
 
 
-# (appId, sf_dir, name) -> DataFrame. A DataFrame is an immutable logical
-# plan, so reuse across queries is safe; caching skips the ~0.1 s
-# file-listing + footer-schema planning that spark.read.parquet pays per
-# call (a 6-table query was spending ~0.6 s just re-planning reads).
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# (appId, sf_dir, name, file fingerprint) -> DataFrame, FIFO-bounded at
+# 64 entries. A DataFrame is an immutable logical plan, so reuse across
+# queries is safe; caching skips the ~0.1 s file-listing + footer-schema
+# planning that spark.read.parquet pays per call (a 6-table query was
+# spending ~0.6 s just re-planning reads).
+_DF_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -76,7 +79,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # micros bit-for-bit while giving downstream unix_millis/window
             # the TIMESTAMP type they require.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _DF_CACHE[key] = df
+    bounded_put(_DF_CACHE, key, df)
     return df
 
 
