@@ -724,6 +724,65 @@ def assemble_por(
         f.write(_wrap(stream))
 
 
+def spill_por_partition(batches, blob_path: str) -> list[dict]:
+    """Executor side of the distributed write: append every batch's case
+    stream to ``blob_path``. Returns ``[widths]`` (max string length per
+    column, which the header needs) or ``[]`` for an empty partition."""
+    widths: dict[str, int] = {}
+    nrows = 0
+    with open(blob_path, "w", encoding="ascii") as f:
+        for batch in batches:
+            t = pa.Table.from_batches([batch])
+            if not t.num_rows:
+                continue
+            for i, fld in enumerate(t.schema):
+                if pa.types.is_string(fld.type) or pa.types.is_large_string(fld.type):
+                    col = t.column(i).to_pylist()
+                    w = max([len(str(v)) for v in col if v is not None] or [0])
+                    widths[fld.name] = max(widths.get(fld.name, 0), w)
+            f.write(encode_cases(t))
+            nrows += t.num_rows
+    return [widths] if nrows else []
+
+
+def assemble_por_parts(
+    path: str,
+    schema: pa.Schema,
+    parts: list[tuple[str, list[dict]]],
+    variable_labels: dict[str, str] | None = None,
+    value_labels: dict[str, dict] | None = None,
+) -> None:
+    """Driver side of the distributed write: header from ``schema`` and
+    the partitions' string widths, then every case blob streamed through
+    the 80-character line re-wrapper — O(1) memory in the data size."""
+    widths: dict[str, int] = {}
+    for _, sections in parts:
+        for k, v in sections[0].items():
+            widths[k] = max(widths.get(k, 0), v)
+    variables = [_var_of_field(f, widths.get(f.name, 1)) for f in schema]
+    header = write_header(variables, variable_labels, value_labels)
+    carry = ""
+    with open(path, "w", encoding="ascii", newline="") as out:
+
+        def emit(chunk: str) -> None:
+            nonlocal carry
+            carry += chunk
+            while len(carry) >= _LINE:
+                out.write(carry[:_LINE] + "\n")
+                carry = carry[_LINE:]
+
+        emit(header)
+        for blob, _ in parts:
+            with open(blob, encoding="ascii") as f:
+                while True:
+                    chunk = f.read(1 << 20)
+                    if not chunk:
+                        break
+                    emit(chunk)
+        if carry:
+            out.write(carry.ljust(_LINE, "Z") + "\n")
+
+
 def write_por(
     table,
     path: str,

@@ -707,6 +707,27 @@ def test_multifile_directory_write_roundtrip(spark, tmp_path):
         assert back.agg(F.sum("k")).collect()[0][0] == sum(range(5000))
         assert back.rdd.getNumPartitions() == 6  # partition-per-file read
 
+    # the sink honours the single-file writer's options: compress=zsav
+    # writes zlib .zsav parts, and .por value labels read back as labels
+    out = str(tmp_path / "dir_z.sav")
+    df.write.format("readstat").mode("overwrite").option("multifile", "true").option(
+        "compress", "zsav"
+    ).save(out)
+    files = glob.glob(f"{out}/part-*.zsav")
+    assert len(files) == 6 and not glob.glob(f"{out}/part-*.sav"), files
+    for f in files:
+        with open(f, "rb") as fh:
+            assert fh.read(4) == b"$FL3", f
+    assert spark.read.format("readstat").load(out).count() == 5000
+    out = str(tmp_path / "labels.por")
+    df.write.format("readstat").mode("overwrite").option("multifile", "true").option(
+        "value_labels", '{"k": {"0": "zero", "1": "one"}}'
+    ).save(out)
+    back = spark.read.format("readstat").load(out)
+    assert sorted(r.k for r in back.where("k IN ('zero', 'one', '2')").collect()) == [
+        "2", "one", "zero"
+    ]
+
     # overwrite clears previous parts (no stale-file mixing): rewrite
     # the dta dir with FEWER partitions and expect exactly that many
     out = str(tmp_path / "dir.dta")

@@ -648,3 +648,53 @@ def test_readstat_stream_sink_por(spark, tmp_path, sf_dir):
     back = spark.read.format("readstat").load(str(out))
     assert back.count() == len(nation)
     assert sorted(r.n_name for r in back.collect()) == sorted(nation.n_name)
+
+
+def test_readstat_stream_sink_honours_writer_options(spark, tmp_path, sf_dir):
+    """The stream sink parses the same writer options as the batch
+    sink: dta_version=117 writes a v117 release header and SAS
+    compress=rle writes SASYZCRL-compressed rows; values read back
+    equal and no staging dir survives the query."""
+    import os
+
+    from polars_readstat_rs_spark.datasource import register as register_ds
+    from polars_readstat_rs_spark.tables import load_table
+
+    register_ds(spark)
+    drop = tmp_path / "in_opts"
+    drop.mkdir()
+    nation = (
+        load_table(spark, sf_dir, "nation")
+        .selectExpr("CAST(n_nationkey AS DOUBLE) AS nkey", "n_name")
+        .toPandas()
+    )
+    tmp = drop / ".a.dta.tmp"
+    nation.to_stata(str(tmp), version=118, write_index=False)
+    tmp.rename(drop / "a.dta")
+    want = sorted(zip(nation.nkey, nation.n_name))
+
+    for fmt, opts, ext, marker in (
+        ("stata", {"dta_version": "117"}, "dta", b"<stata_dta><header><release>117</release>"),
+        ("sas", {"compress": "rle"}, "sas7bdat", b"SASYZCRL"),
+    ):
+        out = tmp_path / f"out_{ext}"
+        w = spark.readStream.format("readstat").load(str(drop)).writeStream.format("readstat")
+        for k, v in opts.items():
+            w = w.option(k, v)
+        q = (
+            w.option("format", fmt)
+            .option("checkpointLocation", str(tmp_path / f"ck_{ext}"))
+            .start(str(out))
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        parts = sorted(out.glob(f"part-*.{ext}"))
+        assert parts, ext
+        for p in parts:
+            raw = p.read_bytes()
+            assert raw.startswith(marker) if ext == "dta" else marker in raw, (p, raw[:64])
+        back = spark.read.format("readstat").load(str(out)).collect()
+        assert sorted((r.nkey, r.n_name) for r in back) == want
+        assert not [f for f in os.listdir(tmp_path) if "._stage_" in f], os.listdir(tmp_path)
