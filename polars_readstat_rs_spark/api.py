@@ -139,8 +139,9 @@ def readstat_scan(
     _ensure_registered(spark)
     # Session-scoped DataFrame cache (mirrors tables.load_table): a
     # DataFrame is an immutable logical plan, so an identical scan of
-    # unchanged files returns the cached one and skips the whole
-    # create_data_source planning worker round (~0.15 s/query). The
+    # unchanged files returns the cached one and skips the schema and
+    # read-planning worker rounds: a new scan of a 4k-row .dta costs
+    # 0.54 s to a noop sink, the cached one 0.10 s (4 cores). The
     # stat fingerprint of every matched file invalidates on replace.
     cache_key = _scan_cache_key(
         spark, path, columns, offset, limit, value_labels_as_strings,
@@ -264,10 +265,12 @@ def readstat_read_local(
     and hand Spark an Arrow-backed local relation, skipping the Python
     DataSource planning worker + executor job entirely.
 
-    Why it exists (READER_FLOOR_r13 / r13 verdict item 6): a Spark job
-    over a 100k-row single file pays ~0.4-0.6 s of fixed planning and
-    task floors that an embedded reader does not — the per-query floor,
-    not decode, dominates sub-million-row files. This path runs the
+    Why it exists (READER_FLOOR_r13 / r13 verdict item 6): a new Spark
+    scan of a single file pays fixed planning and task floors that an
+    embedded reader does not. Measured on 4 cores to a noop sink: a
+    4k-row .dta costs 0.54 s through a new DataSource scan and 0.06 s
+    here; at 100k rows 0.50 s against 0.39 s, where decode starts to
+    dominate and a cached 4-task scan takes 0.13 s. This path runs the
     EXACT executor reader code (``ReadstatDataSource`` ->
     ``_ReadstatReader.partitions()/read()``) in the driver process, so
     every option's semantics — value labels, catalogs, informative
