@@ -64,21 +64,15 @@ def plan_rle_partitions(
 
     files = expand_paths(path)
 
-    def _meta(p: str):
-        try:
-            return spss_parser.read_metadata(p)
-        except Exception:
-            return None  # not SPSS (mixed dir) — nothing to plan
-
     # the split target follows the whole scan's record bytes, as the
     # DataSource planner sizes it (O(header) per file on the driver)
     tb = target_bytes or split_target(
-        sum(m.row_count * m.record_len for m in map(_meta, files) if m is not None)
+        sum(m.row_count * m.record_len for m in map(_spss_meta, files) if m is not None)
     )
 
     def _plan_one(p: str) -> tuple[str, list] | None:
-        meta = _meta(p)
-        if meta is None or spss_parser.splittable(meta):
+        meta = _spss_meta(p)
+        if meta is None or meta.split_unit != "rle":
             return None
         plan = spss_parser.rle_partition_plan(p, meta, 0, meta.row_count, partitions, tb)
         return (p, [list(t) for t in plan]) if plan else None
@@ -117,6 +111,17 @@ def plan_rle_partitions(
     result = {p: plan for entry in out if entry for p, plan in [entry]}
     json.dumps(result)  # fail fast if anything non-serializable slips in
     return result
+
+
+def _spss_meta(path: str):
+    """The SPSS header of ``path``, or None for any other file (its
+    magic check fails on the first 176 bytes)."""
+    from .formats.spss import parser as spss_parser
+
+    try:
+        return spss_parser.read_metadata(path)
+    except Exception:
+        return None
 
 
 def readstat_scan(
@@ -170,15 +175,9 @@ def readstat_scan(
         from .datasource import expand_paths
 
         files = expand_paths(path)
-        if len(files) == 1 and files[0].lower().endswith((".sav", ".zsav")):
-            from .formats.spss import parser as spss_parser
-
-            try:
-                split_compressed = not spss_parser.splittable(
-                    spss_parser.read_metadata(files[0])
-                )
-            except Exception:
-                pass
+        if len(files) == 1:
+            meta = _spss_meta(files[0])
+            split_compressed = meta is not None and meta.split_unit == "rle"
     if split_compressed:
         import json
 
@@ -212,36 +211,13 @@ def readstat_scan(
     return df
 
 
-def _format_parser(ext: str):
-    """Per-format parser module for metadata-level dispatch (one place
-    instead of another copy of the if/ext ladder — r14 code review; the
-    read paths keep their own ladders where logic is interleaved)."""
-    if ext == "dta":
-        return stata_parser
-    if ext in ("sav", "zsav"):
-        from .formats.spss import parser as spss_parser
-
-        return spss_parser
-    if ext in ("sas7bdat", "sas7bcat"):
-        from .formats.sas import parser as sas_parser
-
-        return sas_parser
-    if ext == "xpt":
-        from .formats.sas import xport
-
-        return xport
-    if ext == "por":
-        from .formats.spss import portable
-
-        return portable
-    raise ValueError(f"cannot infer readstat format from extension {ext!r}")
-
-
 def readstat_row_count(path: str) -> int:
     """Row count from the file header (O(header) — the per-format
-    read_metadata calls are stat-fingerprint cached)."""
-    meta = _format_parser(path.rsplit(".", 1)[-1].lower()).read_metadata(path)
-    return meta.nobs if hasattr(meta, "nobs") else meta.row_count
+    read_metadata calls are stat-fingerprint cached); -1 for .por,
+    whose header carries no count."""
+    from . import formats
+
+    return formats.parser(formats.format_of(path)).read_metadata(path).row_count
 
 
 def readstat_read_local(
@@ -271,13 +247,13 @@ def readstat_read_local(
     4k-row .dta costs 0.54 s through a new DataSource scan and 0.06 s
     here; at 100k rows 0.50 s against 0.39 s, where decode starts to
     dominate and a cached 4-task scan takes 0.13 s. This path runs the
-    EXACT executor reader code (``ReadstatDataSource`` ->
-    ``_ReadstatReader.partitions()/read()``) in the driver process, so
-    every option's semantics — value labels, catalogs, informative
-    nulls, row_index, offset/limit — are byte-identical to
-    ``readstat_scan``'s by construction; only the execution locus
-    differs. The result is a LocalTableScan, so downstream transforms
-    still distribute normally.
+    EXACT executor reader code (``ReadstatDataSource.reader()``, the
+    default ``_ReadstatScan``'s ``partitions()``/``read()``) in the
+    driver process, so every option's semantics — value labels,
+    catalogs, informative nulls, row_index, offset/limit — are
+    byte-identical to ``readstat_scan``'s by construction; only the
+    execution locus differs. The result is a LocalTableScan, so
+    downstream transforms still distribute normally.
 
     Use for interactive/driver-heavy loops over small files; use
     ``readstat_scan`` (the default) for anything big or for many files
@@ -773,8 +749,9 @@ def readstat_batch_iter(path: str, columns: list[str] | None = None, batch_size:
                         schema=None):
     """Pull-based Arrow batch iterator, no Spark job and no full
     materialization (reference S6, src/readstat_stream.rs:53-140) —
-    the driver-local streaming entry point; the Spark path gets the
-    same batches through the DataSource partitions.
+    the driver-local streaming entry point. It runs the DataSource's
+    partition reader in this process, one partition per file, so it
+    reads every format the DataSource reads, with the same decode.
 
     ``compress=True`` applies the reference's per-batch type narrowing
     (src/readstat_stream.rs:129-137: compress_df_if_enabled maps over
@@ -795,48 +772,24 @@ def readstat_batch_iter(path: str, columns: list[str] | None = None, batch_size:
         else:
             yield from (cast_batch(b, schema) for b in inner)
         return
-    ext = path.rsplit(".", 1)[-1].lower()
-    if ext == "dta":
-        meta = stata_parser.read_metadata(path)
-        nobs = meta.nobs
-        start = min(offset, nobs)
-        count = nobs - start if limit is None else max(0, min(limit, nobs - start))
-        import pyarrow as pa
+    reader = _local_reader(path, columns, batch_size, offset, limit)
+    for part in reader.partitions():
+        yield from reader.read(part)
 
-        opts = stata_parser.ReadOptions()
-        need_strl = any(v.kind == "strl" for v in meta.variables if columns is None or v.name in set(columns))
-        strl_map = stata_parser.load_strls(path, meta) if need_strl else None
-        schema = stata_parser.arrow_schema(meta, opts, columns)
-        rec = meta.record_len
-        with open(path, "rb") as f:
-            f.seek(meta.data_offset + start * rec)
-            done = 0
-            while done < count:
-                take = min(batch_size, count - done)
-                raw = f.read(take * rec)
-                if not raw:
-                    break
-                cols = stata_parser.decode_records(raw, meta, columns, strl_map, opts, row_offset=start + done)
-                yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-                done += take
-        return
-    if ext in ("sav", "zsav"):
-        from .formats.spss import parser as spss_parser
 
-        meta = spss_parser.read_metadata(path)
-        start = min(offset, meta.row_count)
-        count = meta.row_count - start if limit is None else max(0, min(limit, meta.row_count - start))
-        yield from spss_parser.read_partition(path, start, count, columns, spss_parser.ReadOptions(), batch_size)
-        return
-    if ext == "sas7bdat":
-        from .formats.sas import parser as sas_parser
+def _local_reader(path: str, columns: list[str] | None = None, batch_size: int = 65536,
+                  offset: int = 0, limit: int | None = None):
+    """The DataSource's partition reader over ``path`` in this process,
+    planned as one partition per file (so no split-planning pass runs):
+    driver-local reads decode with the executors' code for every format."""
+    from .datasource import ReadstatDataSource
 
-        meta = sas_parser.read_metadata(path)
-        start = min(offset, meta.row_count)
-        count = meta.row_count - start if limit is None else max(0, min(limit, meta.row_count - start))
-        yield from sas_parser.read_partition(path, start, count, columns, batch_size)
-        return
-    raise ValueError(f"unsupported extension for {path}")
+    opts = {"path": path, "partitions": "1", "batch_size": str(batch_size), "offset": str(offset)}
+    if columns:
+        opts["columns"] = ",".join(columns)
+    if limit is not None:
+        opts["limit"] = str(limit)
+    return ReadstatDataSource(opts).reader(None)
 
 
 def infer_schema(
@@ -887,26 +840,6 @@ def infer_schema(
     )
 
 
-def _arrow_schema_for(path: str, columns: list[str] | None = None):
-    """Arrow schema of a file, by extension (no Spark session)."""
-    ext = path.rsplit(".", 1)[-1].lower()
-    if ext == "dta":
-        return stata_parser.arrow_schema(
-            stata_parser.read_metadata(path), stata_parser.ReadOptions(), columns
-        )
-    if ext in ("sav", "zsav"):
-        from .formats.spss import parser as spss_parser
-
-        return spss_parser.arrow_schema(
-            spss_parser.read_metadata(path), spss_parser.ReadOptions(), columns
-        )
-    if ext == "sas7bdat":
-        from .formats.sas import parser as sas_parser
-
-        return sas_parser.arrow_schema(sas_parser.read_metadata(path), columns)
-    raise ValueError(f"unsupported extension for {path}")
-
-
 def read_profiled(path: str, **iter_kwargs):
     """Eager driver-local read with a timing breakdown — the reference's
     ``finish_profiled()`` (README.md:96-101): returns
@@ -939,7 +872,9 @@ def read_profiled(path: str, **iter_kwargs):
     else:
         # 0-row read: preserve the file's declared schema
         tbl = pa.Table.from_batches(
-            [], schema=iter_kwargs.get("schema") or _arrow_schema_for(path, iter_kwargs.get("columns"))
+            [],
+            schema=iter_kwargs.get("schema")
+            or _local_reader(path, iter_kwargs.get("columns"))._arrow_schema_of(path),
         )
     profile = {
         "total_ms": round((time.perf_counter() - t_all) * 1000, 3),

@@ -1,9 +1,12 @@
 """PySpark custom DataSource for statistical-software file formats.
 
-``spark.read.format("readstat").load(path)`` with extension dispatch
-(.dta -> Stata, .sav/.zsav -> SPSS, .sas7bdat -> SAS), mirroring the
-reference's ``readstat_scan`` (src/lib.rs:383-413) as a Python
-DataSource (Spark 4 API).
+``spark.read.format("readstat").load(path)`` mirrors the reference's
+``readstat_scan`` (src/lib.rs:383-413) as a Python DataSource (Spark 4
+API). The format comes from ``option("format", ...)`` or the file
+extension through the format table in ``formats/__init__.py`` (.dta ->
+Stata, .sav/.zsav -> SPSS, .sas7bdat/.sas7bcat -> SAS, .xpt -> XPORT,
+.por -> SPSS Portable); every format module implements one reader
+interface, so this module holds no per-format branches on the read side.
 
 Driver/executor split (SURVEY §3): ``schema()`` opens header+dictionary
 only (cheap, driver-side); ``partitions()`` plans row ranges
@@ -64,8 +67,7 @@ from pyspark.sql.datasource import (
 )
 import pyarrow as pa_lib
 
-
-from .formats.stata import parser as stata_parser
+from . import formats
 
 
 def _arrow_type_to_spark(t):
@@ -233,7 +235,10 @@ def _true(opt: str | None, default: bool = True) -> bool:
     return str(opt).lower() in ("1", "true", "yes")
 
 
-_EXTS = ("dta", "sav", "zsav", "sas7bdat", "sas7bcat", "xpt", "por")
+def _file_schema(fmt: str, path: str, opts, columns: list[str] | None = None):
+    """Arrow schema of one file of format ``fmt`` under ``opts``."""
+    parser = formats.parser(fmt)
+    return parser.arrow_schema(parser.read_metadata(path), opts, columns)
 
 
 def expand_paths(path: str) -> list[str]:
@@ -248,7 +253,7 @@ def expand_paths(path: str) -> list[str]:
         out = [
             os.path.join(path, f)
             for f in os.listdir(path)
-            if f.rsplit(".", 1)[-1].lower() in _EXTS
+            if f.rsplit(".", 1)[-1].lower() in formats.EXTENSIONS
         ]
         if not out:
             raise ValueError(f"directory {path!r} contains no readstat files")
@@ -269,75 +274,42 @@ class ReadstatDataSource(DataSource):
         return "readstat"
 
     def _fmt(self) -> str:
-        path = self.options.get("path", "")
         fmt = self.options.get("format")
         if fmt:
-            return fmt.lower()
+            return formats.check_format(fmt)
+        path = self.options.get("path", "")
         if os.path.isdir(path) or any(c in path for c in "*?["):
             path = expand_paths(path)[0]
-        ext = os.path.splitext(path)[1].lower().lstrip(".")
-        if ext in ("dta",):
-            return "stata"
-        if ext in ("sav", "zsav"):
-            return "spss"
-        if ext in ("sas7bdat", "sas7bcat"):
-            # catalogs share the sas7bdat page format (reference
-            # detect_format, src/lib.rs:389)
-            return "sas"
-        if ext in ("xpt",):
-            return "xport"
-        if ext in ("por",):
-            return "por"
-        raise ValueError(f"cannot infer readstat format from path {path!r}")
+        return formats.format_of(path)
 
     def _read_opts(self):
-        inc = self.options.get("informative_null_columns")
-        kwargs = dict(
-            value_labels_as_strings=_true(self.options.get("value_labels_as_strings")),
-            missing_string_as_null=_true(self.options.get("missing_string_as_null")),
-            row_index=_true(self.options.get("row_index"), default=False),
+        """The format's ReadOptions, built from the fields it declares."""
+        from dataclasses import fields
+
+        opt = self.options.get
+        inc = opt("informative_null_columns")
+        values = dict(
+            value_labels_as_strings=_true(opt("value_labels_as_strings")),
+            missing_string_as_null=_true(opt("missing_string_as_null")),
+            user_missing_as_null=_true(opt("user_missing_as_null")),
+            row_index=_true(opt("row_index"), default=False),
             # "true"/"separate", "struct", "merged", or falsy — passed
             # through; the parser normalizes (reference InformativeNullMode)
-            informative_nulls=self.options.get("informative_nulls", False),
+            informative_nulls=opt("informative_nulls", False),
             informative_null_columns=[c.strip() for c in inc.split(",")] if inc else None,
-            informative_null_suffix=self.options.get("informative_null_suffix", "__missing"),
+            informative_null_suffix=opt("informative_null_suffix", "__missing"),
+            informative_null_use_value_labels=_true(opt("informative_null_use_value_labels")),
         )
-        if self._fmt() == "sas":
-            from .formats.sas import parser as sas_parser
+        cls = formats.parser(self._fmt()).ReadOptions
+        declared = {f.name for f in fields(cls)}
+        if "catalog_formats" in declared and opt("catalog"):
+            # P5 for SAS: value labels live in a sibling .sas7bcat.
+            # Loaded ONCE on the driver; the small dict pickles to
+            # executors with the reader (no catalog I/O per task).
+            from .formats.sas.catalog import read_catalog
 
-            kwargs.pop("value_labels_as_strings")
-            cat = self.options.get("catalog")
-            if cat:
-                # P5 for SAS: value labels live in a sibling .sas7bcat.
-                # Loaded ONCE on the driver; the small dict pickles to
-                # executors with the reader (no catalog I/O per task).
-                from .formats.sas.catalog import read_catalog
-
-                kwargs["catalog_formats"] = read_catalog(cat)
-            return sas_parser.ReadOptions(**kwargs)
-        if self._fmt() == "spss":
-            from .formats.spss import parser as spss_parser
-
-            return spss_parser.ReadOptions(
-                user_missing_as_null=_true(self.options.get("user_missing_as_null")),
-                informative_null_use_value_labels=_true(
-                    self.options.get("informative_null_use_value_labels")
-                ),
-                **kwargs,
-            )
-        if self._fmt() == "xport":
-            from .formats.sas import xport
-
-            kwargs.pop("value_labels_as_strings")  # no labels in XPORT v5
-            return xport.ReadOptions(**kwargs)
-        if self._fmt() == "por":
-            from .formats.spss import portable
-
-            return portable.ReadOptions(
-                user_missing_as_null=_true(self.options.get("user_missing_as_null")),
-                **kwargs,
-            )
-        return stata_parser.ReadOptions(**kwargs)
+            values["catalog_formats"] = read_catalog(opt("catalog"))
+        return cls(**{k: v for k, v in values.items() if k in declared})
 
     def _columns(self) -> list[str] | None:
         cols = self.options.get("columns")
@@ -346,81 +318,9 @@ class ReadstatDataSource(DataSource):
     def schema(self):
         if _true(self.options.get("union_by_name"), default=False):
             return self._union_schema()
-        fmt = self._fmt()
         path = expand_paths(self.options["path"])[0]
-        if fmt == "stata":
-            meta = stata_parser.read_metadata(path)
-            return _from_arrow_schema(
-                stata_parser.arrow_schema(meta, self._read_opts(), self._columns())
-            )
-        if fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            meta = spss_parser.read_metadata(path)
-            return _from_arrow_schema(
-                spss_parser.arrow_schema(meta, self._read_opts(), self._columns())
-            )
-        if fmt == "sas":
-            from .formats.sas import parser as sas_parser
-
-            meta = sas_parser.read_metadata(path)
-            opts = self._read_opts()
-            return _from_arrow_schema(
-                sas_parser.arrow_schema(
-                    meta,
-                    self._columns(),
-                    row_index=opts.row_index,
-                    informative_nulls=opts.informative_nulls,
-                    informative_null_columns=opts.informative_null_columns,
-                    informative_null_suffix=opts.informative_null_suffix,
-                    catalog_formats=opts.catalog_formats,
-                )
-            )
-        if fmt == "xport":
-            from .formats.sas import xport
-
-            meta = xport.read_metadata(path)
-            return _from_arrow_schema(
-                xport.arrow_schema(meta, self._read_opts(), self._columns())
-            )
-        if fmt == "por":
-            from .formats.spss import portable
-
-            meta = portable.read_metadata(path)
-            return _from_arrow_schema(
-                portable.arrow_schema(meta, self._read_opts(), self._columns())
-            )
-        raise ValueError(f"unsupported format {fmt}")
-
-    def _arrow_schema_of_path(self, path: str, columns=None):
-        """Per-file ARROW schema with the full option surface (the same
-        dispatch the reader's _arrow_schema_of uses)."""
-        fmt = self._fmt()
-        opts = self._read_opts()
-        if fmt == "stata":
-            return stata_parser.arrow_schema(stata_parser.read_metadata(path), opts, columns)
-        if fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            return spss_parser.arrow_schema(spss_parser.read_metadata(path), opts, columns)
-        if fmt == "xport":
-            from .formats.sas import xport
-
-            return xport.arrow_schema(xport.read_metadata(path), opts, columns)
-        if fmt == "por":
-            from .formats.spss import portable
-
-            return portable.arrow_schema(portable.read_metadata(path), opts, columns)
-        from .formats.sas import parser as sas_parser
-
-        return sas_parser.arrow_schema(
-            sas_parser.read_metadata(path),
-            columns,
-            row_index=opts.row_index,
-            informative_nulls=opts.informative_nulls,
-            informative_null_columns=opts.informative_null_columns,
-            informative_null_suffix=opts.informative_null_suffix,
-            catalog_formats=opts.catalog_formats,
+        return _from_arrow_schema(
+            _file_schema(self._fmt(), path, self._read_opts(), self._columns())
         )
 
     def _union_schema(self):
@@ -433,8 +333,9 @@ class ReadstatDataSource(DataSource):
         cost the mismatch check in partitions() already pays."""
         fields: dict[str, object] = {}
         origin: dict[str, str] = {}
+        fmt, opts = self._fmt(), self._read_opts()
         for p in expand_paths(self.options["path"]):
-            s = self._arrow_schema_of_path(p)  # full per-file field set
+            s = _file_schema(fmt, p, opts)  # full per-file field set
             for f in s:
                 prev = fields.get(f.name)
                 if prev is None:
@@ -677,30 +578,8 @@ class _ReadstatScan(DataSourceReader):
                     "schemas as their by-name union (missing -> null)."
                 )
 
-    def _layout(self, path: str):
-        """(metadata, rows, {column: record bytes}, row-compressed?) of
-        one file (.por has no such layout and is planned apart)."""
-        if self.fmt == "stata":
-            meta = stata_parser.read_metadata(path)
-            return meta, meta.nobs, {v.name: v.width for v in meta.variables}, False
-        if self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            meta = spss_parser.read_metadata(path)
-            widths = {v.name: 8 * v.width for v in meta.variables}
-            return meta, meta.row_count, widths, not spss_parser.splittable(meta)
-        if self.fmt == "sas":
-            from .formats.sas import parser as sas_parser
-
-            meta = sas_parser.read_metadata(path)
-            widths = {c.name: c.length for c in meta.columns}
-            return meta, meta.row_count, widths, bool(meta.compression)
-        if self.fmt == "xport":
-            from .formats.sas import xport
-
-            meta = xport.read_metadata(path)
-            return meta, meta.row_count, {v.name: v.length for v in meta.variables}, False
-        raise ValueError(self.fmt)
+    def _meta(self, path: str):
+        return formats.parser(self.fmt).read_metadata(path)
 
     def _decode_bytes(self, path: str) -> int:
         """Record bytes one read of ``path`` decodes, the split planner's
@@ -708,43 +587,21 @@ class _ReadstatScan(DataSourceReader):
         records, whole records for row-compressed ones (every column is
         decompressed), and the file size for .por, whose header carries
         no case count."""
-        if self.fmt == "por":
+        meta = self._meta(path)
+        if meta.split_unit == "stream":
             return os.path.getsize(path)
-        _, rows, widths, compressed = self._layout(path)
-        _, count = self._slice(rows)
-        if self.columns and not compressed:
+        _, count = self._slice(meta.row_count)
+        widths = meta.column_widths
+        if self.columns and meta.split_unit == "rows":
             return count * sum(widths.get(c, 0) for c in self.columns)
         return count * sum(widths.values())
 
     def _arrow_schema_of(self, path: str):
-        if self.fmt == "stata":
-            return stata_parser.arrow_schema(stata_parser.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            return spss_parser.arrow_schema(spss_parser.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "xport":
-            from .formats.sas import xport
-
-            return xport.arrow_schema(xport.read_metadata(path), self.opts, self.columns)
-        if self.fmt == "por":
-            from .formats.spss import portable
-
-            return portable.arrow_schema(portable.read_metadata(path), self.opts, self.columns)
-        from .formats.sas import parser as sas_parser
-
-        return sas_parser.arrow_schema(
-            sas_parser.read_metadata(path),
-            self.columns,
-            row_index=self.opts.row_index,
-            informative_nulls=self.opts.informative_nulls,
-            informative_null_columns=self.opts.informative_null_columns,
-            informative_null_suffix=self.opts.informative_null_suffix,
-            catalog_formats=self.opts.catalog_formats,
-        )
+        return _file_schema(self.fmt, path, self.opts, self.columns)
 
     def _file_partitions(self, path: str, target: int, allow_expensive_split: bool = True):
-        if self.fmt == "por":
+        meta = self._meta(path)
+        if meta.split_unit == "stream":
             # .por is a single self-delimiting character stream with no
             # case count in the header and no random access — one
             # partition per file, the same stance the reference takes
@@ -752,9 +609,8 @@ class _ReadstatScan(DataSourceReader):
             # Multi-file scans still parallelize on the file axis, and
             # .por is a legacy interchange format (small by construction).
             return [_RowRange(path, self.offset, self.limit)]
-        meta, rows, _, compressed = self._layout(path)
-        start, count = self._slice(rows)
-        if compressed and self.fmt == "spss":
+        start, count = self._slice(meta.row_count)
+        if meta.split_unit == "rle":
             if path in self.rle_plan and self.offset == 0 and self.limit < 0:
                 # executor-computed plan (api.plan_rle_partitions):
                 # no driver-side stream scan at all. Precomputed plans
@@ -787,7 +643,7 @@ class _ReadstatScan(DataSourceReader):
                     for s, c, anchor, skip, ub in plan
                 ]
             return [_RowRange(path, start, count)]
-        if compressed:  # SAS RLE/RDC
+        if meta.split_unit == "pages":  # SAS RLE/RDC
             # RLE/RDC rows are independent subheaders -> page-parallel
             # (improvement over the reference's sequential-only path),
             # unless a row slice / row index needs global ordering.
@@ -873,63 +729,10 @@ class _ReadstatScan(DataSourceReader):
                 partition.unit_base,
             )
             return
-        if self.fmt == "stata":
-            batches = self._read_stata(partition)
-        elif self.fmt == "por":
-            from .formats.spss import portable
-
-            t = portable.read_table(
-                partition.path, self.opts, self.columns,
-                offset=partition.start, limit=partition.count,
-            )
-            batches = t.to_batches(self.batch_size)
-        elif self.fmt == "xport":
-            from .formats.sas import xport
-
-            batches = xport.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.batch_size, self.opts,
-            )
-        elif self.fmt == "spss":
-            from .formats.spss import parser as spss_parser
-
-            batches = spss_parser.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.opts, self.batch_size,
-            )
-        else:
-            from .formats.sas import parser as sas_parser
-
-            batches = sas_parser.read_partition(
-                partition.path, partition.start, partition.count, self.columns,
-                self.batch_size, self.opts,
-            )
-        yield from batches
-
-    def _read_stata(self, p: _RowRange):
-        import pyarrow as pa
-
-        meta = stata_parser.read_metadata(p.path)
-        sel = self.columns
-        need_strl = any(
-            v.kind == "strl" for v in meta.variables if sel is None or v.name in set(sel)
+        yield from formats.parser(self.fmt).read_partition(
+            partition.path, partition.start, partition.count, self.columns, self.opts,
+            self.batch_size,
         )
-        strl_map = stata_parser.load_strls(p.path, meta) if need_strl else None
-        schema = stata_parser.arrow_schema(meta, self.opts, sel)
-        rec = meta.record_len
-        with open(p.path, "rb") as f:
-            f.seek(meta.data_offset + p.start * rec)
-            done = 0
-            while done < p.count:
-                take = min(self.batch_size, p.count - done)
-                raw = f.read(take * rec)
-                if not raw:
-                    break
-                cols = stata_parser.decode_records(
-                    raw, meta, sel, strl_map, self.opts, row_offset=p.start + done
-                )
-                yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-                done += take
 
 
 class _ReadstatReader(_ReadstatScan):

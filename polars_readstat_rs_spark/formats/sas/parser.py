@@ -29,8 +29,9 @@ Behavioral parity targets (cited into /root/reference as a format spec):
 
 from __future__ import annotations
 
+import os
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
@@ -173,6 +174,14 @@ class SasMetadata:
     encoding: str = "cp1252"
     dataset_name: str = ""
     sas_release: str = ""
+
+    @property
+    def column_widths(self) -> dict[str, int]:
+        return {c.name: c.length for c in self.columns}
+
+    @property
+    def split_unit(self) -> str:
+        return "pages" if self.compression else "rows"
 
     @property
     def page_bit_offset(self) -> int:
@@ -1017,22 +1026,11 @@ def _select(cols, columns):
 
 
 def arrow_schema(
-    meta: SasMetadata,
-    columns: list[str] | None = None,
-    row_index: bool = False,
-    informative_nulls: bool | str = False,
-    informative_null_columns: list[str] | None = None,
-    informative_null_suffix: str = "__missing",
-    catalog_formats: dict | None = None,
+    meta: SasMetadata, opts: ReadOptions | None = None, columns: list[str] | None = None
 ) -> pa.Schema:
     from ..nulls import informative_fields
 
-    opts = ReadOptions(
-        informative_nulls=informative_nulls,
-        informative_null_columns=informative_null_columns,
-        informative_null_suffix=informative_null_suffix,
-        catalog_formats=catalog_formats,
-    )
+    opts = opts or ReadOptions()
     mode = opts.null_mode()
     sel = _select(meta.columns, columns)
     fields = []
@@ -1046,7 +1044,7 @@ def arrow_schema(
             fields.extend(informative_fields(c.name, f.type, mode, opts.informative_null_suffix))
         else:
             fields.append(f)
-    if row_index:
+    if opts.row_index:
         fields.append(pa.field("_row_idx", pa.int64()))
     return pa.schema(fields)
 
@@ -1062,9 +1060,7 @@ def read_table(
 ) -> pa.Table:
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    schema = arrow_schema(meta, columns, opts.row_index, opts.informative_nulls,
-                          opts.informative_null_columns,
-                          catalog_formats=opts.catalog_formats)
+    schema = arrow_schema(meta, opts, columns)
     want_end = meta.row_count if limit is None else min(meta.row_count, offset + limit)
     tables = []
     seen = 0
@@ -1124,11 +1120,7 @@ def read_page_range(
     # row_index stays False: the planner never page-parallelizes a
     # compressed read when row_index is set (datasource.py "plain" gate),
     # and decode_rows here has no global row offset to number from.
-    schema = arrow_schema(meta, columns,
-                          informative_nulls=opts.informative_nulls,
-                          informative_null_columns=opts.informative_null_columns,
-                          informative_null_suffix=opts.informative_null_suffix,
-                          catalog_formats=opts.catalog_formats)
+    schema = arrow_schema(meta, replace(opts, row_index=False), columns)
     pending: list[bytes] = []
     pending_rows = 0
     for block, nrows in iter_row_blocks(path, meta, (page_lo, page_hi)):
@@ -1148,8 +1140,8 @@ def read_partition(
     start: int,
     count: int,
     columns: list[str] | None,
-    batch_size: int,
     opts: ReadOptions | None = None,
+    batch_size: int = 65536,
 ):
     """DataSource partition read (row range) yielding record batches.
 
@@ -1159,11 +1151,7 @@ def read_partition(
     """
     meta = read_metadata(path)
     opts = opts or ReadOptions()
-    schema = arrow_schema(meta, columns, row_index=opts.row_index,
-                          informative_nulls=opts.informative_nulls,
-                          informative_null_columns=opts.informative_null_columns,
-                          informative_null_suffix=opts.informative_null_suffix,
-                          catalog_formats=opts.catalog_formats)
+    schema = arrow_schema(meta, opts, columns)
     if meta.compression or not count:
         t = read_table(path, columns, offset=start, limit=count, opts=opts)
         yield from t.to_batches(max_chunksize=batch_size)
@@ -1172,6 +1160,13 @@ def read_partition(
     # footprint the pre-cache list had for the duration of the task)
     index = build_page_index(path).tolist()
     end = start + count
+    # page_count follows the file size, so a cut file indexes fewer rows
+    held = index[-1][1] + index[-1][2] if index else 0
+    if held < end:
+        raise EOFError(
+            f"truncated file {path!r}: its pages hold {held} of the {meta.row_count} rows "
+            f"the header declares; the file ends at byte offset {os.path.getsize(path)}"
+        )
     # accumulate page slices into ~batch_size-row decode calls: one
     # numpy decode + one Arrow table per big batch instead of one per
     # PAGE — small-page files (hundreds of rows/page) otherwise pay

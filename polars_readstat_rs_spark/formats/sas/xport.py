@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from .. import fixed_records
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -81,6 +82,12 @@ class XportMetadata:
     created: str = ""
     file_size: int = 0
     version: int = 5  # 5 (TS-140) or 8 (TS140-2 V8/V9 transport)
+
+    split_unit = "rows"
+
+    @property
+    def column_widths(self) -> dict[str, int]:
+        return {v.name: v.length for v in self.variables}
 
 
 @dataclass
@@ -348,8 +355,8 @@ def read_partition(
     start: int,
     count: int,
     columns: list[str] | None = None,
-    batch_size: int = 65536,
     opts: ReadOptions | None = None,
+    batch_size: int = 65536,
 ):
     """Yield Arrow batches for rows [start, start+count) — the O(1)-seek
     fixed-width byte-range unit the partition planner hands executors."""
@@ -365,49 +372,44 @@ def read_partition(
         else meta.variables
     )
     rec = meta.row_length
-    with open(path, "rb") as f:
-        f.seek(meta.data_offset + start * rec)
-        done = 0
-        while done < count:
-            take = min(batch_size, count - done)
-            buf = f.read(take * rec)
-            take = len(buf) // rec
-            if take == 0:
-                break
-            rows = np.frombuffer(buf, dtype=np.uint8, count=take * rec).reshape(take, rec)
-            arrays, names = [], []
-            if opts.row_index:
-                names.append("_row_idx")
-                arrays.append(pa.array(np.arange(start + done, start + done + take), type=pa.int64()))
-            for v in order:
-                if sel is not None and v.name not in sel:
-                    continue
-                colbytes = rows[:, v.position : v.position + v.length]
-                if v.is_char:
-                    flat = colbytes.tobytes()
-                    vals = [
-                        flat[i * v.length : (i + 1) * v.length].rstrip(b" ").decode("ascii", "replace")
-                        for i in range(take)
+
+    def decode(buf: bytes, first: int):
+        take = len(buf) // rec
+        rows = np.frombuffer(buf, dtype=np.uint8, count=take * rec).reshape(take, rec)
+        arrays, names = [], []
+        if opts.row_index:
+            names.append("_row_idx")
+            arrays.append(pa.array(np.arange(first, first + take), type=pa.int64()))
+        for v in order:
+            if sel is not None and v.name not in sel:
+                continue
+            colbytes = rows[:, v.position : v.position + v.length]
+            if v.is_char:
+                flat = colbytes.tobytes()
+                vals = [
+                    flat[i * v.length : (i + 1) * v.length].rstrip(b" ").decode("ascii", "replace")
+                    for i in range(take)
+                ]
+                if opts.missing_string_as_null:
+                    vals = [s if s else None for s in vals]
+                arrays.append(pa.array(vals, type=pa.string()))
+                names.append(v.name)
+            else:
+                vals, nullmask, tags = _ibm_to_ieee(colbytes, v.length)
+                arrays.append(pa.array(vals, type=pa.float64(), mask=nullmask))
+                names.append(v.name)
+                if mode and (not inf_sel or v.name in inf_sel):
+                    tag_strs = [
+                        (chr(t) if t else ".") if m else None
+                        for t, m in zip(tags.tolist(), nullmask.tolist())
                     ]
-                    if opts.missing_string_as_null:
-                        vals = [s if s else None for s in vals]
-                    arrays.append(pa.array(vals, type=pa.string()))
-                    names.append(v.name)
-                else:
-                    vals, nullmask, tags = _ibm_to_ieee(colbytes, v.length)
-                    arrays.append(pa.array(vals, type=pa.float64(), mask=nullmask))
-                    names.append(v.name)
-                    if mode and (not inf_sel or v.name in inf_sel):
-                        tag_strs = [
-                            (chr(t) if t else ".") if m else None
-                            for t, m in zip(tags.tolist(), nullmask.tolist())
-                        ]
-                        arrays.append(pa.array(tag_strs, type=pa.string()))
-                        names.append(v.name + opts.informative_null_suffix)
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(
-                [schema.field(n) for n in names]
-            ))
-            done += take
+                    arrays.append(pa.array(tag_strs, type=pa.string()))
+                    names.append(v.name + opts.informative_null_suffix)
+        return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(
+            [schema.field(n) for n in names]
+        ))
+
+    yield from fixed_records(path, meta.data_offset, rec, start, count, batch_size, decode)
 
 
 def read_table(
@@ -416,7 +418,7 @@ def read_table(
     opts: ReadOptions | None = None,
 ) -> pa.Table:
     meta = read_metadata(path)
-    batches = list(read_partition(path, 0, meta.row_count, columns, 65536, opts))
+    batches = list(read_partition(path, 0, meta.row_count, columns, opts))
     schema = arrow_schema(meta, opts or ReadOptions(), columns)
     return pa.Table.from_batches(batches, schema=schema)
 

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from .. import fixed_records
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -107,6 +108,14 @@ class SpssMetadata:
     def record_len(self) -> int:
         return self.n_segments * 8
 
+    @property
+    def column_widths(self) -> dict[str, int]:
+        return {v.name: 8 * v.width for v in self.variables}
+
+    @property
+    def split_unit(self) -> str:
+        return "rows" if self.compression == 0 else "rle"
+
 
 @dataclass
 class ReadOptions:
@@ -155,10 +164,6 @@ def _format_class(code: int) -> str | None:
     if code in (22, 41):
         return "datetime"
     return None
-
-
-def splittable(meta: SpssMetadata) -> bool:
-    return meta.compression == 0
 
 
 # ---------------------------------------------------------------- metadata
@@ -527,8 +532,8 @@ def _decompress_rle(raw: bytes, endian: str, bias: float, max_units: int | None 
     if len(lit_offsets):
         idx = lit_offsets[:, None] + np.arange(8, dtype=np.int64)
         src = np.frombuffer(raw, dtype=np.uint8)
-        if int(lit_offsets[-1]) + 8 > n:  # truncated trailing literal
-            src = np.concatenate([src, np.zeros(8, np.uint8)])
+        if int(lit_offsets[-1]) + 8 > n:  # truncated trailing literals: zero-fill
+            src = np.concatenate([src, np.zeros(int(lit_offsets[-1]) + 8 - n, np.uint8)])
         out[~non_lit] = src[idx]
     return out.tobytes()
 
@@ -541,8 +546,15 @@ def _zsav_entries(path: str, meta: SpssMetadata) -> list[tuple[int, int, int, in
         f.seek(meta.data_offset)
         zheader_ofs, ztrailer_ofs, _ztrailer_len = struct.unpack(e + "3Q", f.read(24))
         f.seek(ztrailer_ofs)
-        _bias, _zero, _block_size, n_blocks = struct.unpack(e + "qqii", f.read(24))
-        return [struct.unpack(e + "qqii", f.read(24)) for _ in range(n_blocks)]
+        head = f.read(24)
+        n_blocks = struct.unpack(e + "qqii", head)[3] if len(head) == 24 else 0
+        index = f.read(24 * n_blocks)
+        if len(head) < 24 or len(index) < 24 * n_blocks:
+            raise EOFError(
+                f"truncated file {path!r}: the zsav block index at byte offset "
+                f"{ztrailer_ofs} runs past the end of the file"
+            )
+        return [struct.unpack_from(e + "qqii", index, 24 * i) for i in range(n_blocks)]
 
 
 def _zsav_blocks(path: str, meta: SpssMetadata):
@@ -746,16 +758,11 @@ def read_rle_partition(
             break  # stream exhausted — trailing short read
         target = grown
     lo = start * rec - unit_base * 8
-    raw = units[lo : lo + count * rec]
-    done = 0
-    while done * rec < len(raw):
-        take = min(batch_size, count - done)
-        chunk = raw[done * rec : (done + take) * rec]
-        if not chunk:
-            break
-        cols = decode_records(chunk, meta, columns, opts, row_offset=start + done)
+    raw = _declared_rows(path, units[lo : lo + count * rec], rec, count)
+    for done in range(0, count, batch_size):
+        cols = decode_records(raw[done * rec : (done + batch_size) * rec], meta, columns, opts,
+                              row_offset=start + done)
         yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-        done += take
 
 
 def _data_units(path: str, meta: SpssMetadata, max_units: int | None = None) -> bytes:
@@ -1030,7 +1037,7 @@ def arrow_schema(
     return pa.schema(fields)
 
 
-# --------------------------------------------------------------- eager API
+# --------------------------------------------------------------- readers
 
 def read_table(
     path: str,
@@ -1041,19 +1048,11 @@ def read_table(
 ) -> pa.Table:
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    rec = meta.record_len
     start = min(offset, meta.row_count)
     count = meta.row_count - start if limit is None else max(0, min(limit, meta.row_count - start))
-    if meta.compression == 0:
-        with open(path, "rb") as f:
-            f.seek(meta.data_offset + start * rec)
-            raw = f.read(count * rec)
-    else:
-        units = _data_units(path, meta, max_units=(start + count) * meta.n_segments)
-        raw = units[start * rec : (start + count) * rec]
-    cols = decode_records(raw, meta, columns, opts, row_offset=start)
-    schema = arrow_schema(meta, opts, columns)
-    return pa.table({n: cols[n] for n in schema.names}, schema=schema)
+    return pa.Table.from_batches(
+        read_partition(path, start, count, columns, opts), schema=arrow_schema(meta, opts, columns)
+    )
 
 
 def read_partition(
@@ -1061,37 +1060,38 @@ def read_partition(
     start: int,
     count: int,
     columns: list[str] | None,
-    opts: ReadOptions,
-    batch_size: int,
+    opts: ReadOptions | None = None,
+    batch_size: int = 65536,
 ):
     """DataSource partition read: yields Arrow record batches."""
+    opts = opts or ReadOptions()
     meta = read_metadata(path)
     schema = arrow_schema(meta, opts, columns)
     rec = meta.record_len
+
+    def decode(raw: bytes, first: int):
+        cols = decode_records(raw, meta, columns, opts, row_offset=first)
+        return pa.record_batch([cols[n] for n in schema.names], schema=schema)
+
     if meta.compression == 0:
-        with open(path, "rb") as f:
-            f.seek(meta.data_offset + start * rec)
-            done = 0
-            while done < count:
-                take = min(batch_size, count - done)
-                raw = f.read(take * rec)
-                if not raw:
-                    break
-                cols = decode_records(raw, meta, columns, opts, row_offset=start + done)
-                yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-                done += take
-    else:
-        units = _data_units(path, meta, max_units=(start + count) * meta.n_segments)
-        raw = units[start * rec : (start + count) * rec]
-        done = 0
-        while done * rec < len(raw):
-            take = min(batch_size, count - done)
-            chunk = raw[done * rec : (done + take) * rec]
-            if not chunk:
-                break
-            cols = decode_records(chunk, meta, columns, opts, row_offset=start + done)
-            yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
-            done += take
+        yield from fixed_records(path, meta.data_offset, rec, start, count, batch_size, decode)
+        return
+    units = _data_units(path, meta, max_units=(start + count) * meta.n_segments)
+    raw = _declared_rows(path, units[start * rec : (start + count) * rec], rec, count)
+    for done in range(0, count, batch_size):
+        yield decode(raw[done * rec : (done + batch_size) * rec], start + done)
+
+
+def _declared_rows(path: str, raw: bytes, rec: int, count: int) -> bytes:
+    """``raw`` if it holds all ``count`` records the header declared;
+    otherwise the compressed stream ended early: EOFError naming the
+    file and where it ends."""
+    if len(raw) < count * rec:
+        raise EOFError(
+            f"truncated file {path!r}: compressed data ends at byte offset "
+            f"{os.path.getsize(path)}, {count - len(raw) // rec} declared rows missing"
+        )
+    return raw
 
 
 def _labels_json(meta: SpssMetadata, name: str) -> str | None:

@@ -112,6 +112,8 @@ class PorMetadata:
     data_pos: int = 0  # stream index where case data begins
     row_count: int = -1  # unknown until the data section is walked
 
+    split_unit = "stream"
+
 
 @dataclass
 class ReadOptions:
@@ -502,6 +504,19 @@ def read_table(
         idx = pa.array(np.arange(offset, offset + len(t), dtype=np.int64))
         t = t.add_column(0, "_row_idx", idx)
     return t
+
+
+def read_partition(
+    path: str,
+    start: int,
+    count: int,
+    columns: list[str] | None,
+    opts: ReadOptions | None = None,
+    batch_size: int = 65536,
+):
+    """Arrow record batches for rows [start, start+count), or every row
+    from ``start`` when ``count`` is -1 (the header has no case count)."""
+    yield from read_table(path, opts, columns, offset=start, limit=count).to_batches(batch_size)
 
 
 def _format_num(x: float) -> str:

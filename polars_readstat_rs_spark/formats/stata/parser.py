@@ -31,6 +31,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from .. import fixed_records
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -72,6 +73,16 @@ class StataMetadata:
     encoding: str = "utf-8"
     data_label: str = ""
     timestamp: str = ""
+
+    split_unit = "rows"
+
+    @property
+    def row_count(self) -> int:
+        return self.nobs
+
+    @property
+    def column_widths(self) -> dict[str, int]:
+        return {v.name: v.width for v in self.variables}
 
     @property
     def record_len(self) -> int:
@@ -918,7 +929,34 @@ def arrow_schema(meta: StataMetadata, opts: ReadOptions, columns: list[str] | No
     return pa.schema(fields)
 
 
-# --------------------------------------------------------------- eager API
+# --------------------------------------------------------------- readers
+
+def read_partition(
+    path: str,
+    start: int,
+    count: int,
+    columns: list[str] | None,
+    opts: ReadOptions | None = None,
+    batch_size: int = 65536,
+):
+    """Arrow record batches for rows [start, start+count): the O(1)-seek
+    fixed-width byte range the partition planner hands executors."""
+    opts = opts or ReadOptions()
+    meta = read_metadata(path)
+    need_strl = any(
+        v.kind == "strl" for v in meta.variables if columns is None or v.name in set(columns)
+    )
+    strl_map = load_strls(path, meta) if need_strl else None
+    schema = arrow_schema(meta, opts, columns)
+
+    def decode(raw: bytes, first: int):
+        cols = decode_records(raw, meta, columns, strl_map, opts, row_offset=first)
+        return pa.record_batch([cols[n] for n in schema.names], schema=schema)
+
+    yield from fixed_records(
+        path, meta.data_offset, meta.record_len, start, count, batch_size, decode
+    )
+
 
 def read_table(
     path: str,
@@ -927,20 +965,11 @@ def read_table(
     limit: int | None = None,
     opts: ReadOptions | None = None,
 ) -> pa.Table:
-    """Eager read -> Arrow table (the S5 builder analogue; also the unit
-    the Spark DataSource partitions delegate to)."""
+    """Eager read -> Arrow table (the S5 builder analogue)."""
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    nobs = meta.nobs
-    start = min(offset, nobs)
-    count = nobs - start if limit is None else max(0, min(limit, nobs - start))
-    need_strl = any(
-        v.kind == "strl" for v in meta.variables if columns is None or v.name in set(columns)
+    start = min(offset, meta.nobs)
+    count = meta.nobs - start if limit is None else max(0, min(limit, meta.nobs - start))
+    return pa.Table.from_batches(
+        read_partition(path, start, count, columns, opts), schema=arrow_schema(meta, opts, columns)
     )
-    strl_map = load_strls(path, meta) if need_strl else None
-    with open(path, "rb") as f:
-        f.seek(meta.data_offset + start * meta.record_len)
-        raw = f.read(count * meta.record_len)
-    cols = decode_records(raw, meta, columns, strl_map, opts, row_offset=start)
-    schema = arrow_schema(meta, opts, columns)
-    return pa.table({name: cols[name] for name in schema.names}, schema=schema)

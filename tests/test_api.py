@@ -7,6 +7,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import types as T
 
 from polars_readstat_rs_spark import api
@@ -573,6 +574,108 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
         spss_parser.read_metadata(ok)
     with pytest.raises(Exception):  # SAS magic check
         sas_parser.read_metadata(ok)
+
+    # data-region cuts: the header still declares rows the file no longer
+    # holds, so every split of the read fails naming the file and offset
+    from functools import partial
+
+    from polars_readstat_rs_spark.datasource import ReadstatDataSource
+    from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+    from polars_readstat_rs_spark.formats.stata.writer import write_dta
+
+    n = 4000
+    t = pa.table({"a": np.arange(n, dtype=np.float64), "s": [f"v{i}" for i in range(n)]})
+    writers = {"d.dta": write_dta, "u.sav": write_sav,
+               "c.sav": partial(write_sav, compress=True), "b.sas7bdat": write_sas7bdat}
+    for name, write in writers.items():
+        full = str(tmp_path / name)
+        write(t, full)
+        raw = open(full, "rb").read()
+        cut = str(tmp_path / f"cut_{name}")
+        open(cut, "wb").write(raw[: len(raw) * 95 // 100])
+        for parts in ("1", "4"):
+            ds = ReadstatDataSource({"path": cut, "partitions": parts})
+            reader = ds.reader(ds.schema())
+            with pytest.raises(EOFError, match="truncated") as err:
+                for part in reader.partitions():
+                    list(reader.read(part))
+            assert cut in str(err.value) and "byte offset" in str(err.value), (name, parts)
+
+
+def _write_format(tmp_path, ext: str, n: int) -> str:
+    """One ``n``-row file per readstat format, written by the repo's own
+    writers: doubles with nulls and strings with empties."""
+    from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
+    from polars_readstat_rs_spark.formats.spss.portable import write_por
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+    from polars_readstat_rs_spark.formats.stata.writer import write_dta
+
+    x = np.random.default_rng(3).normal(size=n)
+    t = pa.table({
+        "id": np.arange(n, dtype=np.float64),
+        "x": pa.array(x, mask=np.arange(n) % 7 == 0),
+        "s": [f"s{i % 13}" if i % 5 else "" for i in range(n)],
+    })
+    p = str(tmp_path / f"t.{ext}")
+    write = {"dta": write_dta, "sav": write_sav, "sas7bdat": write_sas7bdat, "xpt": write_xpt,
+             "por": write_por, "zsav": lambda t, p: write_sav(t, p, compress="zsav")}[ext]
+    write(t, p)
+    return p
+
+
+@pytest.mark.parametrize("ext", ["dta", "sav", "zsav", "sas7bdat", "xpt", "por"])
+def test_driver_local_reads_match_the_datasource(tmp_path, ext):
+    """readstat_batch_iter and read_profiled run the DataSource's partition
+    reader in-process, so every format reads back the DataSource's
+    schema and values; readstat_row_count is the header's count (.por
+    headers carry none: -1)."""
+    from polars_readstat_rs_spark.datasource import ReadstatDataSource
+
+    n = 2500
+    p = _write_format(tmp_path, ext, n)
+    ds = ReadstatDataSource({"path": p})
+    reader = ds.reader(ds.schema())
+    want = pa.Table.from_batches([b for part in reader.partitions() for b in reader.read(part)])
+    assert want.num_rows == n
+
+    batches = list(api.readstat_batch_iter(p, batch_size=1000))
+    assert len(batches) >= 3 and max(b.num_rows for b in batches) <= 1000
+    got = pa.Table.from_batches(batches)
+    assert got.schema == want.schema and got.equals(want)
+    tbl, prof = api.read_profiled(p)
+    assert tbl.schema == want.schema and tbl.equals(want) and prof["rows"] == n
+    cols = want.column_names[1::-1]  # two columns, reversed
+    sliced = pa.Table.from_batches(api.readstat_batch_iter(p, columns=cols, offset=10, limit=100))
+    assert sliced.equals(want.slice(10, 100).select(cols))
+    assert api.readstat_row_count(p) == (-1 if ext == "por" else n)
+
+
+def test_unknown_format_option_names_the_known_formats(tmp_path):
+    from polars_readstat_rs_spark.datasource import ReadstatDataSource
+
+    p = _write_format(tmp_path, "dta", 10)
+    with pytest.raises(ValueError, match="known formats: stata, spss, sas, xport, por"):
+        ReadstatDataSource({"path": p, "format": "parquet"}).schema()
+
+
+def test_compressed_sas_row_range_honours_the_null_suffix(tmp_path):
+    """An RLE .sas7bdat read as one row range (row_index forbids page
+    splits) takes its schema from the scan's ReadOptions, so a custom
+    informative-null suffix names the indicator columns it decodes."""
+    from polars_readstat_rs_spark.datasource import ReadstatDataSource
+    from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+
+    p = str(tmp_path / "r.sas7bdat")
+    x = np.arange(3000, dtype=np.float64)
+    write_sas7bdat(pa.table({"x": pa.array(x, mask=x % 4 == 0)}), p, compress="RLE")
+    ds = ReadstatDataSource({"path": p, "informative_nulls": "true",
+                             "informative_null_suffix": "_m", "row_index": "true"})
+    reader = ds.reader(ds.schema())
+    got = pa.Table.from_batches([b for part in reader.partitions() for b in reader.read(part)])
+    assert got.column_names == ["x", "x_m", "_row_idx"] and got.num_rows == 3000
+    assert got.column("x").null_count == 750
 
 
 def test_read_profiled(tmp_path):

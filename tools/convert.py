@@ -31,7 +31,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SUPPORTED = ("sas7bdat", "dta", "sav", "zsav", "xpt", "por")
+from polars_readstat_rs_spark.formats import EXTENSIONS  # noqa: E402
+
+# every readstat data extension; .sas7bcat catalogs hold value labels,
+# not rows (pass one with --catalog instead)
+SUPPORTED = tuple(ext for ext in EXTENSIONS if ext != "sas7bcat")
 
 
 def convert_tree(
