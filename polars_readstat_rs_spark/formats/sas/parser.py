@@ -311,12 +311,18 @@ def _read_metadata_uncached(path: str) -> SasMetadata:
         # the page-count field's width varies (u64 on BE-64 files); derive
         # from the file size instead — the reference equivalently ignores
         # the field and reads pages to EOF (src/sas/metadata.rs:38-41)
-        import os
-
         fsize = os.path.getsize(path)
         meta.page_count = (
             max(0, (fsize - meta.header_length) // meta.page_length) if meta.page_length else 0
         )
+        # a cut inside a page would otherwise read short without an
+        # error: compressed page-range splits cannot see the row count
+        if meta.page_length and fsize > meta.header_length + meta.page_count * meta.page_length:
+            raise EOFError(
+                f"truncated file {path!r}: {meta.page_count} whole pages of {meta.page_length} "
+                f"bytes end at byte offset {meta.header_length + meta.page_count * meta.page_length}, "
+                f"the file at byte offset {fsize}"
+            )
         meta.dataset_name = hdr[92:156].decode("latin-1", "replace").strip("\0 ").strip()
         total_align = align1 + align2
         meta.sas_release = hdr[216 + total_align : 224 + total_align].decode("latin-1", "replace").strip("\0 ")
@@ -1051,6 +1057,15 @@ def arrow_schema(
 
 # --------------------------------------------------------------- eager API
 
+def _short_file(path: str, meta: SasMetadata, held: int) -> EOFError:
+    # page_count follows the file size, so a file cut on a page boundary
+    # holds fewer rows than the header declares
+    return EOFError(
+        f"truncated file {path!r}: its pages hold {held} of the {meta.row_count} rows "
+        f"the header declares; the file ends at byte offset {os.path.getsize(path)}"
+    )
+
+
 def read_table(
     path: str,
     columns: list[str] | None = None,
@@ -1100,6 +1115,8 @@ def read_table(
         if seen >= want_end:
             break
     _flush()
+    if seen < want_end:
+        raise _short_file(path, meta, seen)
     if not tables:
         empty = decode_rows(b"", meta, columns, opts)
         return pa.table({n: empty.get(n, pa.array([], type=f.type)) for n, f in zip(schema.names, schema)}, schema=schema)
@@ -1123,9 +1140,11 @@ def read_page_range(
     schema = arrow_schema(meta, replace(opts, row_index=False), columns)
     pending: list[bytes] = []
     pending_rows = 0
+    held = 0
     for block, nrows in iter_row_blocks(path, meta, (page_lo, page_hi)):
         pending.append(block)
         pending_rows += nrows
+        held += nrows
         if pending_rows >= batch_size:
             cols = decode_rows(b"".join(pending), meta, columns, opts)
             yield pa.table({n: cols[n] for n in schema.names}, schema=schema).to_batches()[0]
@@ -1133,6 +1152,9 @@ def read_page_range(
     if pending_rows:
         cols = decode_rows(b"".join(pending), meta, columns, opts)
         yield pa.table({n: cols[n] for n in schema.names}, schema=schema).to_batches()[0]
+    # only a range over every page can check the header's row count
+    if page_lo == 0 and page_hi >= meta.page_count and held < meta.row_count:
+        raise _short_file(path, meta, held)
 
 
 def read_partition(
@@ -1163,10 +1185,7 @@ def read_partition(
     # page_count follows the file size, so a cut file indexes fewer rows
     held = index[-1][1] + index[-1][2] if index else 0
     if held < end:
-        raise EOFError(
-            f"truncated file {path!r}: its pages hold {held} of the {meta.row_count} rows "
-            f"the header declares; the file ends at byte offset {os.path.getsize(path)}"
-        )
+        raise _short_file(path, meta, held)
     # accumulate page slices into ~batch_size-row decode calls: one
     # numpy decode + one Arrow table per big batch instead of one per
     # PAGE — small-page files (hundreds of rows/page) otherwise pay

@@ -439,17 +439,20 @@ def read_table(
     nvars = len(meta.variables)
     cells: list[list] = [[] for _ in range(nvars)]
     nrows = 0
-    while True:
-        if cur.peek() in ("Z", ""):
-            break
-        if limit >= 0 and nrows >= offset + limit:
-            break
-        keep = nrows >= offset
-        for i, v in enumerate(meta.variables):
-            val = cur.string() if v.width else cur.number()
-            if keep:
-                cells[i].append(val)
-        nrows += 1
+    try:
+        while True:
+            if cur.peek() in ("Z", ""):
+                break
+            if limit >= 0 and nrows >= offset + limit:
+                break
+            keep = nrows >= offset
+            for i, v in enumerate(meta.variables):
+                val = cur.string() if v.width else cur.number()
+                if keep:
+                    cells[i].append(val)
+            nrows += 1
+    except PorError as e:
+        raise PorError(f"{path!r}: {e} (case {nrows + 1}, stream offset {cur.pos})") from e
     arrays = {}
     for i, v in enumerate(meta.variables):
         if columns is not None and v.name not in columns:

@@ -587,7 +587,9 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
     n = 4000
     t = pa.table({"a": np.arange(n, dtype=np.float64), "s": [f"v{i}" for i in range(n)]})
     writers = {"d.dta": write_dta, "u.sav": write_sav,
-               "c.sav": partial(write_sav, compress=True), "b.sas7bdat": write_sas7bdat}
+               "c.sav": partial(write_sav, compress=True), "b.sas7bdat": write_sas7bdat,
+               "r.sas7bdat": partial(write_sas7bdat, compress="RLE"),
+               "x.sas7bdat": partial(write_sas7bdat, compress="RDC")}
     for name, write in writers.items():
         full = str(tmp_path / name)
         write(t, full)
@@ -595,12 +597,51 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
         cut = str(tmp_path / f"cut_{name}")
         open(cut, "wb").write(raw[: len(raw) * 95 // 100])
         for parts in ("1", "4"):
-            ds = ReadstatDataSource({"path": cut, "partitions": parts})
-            reader = ds.reader(ds.schema())
+            # a compressed .sas7bdat cut inside a page fails in the header
+            # read, before any partition exists
             with pytest.raises(EOFError, match="truncated") as err:
+                ds = ReadstatDataSource({"path": cut, "partitions": parts})
+                reader = ds.reader(ds.schema())
                 for part in reader.partitions():
                     list(reader.read(part))
             assert cut in str(err.value) and "byte offset" in str(err.value), (name, parts)
+
+    # a compressed .sas7bdat cut on a page boundary keeps a whole number
+    # of pages; a read that sees every page (one page range, or the
+    # single row range a row index needs) counts its rows against the
+    # header
+    from polars_readstat_rs_spark.formats.sas.parser import read_metadata
+
+    full = str(tmp_path / "r.sas7bdat")
+    meta = read_metadata(full)
+    assert meta.page_count > 2
+    raw = open(full, "rb").read()
+    cut = str(tmp_path / "page_cut_r.sas7bdat")
+    open(cut, "wb").write(raw[: meta.header_length + (meta.page_count - 1) * meta.page_length])
+    for opts in ({"partitions": "1"}, {"row_index": "true"}):
+        ds = ReadstatDataSource({"path": cut, **opts})
+        reader = ds.reader(ds.schema())
+        with pytest.raises(EOFError, match="truncated") as err:
+            for part in reader.partitions():
+                list(reader.read(part))
+        assert cut in str(err.value) and "byte offset" in str(err.value), opts
+
+    # .por declares no row count; a cut inside a number token (here the
+    # last one before the 95% mark, its '/' terminator gone) fails naming
+    # the file and the stream offset
+    from polars_readstat_rs_spark.formats.spss.portable import PorError, write_por
+
+    full = str(tmp_path / "p.por")
+    write_por(t, full)
+    raw = open(full, "rb").read()
+    cut = str(tmp_path / "cut_p.por")
+    open(cut, "wb").write(raw[: raw.rindex(b"/", 0, len(raw) * 95 // 100)])
+    ds = ReadstatDataSource({"path": cut})
+    reader = ds.reader(ds.schema())
+    with pytest.raises(PorError) as err:
+        for part in reader.partitions():
+            list(reader.read(part))
+    assert cut in str(err.value) and "stream offset" in str(err.value)
 
 
 def _write_format(tmp_path, ext: str, n: int) -> str:

@@ -423,6 +423,182 @@ def test_blocked_neardup_chunk_decomposition_exact(spark, sf_dir):
         blocked_neardup_pairs(emb, chunk_rows=1)
 
 
+def _spark_round6(x: float) -> float:
+    """Spark's round(double, 6): HALF_UP on the double's decimal string
+    (numpy's round is half-to-even)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def _fold_pairs(ids, X, threshold):
+    """Driver-side exact-cosine reference for one block: every (a < b)
+    pair whose rounded cosine reaches ``threshold``, with the dot
+    products and squared norms folded over dimensions in ascending
+    order, ((0 + a0*b0) + a1*b1) + ..., as the kernel and the SQL
+    oracles fold them."""
+    import numpy as np
+
+    order = np.argsort(ids, kind="stable")
+    ids, X = np.asarray(ids)[order], X[order]
+    G = np.zeros((len(ids), len(ids)))
+    sq = np.zeros(len(ids))
+    for j in range(X.shape[1]):
+        G += np.multiply.outer(X[:, j], X[:, j])
+        sq += X[:, j] * X[:, j]
+    nrm = np.sqrt(sq)
+    out = []
+    for p, q in zip(*np.triu_indices(len(ids), 1)):
+        s = _spark_round6(float(G[p, q] / (nrm[p] * nrm[q])))
+        if s >= threshold:
+            out.append((int(ids[p]), int(ids[q]), s))
+    return out
+
+
+def _neardup_fixture(spark, id_type: str):
+    """300 random 64-dim vectors plus exact copies and near copies whose
+    cosine to their source falls from ~0.999 to below 0.9; a copy shares
+    its source's block. Ids are shuffled (and above 2^32 for bigint) so
+    the kernel's id sort matters. Four input partitions, so the block
+    window needs its own exchange."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    X = rng.normal(size=(300, 64))
+    blocks = list(rng.integers(0, 3, 300))
+    src = rng.choice(300, 40, replace=False)
+    copies = [X[s] for s in src[:15]]
+    copies += [X[s] + rng.normal(size=64) * (0.05 + 0.02 * k) for k, s in enumerate(src[15:])]
+    X = np.vstack([X, copies])
+    blocks += [blocks[s] for s in src]
+    ids = rng.permutation(len(X)) * 3 + (1 << 33 if id_type == "bigint" else 5)
+    rows = [(int(i), int(b), [float(x) for x in v]) for i, b, v in zip(ids, blocks, X)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4),
+        f"vec_id {id_type}, label int, embedding array<double>",
+    )
+    return df, ids, np.array(blocks), X
+
+
+def _bitwise(rows):
+    return sorted(tuple(r[:-1]) + (float(r[-1]).hex(),) for r in rows)
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_neardup_kernel_matches_a_numpy_reference(spark, id_type):
+    """srp_neardup_pairs and blocked_neardup_pairs (one chunk per block,
+    and chunk_rows=7 so every block runs diagonal and cross chunk-pair
+    tasks) equal a driver-side numpy reference row for row, every sim
+    bitwise, for int32 and int64 ids."""
+    import numpy as np
+
+    df, ids, blocks, X = _neardup_fixture(spark, id_type)
+    want = []
+    for b in np.unique(blocks):
+        m = blocks == b
+        want += [(int(b),) + p for p in _fold_pairs(ids[m], X[m], 0.3)]
+    assert len(want) > 100
+    for chunk_rows in (4096, 7):
+        got = similarity.blocked_neardup_pairs(df, threshold=0.3, chunk_rows=chunk_rows).collect()
+        assert _bitwise(got) == _bitwise(want), chunk_rows
+
+    # SRP: the same 4 bands x 16 sign bits of the same planes, each band
+    # bucket a block (no bucket nears MAX_BAND_BUCKET), pairs unioned
+    nbits, nbands = 64, 4
+    H = np.array([similarity._srp_plane("srp", b, 64) for b in range(nbits)]).T
+    acc = np.zeros((len(X), nbits))
+    for j in range(64):
+        acc += X[:, j : j + 1] * H[j][None, :]
+    per = nbits // nbands
+    bands = (acc >= 0).reshape(len(X), nbands, per) @ (1 << np.arange(per))
+    want = set()
+    for k in range(nbands):
+        for v in np.unique(bands[:, k]):
+            m = bands[:, k] == v
+            want.update(_fold_pairs(ids[m], X[m], 0.9))
+    assert len(want) >= 25
+    got = similarity.srp_neardup_pairs(df, threshold=0.9).collect()
+    assert _bitwise(got) == _bitwise(want)
+
+
+def test_neardup_plan_is_one_grouped_arrow_node(spark):
+    """The per-group kernel is a grouped-Arrow node, not a grouped-pandas
+    one. The one-member-block count shares the block-max Window node, so
+    the plan keeps two Window nodes and its exchanges: the block hash
+    (which the chunk-pair grouping reuses), plus the pair distinct for
+    SRP."""
+    df = _neardup_fixture(spark, "int")[0]
+    for out, exchanges in (
+        (similarity.blocked_neardup_pairs(df, threshold=0.3), 1),
+        (similarity.srp_neardup_pairs(df, threshold=0.9), 2),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in plan and "FlatMapGroupsInPandas" not in plan, plan
+        assert plan.count("Exchange") == exchanges, plan
+        assert plan.count("Window [") == 2, plan
+
+
+def _metric_sum(df, node: str, metric: str = "numOutputRows") -> int:
+    """Sum of one SQL metric over every ``node`` in the plan ``df`` ran."""
+    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        if p.nodeName() == node:
+            total += p.metrics().get(metric).get().value()
+        kids = p.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return total
+
+
+def test_one_member_blocks_never_reach_python(spark):
+    """Ten one-member blocks and one three-member block: only the three
+    members are fanned out to the per-group kernel."""
+    rows = [(i, i, [1.0, float(i)]) for i in range(10)]
+    rows += [(10 + k, 99, [1.0, k + 0.5]) for k in range(3)]
+    df = spark.createDataFrame(rows, "vec_id int, label int, embedding array<double>")
+    out = similarity.blocked_neardup_pairs(df, threshold=-1.0)
+    assert sorted((r.blk, r.a_id, r.b_id) for r in out.collect()) == [
+        (99, 10, 11), (99, 10, 12), (99, 11, 12)
+    ]
+    assert _metric_sum(out, "Generate") == 3
+
+
+def test_blocked_neardup_rejects_ragged_vectors(spark):
+    """Vectors of differing lengths in one block raise a ValueError that
+    names the expected dimension; their total (12 = 3 x 4) would let a
+    bare reshape misalign them silently."""
+    rows = [(0, 1, [1.0, 2.0, 3.0, 4.0]), (1, 1, [1.0, 2.0, 3.0]), (2, 1, [1.0, 2.0, 3.0, 4.0, 5.0])]
+    df = spark.createDataFrame(rows, "vec_id int, label int, embedding array<double>")
+    with pytest.raises(Exception) as err:
+        similarity.blocked_neardup_pairs(df, threshold=-1.0).collect()
+    assert "ValueError" in str(err.value) and "expected dimension 4" in str(err.value)
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_neardup_null_vector_element_never_pairs(spark, id_type):
+    """A null element reads as NaN: the vector's cosines are NaN, so it
+    pairs with nothing, not even its exact copy, while the other pairs of
+    its block are kept. Its SRP sign bits are all 0 (NaN >= 0 is false)."""
+    import numpy as np
+
+    base = np.random.default_rng(3).normal(size=8)
+    holed = [float(x) for x in base]
+    holed[3] = None
+    rows = [
+        (0, 1, [float(x) for x in base]),
+        (1, 1, [float(x) for x in base]),
+        (2, 1, holed),
+        (3, 1, [float(x) for x in base + 0.01]),
+    ]
+    df = spark.createDataFrame(rows, f"vec_id {id_type}, label int, embedding array<double>")
+    got = similarity.blocked_neardup_pairs(df, threshold=-1.0).collect()
+    assert sorted((r.a_id, r.b_id) for r in got) == [(0, 1), (0, 3), (1, 3)]
+    got = similarity.srp_neardup_pairs(df, threshold=-1.0, dim=8, nbits=8, nbands=2).collect()
+    assert sorted((r.a_id, r.b_id) for r in got) == [(0, 1), (0, 3), (1, 3)]
+    sigs = {r.vid: (r.b0, r.b1) for r in similarity.srp_signatures(df, dim=8, nbits=8, nbands=2).collect()}
+    assert sigs[2] == (0, 0)
+
+
 def test_kmeans_ivf_recall(spark, sf_dir):
     """k-means IVF: assignment is a total partition, every cell is
     nearest-centroid-consistent, and probed top-k recalls a reasonable
