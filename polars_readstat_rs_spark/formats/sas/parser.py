@@ -308,9 +308,10 @@ def _read_metadata_uncached(path: str) -> SasMetadata:
         if meta.header_length > 288:
             hdr += f.read(meta.header_length - 288)
         meta.page_length = struct.unpack_from(e + "I", hdr, 200 + align1)[0]
-        # the page-count field's width varies (u64 on BE-64 files); derive
-        # from the file size instead — the reference equivalently ignores
-        # the field and reads pages to EOF (src/sas/metadata.rs:38-41)
+        # pages are read to EOF, as the reference does (src/sas/metadata.rs:38-41);
+        # the header's page count (u64 on 64-bit files) only catches a file
+        # cut on a page boundary, which no page-range split could see
+        declared = struct.unpack_from(e + ("Q" if meta.bit64 else "I"), hdr, 204 + align1)[0]
         fsize = os.path.getsize(path)
         meta.page_count = (
             max(0, (fsize - meta.header_length) // meta.page_length) if meta.page_length else 0
@@ -322,6 +323,12 @@ def _read_metadata_uncached(path: str) -> SasMetadata:
                 f"truncated file {path!r}: {meta.page_count} whole pages of {meta.page_length} "
                 f"bytes end at byte offset {meta.header_length + meta.page_count * meta.page_length}, "
                 f"the file at byte offset {fsize}"
+            )
+        if declared > meta.page_count:
+            raise EOFError(
+                f"truncated file {path!r}: the file ends at byte offset {fsize}, its "
+                f"{declared} declared pages at byte offset "
+                f"{meta.header_length + declared * meta.page_length}"
             )
         meta.dataset_name = hdr[92:156].decode("latin-1", "replace").strip("\0 ").strip()
         total_align = align1 + align2

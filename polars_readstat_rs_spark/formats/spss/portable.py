@@ -723,8 +723,9 @@ def write_header(
 
 
 def _wrap(stream: str) -> bytes:
-    pad = (-len(stream)) % _LINE
-    stream += "Z" * pad
+    # one 'Z' ends the data even when the stream fills its last line
+    stream += "Z"
+    stream += "Z" * ((-len(stream)) % _LINE)
     lines = [stream[i : i + _LINE] for i in range(0, len(stream), _LINE)]
     return ("\n".join(lines) + "\n").encode("ascii")
 
@@ -797,6 +798,7 @@ def assemble_por_parts(
                     if not chunk:
                         break
                     emit(chunk)
+        emit("Z")  # the end-of-data marker, then 'Z' padding
         if carry:
             out.write(carry.ljust(_LINE, "Z") + "\n")
 

@@ -353,35 +353,30 @@ def blocked_neardup_pairs(
     detection within a huge homogeneous cell saturates well below the
     full pair set). Default None compares everything.
 
-    Task shape (r12 rewrite): the r5 kernel ran ONE applyInPandas task
-    per cell, so parallelism was capped at the number of blocks — the
-    sf10 embeddings table has 10 labels of ~20k vectors each, and the
-    whole stage ran 10-wide on 32 cores with each task doing the full
-    m^2 Gram. Cells are now split into ``chunk_rows``-sized chunks by
-    id rank and every CHUNK PAIR (ci <= cj) becomes its own task (the
-    classic triangle self-join decomposition): identical output, but
-    parallelism scales as (cell/chunk_rows)^2 and no task ever holds
-    more than 2*chunk_rows vectors. Replication cost: each vector is
-    shipped to ~cell/chunk_rows tasks — the standard trade for an
-    exact all-pairs operator. Cells at or below chunk_rows degenerate
-    to the old one-task-per-cell shape. A block with one member can
-    produce no pair, so the block window drops it (a member count over
-    the same spec as the chunk max, so no extra Window node or
-    exchange) and it never crosses the Python boundary: most SRP band
-    buckets are singletons. Each group reaches the kernel as one Arrow
-    table (applyInArrow): the vectors are one flattened list buffer
-    reshaped to (m, d), and vectors of differing lengths raise
-    ValueError instead of being misaligned.
-    Note: the chunk-pair grouping is satisfied by the block window's
-    hash partitioning, so Spark adds no exchange for it and all chunk
-    pairs of one block run in the same task partition.
+    Chunking: cells are split into ``chunk_rows``-sized chunks by id
+    rank and every CHUNK PAIR (ci <= cj) is its own applyInArrow group
+    (the triangle self-join decomposition), so no group ever holds more
+    than 2*chunk_rows vectors; each vector is shipped to ~cell/chunk_rows
+    groups. Chunking bounds per-group memory, not task parallelism: the
+    ``groupBy("blk", "ti", "tj")`` is satisfied by the block window's
+    ``hashpartitioning(blk)``, so Spark adds no exchange for it: every
+    chunk pair of one block runs in that block's task, and a hot block's
+    O(block^2) Gram runs in one task. Cells at or below chunk_rows are
+    one group. A block with one member can produce no pair, so the
+    block window drops it (a member count over the same spec as the
+    chunk max, so no extra Window node or exchange) and it never
+    crosses the Python boundary: most SRP band buckets are singletons.
+    Each group reaches the kernel as one Arrow table (applyInArrow):
+    the vectors are one flattened list buffer reshaped to (m, d), and
+    vectors of differing lengths raise ValueError instead of being
+    misaligned.
 
     Fold-order parity with the SQL oracles is preserved exactly: the
     Gram accumulation loops dimensions in ascending order, so every
     pair performs ((0 + a0*b0) + a1*b1) + ... — pair_dot_udf's (and
     list_reduce's) IEEE addition sequence — and the 6-decimal rounding
     happens JVM-side (Spark HALF_UP; numpy rounds half-to-even). The
-    inner chunking bounds each task's accumulator at ~2^22 doubles."""
+    inner chunking bounds each group's accumulator at ~2^22 doubles."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc

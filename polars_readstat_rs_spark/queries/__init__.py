@@ -1,620 +1,8 @@
 """Query registry: importing this package registers the relational and
-LLM-pipeline suites.
-
-Ordering contract: the driver's correctness runner executes QUERIES in
-dict (insertion) order with a global time budget, so one pathological
-query stalls everything registered after it (round 2: d08 hung at
-position ~17 and zeroed the whole correctness file). We therefore
-rebuild the dict so the long-verified relational suite runs first and
-_RISKY_TAIL — the most expensive / most recently added entries — runs
-LAST. Add any brand-new, never-locally-verified query to _RISKY_TAIL
-until a full tools/check_oracle.py run has passed it.
-
-GRADUATION CHECKLIST (r13 verdict item 2 — every step, in order, for
-any gate leaving _RISKY_TAIL or any rotation edit; a gate is NOT
-graduated until all five have run AFTER the last registry edit):
- 1. tools/check_oracle.py at sf0.001 AND sf0.01 AND sf0.1 for the gate.
- 2. pytest tests/test_oracle_types.py  (1.5 s — the DuckDB HUGEINT /
-    portability audit; skipping it is how p20/t28 shipped red in r13).
- 3. pytest tests/test_registry_order.py  (window shape = exactly 50).
- 4. HEAD[:50] rehearsal: tools/check_oracle.py sf0.01 over the head.
- 5. FULL pytest tests/ run — the close-out number quoted in NOTES must
-    come from a run after the final registry edit of the round.
-"""
+LLM-pipeline suites into ``QUERIES``/``ORACLES`` in registration order.
+The driver's run order lives in ``__spark_entry__`` (``HEAD``)."""
 
 from . import llm, llm2, llm3, llm4, pipeline, readstat, relational, relational2, relational3, streaming_q, tpch, llm5, llm6, llm7, llm8, llm9, llm10, llm11, llm12, llm13, llm14, llm15, llm16  # noqa: F401  (registration side effects)
 from .registry import ORACLES, QUERIES
 
-# Round-7 rotation (r6 verdict task 1): the driver records only the
-# FIRST 50 queries() entries per round, and 55 registry entries had
-# never appeared in any CORRECTNESS_r*.json (r1-r6 union = 109/164).
-# _R7_HEAD = 50 of those 55, ordered cheapest-first (sf0.01 timings from
-# a fresh tools/check_oracle.py run this round, 55/55 PASS); the 5 most
-# expensive never-recorded entries (_R7_DEFER: r09 ~7s, v11 4.8s,
-# g04 4.4s, r13 3.1s, d12 2.7s) sit at positions 51-55 for the r8 head.
-# Previously driver-verified entries follow in their prior order.
-_R7_HEAD = (
-    "p02_stratified_sample",
-    "q56_trend",
-    "q30_list_agg",
-    "q31_count_if",
-    "q59_array_funcs",
-    "q60_unpivot",
-    "p05_det_shuffle",
-    "q55_hopping_window",
-    "p10_curriculum",
-    "m07_audio_frames",
-    "p03_domain_mix",
-    "q48_histogram",
-    "q51_event_patterns",
-    "q54_ohlc",
-    "q58_rank_family",
-    "q61_lateral",
-    "q52_snapshot_diff",
-    "q53_zorder",
-    "q72_large_orders",
-    "q75_no_order_customers",
-    "q78_supplier_part_counts",
-    "r07_informative_nulls_merged",
-    "q28_except_all",
-    "q29_range_join",
-    "q79_excess_suppliers",
-    "m06_png_codec",
-    "q70_top_supplier",
-    "q71_small_qty",
-    "q66_returned_items",
-    "q46_moving_window",
-    "q82_scd2_intervals",
-    "q83_point_in_time_join",
-    "q47_iqr_outliers",
-    "q49_ntile",
-    "q50_asof_nearest",
-    "q39_retention",
-    "q41_expectations",
-    "q69_promo_share",
-    "q67_important_parts",
-    "q44_fuzzy_match",
-    "q45_gapfill",
-    "t15_wordpiece",
-    "r12_pushdown_matrix",
-    "q57_group_center",
-    "q63_volume_shipping",
-    "m02_frame_sample",
-    "s09_stream_session_window",
-    "v10_ann_join",
-    "p06_contamination",
-    "q40_profile",
-)
-_R7_DEFER = (
-    "d12_cluster_representatives",
-    "r13_xpt_roundtrip_agg",
-    "g04_components_star",
-    "v11_mmr_rerank",
-    "r09_sav_option_interaction",
-)
-
-# The r8 first/second-wave additions: all 14 passed a dedicated
-# tools/check_oracle.py run at sf0.01 (14/14) plus the full-registry
-# sf0.1 sweep for the first 12 (t16/t17 verified individually after),
-# so they graduate from _RISKY_TAIL into the recorded head below.
-_R8_NEW = (
-    "r14_xpt_v8_roundtrip",
-    "q84_group_percentiles",
-    "v12_knn_label_vote",
-    "m08_image_resize",
-    "d13_minhash_estimate",
-    "q85_recursive_hierarchy",
-    "q86_windowed_distinct",
-    "r15_sas7bdat_write_roundtrip",
-    "r16_sas7bdat_timestamp_roundtrip",
-    "r17_sas7bdat_compressed_roundtrip",
-    "p11_leakage_free_split",
-    "r18_zsav_write_roundtrip",
-    "t16_bpe_train",
-    "t17_bpe_encode",
-)
-
-# The r8 third-wave additions: graduated from _RISKY_TAIL after the
-# full-registry tools/check_oracle.py sweep passed them at sf0.01
-# (189/189 this session) on top of the earlier dedicated sf0.01+sf0.1
-# runs — they need driver CORRECTNESS rows, so they join the head.
-_R8_THIRD = (
-    "t18_ngram_diversity",
-    "t19_url_stats",
-    "p12_interleave",
-    "v13_quantize_int8",
-    "r19_por_roundtrip_agg",
-    "m09_audio_resample",
-    "q87_grouped_mode",
-    "t20_normalize_text",
-    "v14_quantized_recall",
-    "d14_lsh_recall",
-    "r20_dta_v117_roundtrip",
-)
-
-# Round-9 additions, all never driver-recorded: the three readstat
-# gates from the first r9 wave (catalog write, RDC write, multifile
-# directory sink) and the second-wave pipeline ops (C4 filters, URL
-# dedup, mix budget). Each passed dedicated tools/check_oracle.py runs
-# at sf0.01 AND sf0.1 this round, so they lead the recorded head.
-_R9_NEW = (
-    "r21_catalog_write_roundtrip",
-    "r22_rdc_write_roundtrip",
-    "r23_multifile_write_roundtrip",
-    "t21_c4_filters",
-    "d15_url_dedup",
-    "p13_mix_budget",
-    "m10_image_dhash_dedup",
-    # third wave: verified by dedicated tools/check_oracle.py runs at
-    # sf0.01 AND sf0.1 before graduating out of _RISKY_TAIL
-    "v15_embedding_moments",
-    "p14_priority_sample",
-    "d16_winnow_pairs",
-    "p15_clean_corpus",
-    "m11_keyframes",
-    "g05_label_propagation",
-    "v16_matryoshka_recall",
-    "r24_dta_v119_roundtrip",
-    "s10_stream_clean_pipeline",
-    "p16_pack_manifest",
-    "m12_shot_segments",
-    "t22_lm_buckets",
-    "d17_bloom_membership",
-    "t23_cms_token_freq",
-    "t24_kmv_ndv",
-    "q88_variant_extract",
-    "q89_sql_udf",
-    "d18_containment_pairs",
-    "m13_audio_segments",
-    "q90_collation_group",
-    "p17_apportion_budget",
-    "s11_stream_bloom_screen",
-    "v17_recall_nprobe_curve",
-)
-
-# Queries whose IMPLEMENTATION materially changed in round 9 (integer-
-# cents aggregation q01/q03/q05, xxhash64 shingle keys d02/p06,
-# single-exchange p04, opt-in batch filter acceptance r12): they have
-# old driver CORRECTNESS rows, but those predate the rewrite — put them
-# inside the recorded window so the round's artifact re-proves them.
-_R9_TOUCHED = (
-    "q01_pricing_summary",
-    "q03_shipping_priority",
-    "q05_nation_revenue",
-    "d02_dedup_ngram_jaccard",
-    "d03_dedup_minhash_lsh",
-    "p04_pack_sequences",
-    "p06_contamination",
-    "r12_pushdown_matrix",
-)
-
-# Round-10 additions: each passed dedicated tools/check_oracle.py runs
-# at sf0.001 AND sf0.01 AND sf0.1 before graduating out of _RISKY_TAIL.
-_R10_NEW = (
-    "d19_band_width_recall",
-    "q91_sql_pipe",
-    "s12_stream_cms",
-    "d20_lsh_band_curve",
-    "m14_media_probe",
-    "v18_pq_m_curve",
-)
-
-# Queries whose IMPLEMENTATION materially changed in round 10 — the
-# strL trailing-space writer fix (r24 + every .dta write gate), the
-# brute-force top-k in-kernel candidate pruning (v01 and everything
-# that derives ground truth from it), the q24 integer-bucket+cents
-# rewrite, the simhash band_bits / minhash (b, r) parameterizations,
-# and the winnow/priority-sample hardening — inside the recorded
-# window so CORRECTNESS_r10 re-proves exactly what changed.
-_R10_TOUCHED = (
-    "r24_dta_v119_roundtrip",
-    "r01_dta_roundtrip_agg",
-    "r08_distributed_write_roundtrip",
-    "r20_dta_v117_roundtrip",
-    "r23_multifile_write_roundtrip",
-    "v01_cosine_topk",
-    "v06_ann_recall",
-    "v14_quantized_recall",
-    "v16_matryoshka_recall",
-    "v17_recall_nprobe_curve",
-    "q24_windowed_agg",
-    "d04_simhash",
-    "d05_simhash_pairs",
-    "d03_dedup_minhash_lsh",
-    "d14_lsh_recall",
-    "d16_winnow_pairs",
-    "p14_priority_sample",
-)
-
-# Round-11 additions: each passed dedicated tools/check_oracle.py runs
-# at sf0.001 AND sf0.01 AND sf0.1 before graduating out of _RISKY_TAIL.
-_R11_NEW = (
-    "v19_capped_neardup_recall",
-    "t25_bpe_batched_train",
-    "v20_semdedup_keep",
-    # second wave: verified by dedicated tools/check_oracle.py runs at
-    # sf0.001 AND sf0.01 AND sf0.1 before graduating out of _RISKY_TAIL
-    "v21_rerank_depth_curve",
-    "q92_partition_pruned_join",
-    "m15_collate_manifest",
-    "q93_bucketed_colocated_join",
-    "v22_ivf_pq_rerank_recall",
-    "s13_stream_media_probe",
-    "r25_union_by_name_read",
-    "r26_sql_ddl_view",
-    "q94_fuzzy_dim_join",
-    "r27_format_chain",
-    # third wave: table-maintenance planner + IVF index-health gates,
-    # verified at sf0.001 AND sf0.01 AND sf0.1 before graduating
-    "p18_compaction_plan",
-    "v23_ivf_balance",
-    "d21_bloom_fp_curve",
-    "t26_cms_width_curve",
-    "t27_kmv_k_curve",
-)
-
-# Queries whose IMPLEMENTATION materially changed in round 11 — the
-# v04/d08 oracle refactor through the shared _km_chain() prelude (same
-# SQL semantics, new string — re-proved), the q05
-# derived-semi-filter pruning rewrite, the d19/d20/v18 zero-truth recall
-# guards (oracle AND query sides), the m14 signed-BMP-dims probe fix,
-# the batched bpe_train scheduler (t16/t17 run through it), the Stata
-# writer's early strL routing (every .dta write gate), the
-# minhash_lsh_pairs (b, r) >= 1 validation (d03's operator), and the
-# second wave's pq_topk refactor through _pq_codes_and_luts (v07) —
-# inside the recorded window so CORRECTNESS_r11 re-proves exactly what
-# changed.
-_R11_TOUCHED = (
-    "v04_kmeans_ivf_topk",
-    "d08_semantic_dedup",
-    "d17_bloom_membership",  # positions factored into _bloom_positions (d21 shares them)
-    "t23_cms_token_freq",  # cells/probe factored into _cms_cells/_cms_probe (t26 shares them)
-    "t24_kmv_ndv",  # estimator factored into _kmv_point (t27 shares it)
-    "v07_pq_topk",
-    "q05_nation_revenue",
-    "d19_band_width_recall",
-    "d20_lsh_band_curve",
-    "v18_pq_m_curve",
-    "m14_media_probe",
-    "t16_bpe_train",
-    "t17_bpe_encode",
-    "r01_dta_roundtrip_agg",
-    "r08_distributed_write_roundtrip",
-    "r20_dta_v117_roundtrip",
-    "r23_multifile_write_roundtrip",
-    "r24_dta_v119_roundtrip",
-    "d03_dedup_minhash_lsh",
-)
-
-# Round-12 additions: each passed a dedicated tools/check_oracle.py
-# run at sf0.001 AND sf0.01 AND sf0.1 before graduating out of
-# _RISKY_TAIL.
-_R12_NEW = (
-    "v24_chunked_neardup_parity",
-    "p19_clustering_plan",
-)
-
-# Queries whose IMPLEMENTATION materially changed in round 12 — the
-# blocked_neardup_pairs chunk-pair (triangle) decomposition rewrite
-# (v02 directly; v19/v20 call it for truth/capped legs) and the
-# compaction planner's keep_zero_benefit parameter (p18's operator) —
-# inside the recorded window so CORRECTNESS_r12 re-proves exactly what
-# changed.
-_R12_TOUCHED = (
-    "v02_embedding_neardup",
-    "v19_capped_neardup_recall",
-    "v20_semdedup_keep",
-    "p18_compaction_plan",
-    # sf1-sweep fixes (each re-verified at sf0.001/0.01/0.1 AND sf1):
-    # cast-then-divide double reconstruction (q01/q03/q05/q24), the
-    # round(x*1e6)/1e6 cross-engine rounding form (v11, both sides),
-    # and the materialized graph CTE chain (g03 oracle).
-    # NOT window-listed: the same decimal->double hardening applied
-    # proactively to 26 more money-sum call sites (q6x/q7x tpch suite,
-    # q06/q29/q34/q46/q49/q60 via _dec_sum_double) is PROVABLY
-    # bit-identical below 2^53 — i.e. at every SF the driver gates run
-    # — and all were locally verified green at sf0.001/0.01/0.1 AND
-    # sf1 this round. q06/q34 happened to already sit in _R12_ROTATE
-    # below, so the driver re-proved THOSE TWO this round; the
-    # remaining 22 hardened queries (q62-q79 + q29/q46/q49/q60) lead
-    # the r13 rotation for driver re-proof (r12 ADVICE item 3).
-    "q01_pricing_summary",
-    "q03_shipping_priority",
-    "q05_nation_revenue",
-    "q24_windowed_agg",
-    "v11_mmr_rerank",
-    "g03_pagerank",
-)
-
-# Round-12 rotation (r11 verdict item 8): every registry query is
-# ever-driver-green, so after the touched set the head cycles in the
-# OLDEST-driver-recorded families (last CORRECTNESS row r1 or r4 —
-# computed from the r1-r11 artifact union) so driver-verified recency
-# keeps advancing instead of re-recording the same recent head.
-# Budgeted to the 50-slot window: len(_R12_NEW) + len(_R12_TOUCHED) +
-# len(_R12_ROTATE) == 50 exactly (the r12 code-review caught the first
-# cut overflowing by 4, which would have silently left the 4 oldest
-# families unrecorded while the list claimed they cycled in); the
-# remaining r4-recorded families (t06, t07, t08, v05) lead the r13
-# rotation.
-_R12_ROTATE = (
-    "q02_filter_project",
-    "q06_revenue_forecast",
-    "q08_semi_join_broadcast",
-    "q09_distinct",
-    "q10_count_distinct",
-    "q12_window_running",
-    "q14_rollup",
-    "q15_cube",
-    "q18_string_funcs",
-    "q23_sessionization",
-    "t03_token_stats",
-    "v03_ivf_topk",
-    "d06_dedup_components",
-    "d07_passage_dedup",
-    "d09_incremental_dedup",
-    "m01_multimodal_bytes",
-    "q04_semi_join_exists",
-    "q07_anti_join",
-    "q11_topk_per_group",
-    "q13_set_ops",
-    "q16_grouping_sets",
-    "q17_date_arith",
-    "q19_value_label_decode",
-    "q20_informative_nulls",
-    "q21_full_outer",
-    "q22_asof_join",
-    "q25_median",
-    "q26_type_narrowing",
-    "q27_pivot",
-    "q32_json_extract",
-    "q33_pandas_udf",
-    "q34_session_window",
-    "q35_approx_sketches",
-    "q36_correlated_subquery",
-    "q37_narrow_full_rules",
-    "q38_funnel",
-    "r02_dta_projection_pushdown",
-    "r03_dta_metadata_probe",
-)
-
-# Round-13 additions: each passed a dedicated tools/check_oracle.py
-# run at sf0.001 AND sf0.01 AND sf0.1 before graduating out of
-# _RISKY_TAIL.
-_R13_NEW = (
-    "p20_train_val_test_split",
-    "t28_token_drift",
-)
-
-# Round-13 re-proof head (r12 verdict item 1): the _dec_sum_double
-# decimal->double hardening (commit 093d0dd) landed AFTER r12's
-# 50-slot window was budgeted, so the driver has never recorded the
-# new SQL for these 22 queries (q06/q34 were already in _R12_ROTATE
-# and got their rows in CORRECTNESS_r12). All 22 were locally
-# verified green at sf0.001/0.01/0.1 AND sf1 in r12.
-_R13_REPROOF = (
-    "q62_priority_exists",
-    "q63_volume_shipping",
-    "q64_market_share",
-    "q65_profit",
-    "q66_returned_items",
-    "q67_important_parts",
-    "q68_cust_order_dist",
-    "q69_promo_share",
-    "q70_top_supplier",
-    "q71_small_qty",
-    "q72_large_orders",
-    "q73_or_predicates",
-    "q74_waiting_supplier",
-    "q75_no_order_customers",
-    "q76_recursive_cte",
-    "q77_min_cost_supplier",
-    "q78_supplier_part_counts",
-    "q79_excess_suppliers",
-    "q29_range_join",
-    "q46_moving_window",
-    "q49_ntile",
-    "q60_unpivot",
-)
-
-# Round-13 rotation: first the families OWED from the r12 window
-# re-budget (t06/t07/t08/v05 were the remaining r4-recorded families;
-# r04/r05/r06/t02/t04/t05 were trimmed when the r12 window was cut to
-# exactly 50), then the oldest-driver-recorded remainder (all last
-# recorded r6 — computed from the r1-r12 artifact union). Budgeted to
-# the 50-slot window: len(_R13_NEW) + len(_R13_REPROOF) +
-# len(_R13_ROTATE) == 50.
-_R13_ROTATE = (
-    "t06_repetition",
-    "t07_unigram_lm",
-    "t08_bm25_topk",
-    "v05_srp_neardup",
-    "r04_sav_roundtrip_agg",
-    "r05_sas_corpus_read",
-    "r06_informative_nulls_struct",
-    "t02_quality_score",
-    "t04_fingerprints",
-    "t05_pii_redaction",
-    # oldest-recorded fill (last CORRECTNESS row r6):
-    "d01_dedup_exact",
-    "d10_prefix_filter",
-    "d11_span_dedup",
-    "g01_triangle_stats",
-    "g02_bfs_hops",
-    "m03_wav_codec",
-    "m04_bmp_codec",
-    "m05_video_frames",
-    "p01_hash_sample",
-    "p07_importance_sample",
-    "p08_group_sample",
-    "p09_temperature_mix",
-    "q42_salted_join",
-    "q43_upsert",
-    "q80_python_udtf",
-    "q81_map_functions",
-    # r10_stream_source / r11_stream_sink were cut when the two
-    # _R13_NEW gates graduated into the 50-slot window (never-recorded
-    # beats oldest-re-record); they lead the r14 rotation fill.
-)
-
-# Round-14 re-proof head (r13 verdict item 1): p20/t28 shipped with
-# HUGEINT-emitting oracle SQL in r13 (hash_match false in
-# CORRECTNESS_r13); the CAST(... AS BIGINT) fix landed this round and
-# passed check_oracle at sf0.001/0.01/0.1 + the type audit, so they
-# lead the window until the driver records them green.
-_R14_FIXED = (
-    "p20_train_val_test_split",
-    "t28_token_drift",
-)
-
-# Round-14 touched re-proof: q01 rewritten to the lean level-1 shape
-# (raw-double disc/tax keys + double quantity sum; bit-identical,
-# verified at sf10 and check_oracle 3 SFs) — must get a driver record
-# for the new plan. Budget: q87_grouped_mode cycles out to r15.
-_R14_TOUCHED = ("q01_pricing_summary",)
-
-# Round-14 additions: each passed the full graduation checklist
-# (check_oracle at sf0.001+sf0.01+sf0.1, type audit, registry-order
-# test, HEAD rehearsal, post-edit full pytest) before leaving
-# _RISKY_TAIL. Never-recorded beats oldest-re-record, so they join the
-# window; budget: r19_por_roundtrip_agg, m09_audio_resample,
-# v13_quantize_int8 and p12_interleave cycle out to r15 with the rest
-# of the r8-recorded families.
-_R14_NEW = (
-    "t29_token_entropy",
-    "m16_payload_dedup_manifest",
-    "r28_local_read_parity",
-    "d22_quality_keep_dedup",
-)
-
-# Round-14 rotation (r13 verdict item 5): oldest-driver-recorded
-# first — the 19 families whose latest CORRECTNESS row is r6 (led by
-# r10_stream_source / r11_stream_sink, owed from the r13 window cut),
-# then the 17 r7-recorded, then the first 7 of the 30 r8-recorded.
-# Computed from the r1-r13 artifact union. Budgeted to the 50-slot
-# window EXACTLY: len(_R14_FIXED) + len(_R14_TOUCHED) + len(_R14_NEW)
-# + len(_R14_ROTATE) == 50.
-_R14_ROTATE = (
-    # latest driver record r6 (19):
-    "r10_stream_source",
-    "r11_stream_sink",
-    "t01_langid",
-    "t09_gopher_quality",
-    "t10_bigram_lm",
-    "t11_bpe_pairs",
-    "v08_ivf_append",
-    "t12_zipf_stats",
-    "t13_chunk_documents",
-    "s01_stream_windowed_counts",
-    "s02_stream_sessions",
-    "s03_stream_stream_join",
-    "s04_stream_dedup",
-    "s05_stream_static_join",
-    "s06_incremental_agg",
-    "s07_stream_hopping",
-    "s08_stream_outer_join",
-    "t14_tfidf_terms",
-    "v09_filtered_topk",
-    # latest driver record r7 (17):
-    "r07_informative_nulls_merged",
-    "q28_except_all",
-    "m06_png_codec",
-    "q82_scd2_intervals",
-    "q83_point_in_time_join",
-    "q47_iqr_outliers",
-    "q50_asof_nearest",
-    "q39_retention",
-    "q41_expectations",
-    "q44_fuzzy_match",
-    "q45_gapfill",
-    "t15_wordpiece",
-    "q57_group_center",
-    "m02_frame_sample",
-    "s09_stream_session_window",
-    "v10_ann_join",
-    "q40_profile",
-    # latest driver record r8 (first 7 of 30 — the rest cycle in r15):
-    "r15_sas7bdat_write_roundtrip",
-    "r16_sas7bdat_timestamp_roundtrip",
-    "r17_sas7bdat_compressed_roundtrip",
-    "p11_leakage_free_split",
-    "r18_zsav_write_roundtrip",
-    "t18_ngram_diversity",
-    "t19_url_stats",
-)
-
-# Brand-new, never-locally-verified queries go here until a full
-# tools/check_oracle.py run has passed them (see module docstring).
-_RISKY_TAIL: tuple[str, ...] = ()
-
-# Single source of truth for the driver-recorded head — __spark_entry__
-# imports HEAD (r6 lesson: the rotation lived in TWO places and the
-# __spark_entry__ copy won, so r6 recorded the identical 50 as r5).
-# Round-8 rotation (r7 verdict task 1 + this round's additions): the
-# driver records only the FIRST 50 entries, so the head leads with the
-# queries that have never had a driver CORRECTNESS row — the 5
-# _R7_DEFER entries (completes the r1-r7 union at 164/164), then the
-# 14 _R8_NEW gates added this round (locally verified, see above),
-# then the previously-recorded rotation.
-# Round-9 rotation: the never-recorded _R9_NEW gates lead (grown each
-# session-3 wave; all check_oracle-verified at sf0.001+sf0.01+sf0.1
-# before graduating), then the 8 _R9_TOUCHED rewrites, then the prior
-# rotation (dedup'd) fills the remaining recorded slots. The driver
-# records the FIRST 50 — more than the new+touched set, so every r9
-# change gets a CORRECTNESS row.
-# Round-10 rotation (r9 verdict item 7): all 219 r9-registry queries
-# are ever-driver-green, so the head leads with what r10 CHANGED — the
-# 6 new gates, then the 17 materially-touched re-proof queries — and
-# the prior rotation fills the remaining recorded slots. _PRIOR is
-# dedup'd order-preserving (r9's touched set overlaps r7's head).
-# Round-11 rotation (r10 verdict item 7): all 225 r10-registry queries
-# are ever-driver-green, so the head leads with what r11 CHANGED — the
-# 9 new gates (3 first-wave + 6 second-wave), then the 14
-# materially-touched re-proof queries — and the prior rotation fills
-# the remaining recorded slots. _PRIOR is dedup'd order-preserving
-# across every earlier head.
-_PRIOR = tuple(
-    dict.fromkeys(
-        _R10_NEW + _R10_TOUCHED + _R9_NEW + _R9_TOUCHED + _R7_DEFER + _R8_NEW + _R8_THIRD + _R7_HEAD
-    )
-)
-# Round-12 rotation: touched re-proofs lead (the neardup decomposition
-# + planner param), then the oldest-driver-recorded families cycle
-# through the 50-slot recorded window, then the prior rotation.
-_PRIOR = tuple(
-    dict.fromkeys(_R11_NEW + _R11_TOUCHED + _PRIOR)
-)
-_R12_HEAD_SET = frozenset(_R12_NEW + _R12_TOUCHED + _R12_ROTATE)
-# Round-13 rotation: the 22 never-driver-recorded _dec_sum_double
-# re-proofs lead, then the owed + oldest-recorded rotation, then the
-# prior heads fill the unrecorded remainder.
-_PRIOR = tuple(
-    dict.fromkeys(_R12_NEW + _R12_TOUCHED + _R12_ROTATE + _PRIOR)
-)
-# Round-14 rotation: the fixed p20/t28 oracles lead, then the
-# oldest-driver-recorded rotation (r6 -> r7 -> first 11 of r8), then
-# the prior heads fill the unrecorded remainder.
-_PRIOR = tuple(
-    dict.fromkeys(_R13_NEW + _R13_REPROOF + _R13_ROTATE + _PRIOR)
-)
-_R14_HEAD_SET = frozenset(_R14_FIXED + _R14_TOUCHED + _R14_NEW + _R14_ROTATE)
-HEAD = (
-    _R14_FIXED
-    + _R14_TOUCHED
-    + _R14_NEW
-    + _R14_ROTATE
-    + tuple(n for n in _PRIOR if n not in _R14_HEAD_SET)
-)
-
-_ordered = (
-    [n for n in HEAD if n in QUERIES]
-    + [n for n in QUERIES if n not in HEAD and n not in _RISKY_TAIL]
-    + [n for n in _RISKY_TAIL if n in QUERIES]
-)
-_q = {n: QUERIES[n] for n in _ordered}
-QUERIES.clear()
-QUERIES.update(_q)
-
-RISKY_TAIL = _RISKY_TAIL  # single source of truth — __spark_entry__ imports this
-
-__all__ = ["QUERIES", "ORACLES", "RISKY_TAIL", "HEAD"]
+__all__ = ["QUERIES", "ORACLES"]

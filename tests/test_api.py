@@ -607,24 +607,24 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
             assert cut in str(err.value) and "byte offset" in str(err.value), (name, parts)
 
     # a compressed .sas7bdat cut on a page boundary keeps a whole number
-    # of pages; a read that sees every page (one page range, or the
-    # single row range a row index needs) counts its rows against the
-    # header
+    # of pages; the header's page count catches it before any partition
+    # exists, so a read split into several page ranges fails too
     from polars_readstat_rs_spark.formats.sas.parser import read_metadata
 
-    full = str(tmp_path / "r.sas7bdat")
-    meta = read_metadata(full)
-    assert meta.page_count > 2
-    raw = open(full, "rb").read()
-    cut = str(tmp_path / "page_cut_r.sas7bdat")
-    open(cut, "wb").write(raw[: meta.header_length + (meta.page_count - 1) * meta.page_length])
-    for opts in ({"partitions": "1"}, {"row_index": "true"}):
-        ds = ReadstatDataSource({"path": cut, **opts})
-        reader = ds.reader(ds.schema())
-        with pytest.raises(EOFError, match="truncated") as err:
-            for part in reader.partitions():
-                list(reader.read(part))
-        assert cut in str(err.value) and "byte offset" in str(err.value), opts
+    for name in ("r.sas7bdat", "x.sas7bdat"):
+        full = str(tmp_path / name)
+        meta = read_metadata(full)
+        assert meta.page_count > 2
+        raw = open(full, "rb").read()
+        cut = str(tmp_path / f"page_cut_{name}")
+        open(cut, "wb").write(raw[: meta.header_length + (meta.page_count - 1) * meta.page_length])
+        for opts in ({"partitions": "1"}, {"partitions": "4"}, {"row_index": "true"}):
+            with pytest.raises(EOFError, match="declared pages") as err:
+                ds = ReadstatDataSource({"path": cut, **opts})
+                reader = ds.reader(ds.schema())
+                for part in reader.partitions():
+                    list(reader.read(part))
+            assert cut in str(err.value) and "byte offset" in str(err.value), (name, opts)
 
     # .por declares no row count; a cut inside a number token (here the
     # last one before the 95% mark, its '/' terminator gone) fails naming

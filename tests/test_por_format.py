@@ -206,6 +206,28 @@ def test_user_missing_values(tmp_path):
     assert keep.column("v").to_pylist() == [1.0, 9.0, 2.0]
 
 
+def test_end_marker_on_a_full_last_line(tmp_path):
+    """A stream that fills its last 80-character line still ends in the
+    'Z' end-of-data marker, from write_por and from the multifile/stream
+    assembler alike."""
+    def table(n):
+        return pa.table({"a": np.arange(n, dtype=np.float64)})
+
+    header = P.write_header([P._var_of_field(table(0).schema[0], 1)])
+    n = next(n for n in range(1, 200) if len(header + P.encode_cases(table(n))) % 80 == 0)
+    t = table(n)
+    single, multi = str(tmp_path / "single.por"), str(tmp_path / "multi.por")
+    P.write_por(t, single)
+    blob = str(tmp_path / "part.blob")
+    P.assemble_por_parts(multi, t.schema, [(blob, P.spill_por_partition(t.to_batches(), blob))])
+    for p in (single, multi):
+        with open(p, "rb") as f:
+            lines = f.read().decode("ascii").splitlines()
+        assert all(len(ln) == 80 for ln in lines)
+        assert lines[-1] == "Z" * 80
+        assert P.read_table(p).equals(t)
+
+
 def test_name_sanitization():
     names = P._sanitize_names(["a_long_column_name", "a_long_column_nam2", "9lead", "ok"])
     assert all(len(n) <= 8 for n in names)

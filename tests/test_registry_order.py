@@ -1,125 +1,62 @@
-"""Pin the driver-recorded head rotation (r6 verdict task 1).
+"""Invariants of the driver order: the 50-name HEAD, then the rest.
 
-The correctness driver records only the FIRST 50 queries() entries, so
-the head must (a) be owned by exactly one module and (b) contain the
-round's rotation targets. Round 6 failed its rotation because a stale
-copy of the head in __spark_entry__ overrode the queries-package edit —
-this test makes that class of bug impossible to reintroduce silently.
+The correctness driver records only the first 50 queries() entries, so
+HEAD must be 50 registered names, and queries()/oracle_sql() must list
+every registered name exactly once in the same order.
+tools/rotate_head.py regenerates HEAD, oldest driver record first.
 """
 
-import sys
+import importlib.util
+import json
+from pathlib import Path
 
-sys.path.insert(0, ".")
+from __spark_entry__ import HEAD, oracle_sql, queries
+from polars_readstat_rs_spark.queries import QUERIES
 
-from __spark_entry__ import oracle_sql, queries  # noqa: E402
-from polars_readstat_rs_spark.queries import HEAD, QUERIES  # noqa: E402
-
-# The 55 registry entries that had never appeared in any
-# CORRECTNESS_r1..r6 driver file (list from VERDICT.md r6 task 1).
-NEVER_RECORDED_PRE_R7 = {
-    "d12_cluster_representatives",
-    "g04_components_star",
-    "m02_frame_sample",
-    "m06_png_codec",
-    "m07_audio_frames",
-    "p02_stratified_sample",
-    "p03_domain_mix",
-    "p05_det_shuffle",
-    "p06_contamination",
-    "p10_curriculum",
-    "q28_except_all",
-    "q29_range_join",
-    "q30_list_agg",
-    "q31_count_if",
-    "q39_retention",
-    "q40_profile",
-    "q41_expectations",
-    "q44_fuzzy_match",
-    "q45_gapfill",
-    "q46_moving_window",
-    "q47_iqr_outliers",
-    "q48_histogram",
-    "q49_ntile",
-    "q50_asof_nearest",
-    "q51_event_patterns",
-    "q52_snapshot_diff",
-    "q53_zorder",
-    "q54_ohlc",
-    "q55_hopping_window",
-    "q56_trend",
-    "q57_group_center",
-    "q58_rank_family",
-    "q59_array_funcs",
-    "q60_unpivot",
-    "q61_lateral",
-    "q63_volume_shipping",
-    "q66_returned_items",
-    "q67_important_parts",
-    "q69_promo_share",
-    "q70_top_supplier",
-    "q71_small_qty",
-    "q72_large_orders",
-    "q75_no_order_customers",
-    "q78_supplier_part_counts",
-    "q79_excess_suppliers",
-    "q82_scd2_intervals",
-    "q83_point_in_time_join",
-    "r07_informative_nulls_merged",
-    "r09_sav_option_interaction",
-    "r12_pushdown_matrix",
-    "r13_xpt_roundtrip_agg",
-    "s09_stream_session_window",
-    "t15_wordpiece",
-    "v10_ann_join",
-    "v11_mmr_rerank",
-}
+_TOOL = Path(__file__).resolve().parent.parent / "tools" / "rotate_head.py"
 
 
-def test_never_recorded_set_is_55():
-    assert len(NEVER_RECORDED_PRE_R7) == 55
+def _rotation_order():
+    spec = importlib.util.spec_from_file_location("rotate_head", _TOOL)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.rotation_order
 
 
-def test_head_covers_all_never_recorded():
-    # r14 head: the fixed p20/t28 oracles lead (r13's only red rows),
-    # then touched q01, then the four _R14_NEW gates, then the
-    # oldest-driver-recorded rotation (19 r6-recorded led by the owed
-    # stream source/sink, 17 r7-recorded, first 7 of the 30
-    # r8-recorded), then the prior rotation dedup'd.
-    from polars_readstat_rs_spark.queries import (
-        _R14_FIXED,
-        _R14_NEW,
-        _R14_ROTATE,
-        _R14_TOUCHED,
-    )
-
-    n_fix = len(_R14_FIXED) + len(_R14_TOUCHED) + len(_R14_NEW)
-    assert HEAD[: len(_R14_FIXED)] == _R14_FIXED
-    assert HEAD[len(_R14_FIXED) : len(_R14_FIXED) + len(_R14_TOUCHED)] == _R14_TOUCHED
-    assert HEAD[len(_R14_FIXED) + len(_R14_TOUCHED) : n_fix] == _R14_NEW
-    assert NEVER_RECORDED_PRE_R7 <= set(HEAD)
-    # the rotation is budgeted to the driver's 50-slot recorded window
-    # EXACTLY — an overflowing rotation silently drops its tail from
-    # the round's CORRECTNESS artifact (r12 code-review finding)
-    assert n_fix + len(_R14_ROTATE) == 50
-    assert HEAD[n_fix:50] == _R14_ROTATE
-    # the r14 window pays down the owed r13 cut first
-    assert HEAD[7] == "r10_stream_source" and HEAD[8] == "r11_stream_sink"
-    from polars_readstat_rs_spark.queries import _PRIOR
-
-    assert len(_PRIOR) == len(set(_PRIOR))  # _PRIOR itself is dedup'd
-    head_set = set(_R14_FIXED) | set(_R14_TOUCHED) | set(_R14_NEW) | set(_R14_ROTATE)
-    expected = n_fix + len(_R14_ROTATE) + len(set(_PRIOR) - head_set)
-    assert len(HEAD) == len(set(HEAD)) == expected
+def test_head_names_all_registered():
+    assert len(HEAD) == len(set(HEAD)) == 50
+    missing = [n for n in HEAD if n not in QUERIES]
+    assert not missing, missing
 
 
 def test_entry_ordering_matches_head():
     qnames = list(queries())
-    onames = list(oracle_sql())
-    assert qnames[: len(HEAD)] == list(HEAD)
-    assert onames == qnames  # oracle dict mirrors query dict exactly
+    assert qnames[:50] == list(HEAD)
+    rest = [n for n in QUERIES if n not in HEAD]
+    assert qnames[50:] == rest
     assert len(qnames) == len(set(qnames)) == len(QUERIES)
 
 
-def test_head_names_all_registered():
-    missing = [n for n in HEAD if n not in QUERIES]
-    assert not missing, missing
+def test_oracles_mirror_queries():
+    assert list(oracle_sql()) == list(queries())
+
+
+def test_rotation_rule(tmp_path):
+    def record(rnd, names):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {"hash_match": True} for n in names})
+        )
+
+    record(1, ["a", "b", "c", "gone"])
+    record(2, [])
+    record(3, ["b", "d"])
+    record(10, ["c", "gone"])
+    names = ["c", "new2", "a", "d", "b", "e", "new1"]
+    order = _rotation_order()(names, tmp_path)
+    # never recorded, then last round 1, 3, 3, 10; ties keep registration order
+    assert order == ["new2", "e", "new1", "a", "d", "b", "c"]
+    # only an empty record: registration order
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "CORRECTNESS_r02.json").write_text("{}")
+    assert _rotation_order()(names, empty) == names
