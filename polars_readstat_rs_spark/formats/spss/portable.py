@@ -723,9 +723,8 @@ def write_header(
 
 
 def _wrap(stream: str) -> bytes:
-    # one 'Z' ends the data even when the stream fills its last line
-    stream += "Z"
-    stream += "Z" * ((-len(stream)) % _LINE)
+    # at least one 'Z': the end-of-data marker, then padding
+    stream += "Z" * (_LINE - len(stream) % _LINE)
     lines = [stream[i : i + _LINE] for i in range(0, len(stream), _LINE)]
     return ("\n".join(lines) + "\n").encode("ascii")
 
@@ -798,9 +797,8 @@ def assemble_por_parts(
                     if not chunk:
                         break
                     emit(chunk)
-        emit("Z")  # the end-of-data marker, then 'Z' padding
-        if carry:
-            out.write(carry.ljust(_LINE, "Z") + "\n")
+        # at least one 'Z': the end-of-data marker, then padding
+        out.write(carry.ljust(_LINE, "Z") + "\n")
 
 
 def write_por(
