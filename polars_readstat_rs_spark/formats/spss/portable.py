@@ -441,8 +441,13 @@ def read_table(
     nrows = 0
     try:
         while True:
-            if cur.peek() in ("Z", ""):
+            c = cur.peek()
+            if c == "Z":
                 break
+            if c == "":
+                # every case ends on a token boundary, so a cut inside the
+                # last case's padded string would otherwise read short
+                raise PorError("end of stream before the 'Z' end-of-data marker")
             if limit >= 0 and nrows >= offset + limit:
                 break
             keep = nrows >= offset

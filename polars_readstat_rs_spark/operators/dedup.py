@@ -109,14 +109,14 @@ def _shingle_table(
     keys (jaccard intersections, df counts); signature math (minhash
     sha256) needs the raw strings.
 
-    Persisted by default: the inverted index feeds the self-join
-    (twice), the per-doc sizes and the signature aggregation — without
-    persistence Spark re-explodes the corpus once per consumer. At
-    cluster scale this is the standard materialize-the-index step
-    (DISK_ONLY spill keeps memory bounded). Pass ``persist=False`` when
-    the caller consumes the table exactly once (minhash_lsh_pairs folds
-    everything it needs into one groupBy) — caching a single-consumer
-    frame only adds a materialization job.
+    Persisted by default: a multi-consumer index (containment_pairs'
+    self-join and sizes, the incremental minhash signatures) would
+    otherwise re-explode the corpus once per consumer. At cluster scale
+    this is the standard materialize-the-index step (DISK_ONLY spill
+    keeps memory bounded). Pass ``persist=False`` when the caller
+    consumes the table exactly once (ngram_jaccard_pairs' one SQL
+    self-join) — caching a single-consumer frame only adds a
+    materialization job.
     """
     # widen before the explode: document tables arrive as one small
     # parquet split, which would serialize the shingling on one task
@@ -130,7 +130,7 @@ def _shingle_table(
         # df-cap via hot-hash aggregate + broadcast ANTI-JOIN (r15, the
         # minhash_lsh_pairs pattern, guide §2.3/§2.4): the count window
         # costs a corpus-wide exchange of every (doc, shingle) row just
-        # to attach df, and in _jaccard_on's shape that partitioning is
+        # to attach df, and in ngram_jaccard_pairs' shape that partitioning is
         # immediately destroyed by the per-doc size window, so the
         # window buys nothing downstream. The anti-join keeps the
         # stream scan-partitioned and replaces the exchange with a
@@ -161,140 +161,72 @@ def _shingle_table(
     return out.persist() if persist else out
 
 
-def _jaccard_on(
-    sh: DataFrame,
-    pairs: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-    prehashed: bool = False,
-) -> DataFrame:
-    """Exact Jaccard between docs sharing >=1 shingle (or the given
-    candidate pairs): |A∩B| from the inverted-index self-join,
-    |A|,|B| from per-doc shingle counts. ``sizes`` is honored only
-    together with ``pairs`` (prefix_filter_pairs is the one consumer:
-    it already aggregated per-doc sizes for its prefix positions); the
-    no-pairs path window-carries the sizes along the shingle rows
-    itself (r14 restructure) and rejects a ``sizes`` argument rather
-    than silently ignoring it. minhash_lsh_pairs no longer routes
-    through here at all — it verifies inline in its band join.
-
-    With candidate pairs, the self-join is first restricted to candidate
-    docs (semi-join) — LSH typically leaves a tiny candidate set, so the
-    quadratic co-shingle expansion only runs over those documents.
-    """
-    if sizes is not None and pairs is None:
-        raise ValueError(
-            "_jaccard_on: `sizes` without `pairs` is unsupported — the "
-            "no-pairs path computes sizes via a count window over the "
-            "shingle rows and would silently drop the supplied table"
-        )
-    # Single spark.sql() construction (PySpark {df} parameter binding):
-    # building this graph Column-by-Column cost ~0.15 s of py4j round
-    # trips PER INVOCATION on the driver (the d02/d03 bench profile);
-    # one SQL parse is a single round trip for the identical plan.
-    spark = sh.sparkSession
-    refs: dict[str, DataFrame] = {"sh": sh}
-    if sizes is not None:
-        refs["sizes"] = sizes
-        sz_cte = "SELECT doc, sz FROM {sizes}"
-    else:
-        sz_cte = "SELECT doc, count(*) AS sz FROM {sh} GROUP BY doc"
-    if pairs is not None:
-        refs["pairs"] = pairs
-        # plain semi-join: the candidate set is unbounded at scale, so no
-        # forced broadcast — AQE still picks a broadcast exchange at
-        # runtime when the measured size is actually small
-        key = "s.sh" if prehashed else "xxhash64(s.sh)"
-        shj_cte = (
-            f"SELECT s.doc, {key} AS sh FROM {{sh}} s LEFT SEMI JOIN "
-            "(SELECT a_id AS doc FROM {pairs} UNION SELECT b_id FROM {pairs}) c "
-            "ON s.doc = c.doc"
-        )
-        pair_filter = "LEFT SEMI JOIN {pairs} p ON i.a_id = p.a_id AND i.b_id = p.b_id"
-    else:
-        # the intersection join only tests shingle EQUALITY, so it keys
-        # on xxhash64 longs — the co-shingle shuffle carries 8 bytes
-        # instead of full n-gram strings (same trick as
-        # sampling.contamination_report; a 64-bit collision inflates one
-        # pair's |A∩B| with probability ~d^2/2^65 — negligible and
-        # deterministic). ``prehashed`` inputs (hashed _shingle_table)
-        # arrive as longs already — no string ever exists. Signature
-        # math (minhash) stays on raw strings.
-        #
-        # r14 restructure: the per-doc size rides ALONG the shingle rows
-        # (count window on doc) into the self-join, and the pair groupBy
-        # takes min(sz) per side — constant within a (doc) group, so
-        # values are identical to the joined sizes table. The previous
-        # shape joined a per-doc sizes aggregate back onto the pair
-        # stream twice; at corpus scale that sizes table cannot
-        # broadcast, so each join was a full extra exchange of the
-        # pair stream. Cost: one 8-byte int per shingle row through the
-        # intersection shuffle.
-        key = "sh" if prehashed else "xxhash64(sh)"
-        shj_cte = f"SELECT doc, {key} AS sh, count(1) OVER (PARTITION BY doc) AS sz FROM {{sh}}"
-        # /*+ MERGE */ pins the co-shingle self-join to sort-merge
-        # (r15, guide §3.1 "pick the strategy deliberately"): both
-        # sides are the SAME corpus-sized shingle table, but the
-        # planner's size estimate predates the explode/window (at sf1
-        # the "small" side is already 33 MB against the 10 MB
-        # broadcast threshold), so it broadcast the entire shingle
-        # table — a serial driver collect+build on the query's
-        # critical path and a driver-OOM hazard at any real scale.
-        # Measured at sf1/local[32], settled C2 state: 8.4 s (BHJ) ->
-        # 3.4 s (SMJ), and the join stays on the one ReusedExchange
-        # (plans/r15/d02_dedup_ngram_jaccard_after.txt). Identical
-        # rows — join strategy only.
-        return spark.sql(
-            f"""
-            WITH shj AS ({shj_cte})
-            SELECT a_id, b_id, inter, sza + szb - inter AS un,
-                   CAST(inter AS DOUBLE) / CAST(sza + szb - inter AS DOUBLE) AS jaccard
-            FROM (
-              SELECT /*+ MERGE(a) */ a.doc AS a_id, b.doc AS b_id, count(*) AS inter,
-                     min(a.sz) AS sza, min(b.sz) AS szb
-              FROM shj a JOIN shj b ON a.sh = b.sh AND a.doc < b.doc
-              GROUP BY a.doc, b.doc)
-            """,
-            **refs,
-        )
-    return spark.sql(
-        f"""
-        WITH sz AS ({sz_cte}),
-        shj AS ({shj_cte}),
-        inter AS (
-          SELECT a.doc AS a_id, b.doc AS b_id, count(*) AS inter
-          FROM shj a JOIN shj b ON a.sh = b.sh AND a.doc < b.doc
-          GROUP BY a.doc, b.doc),
-        interf AS (SELECT i.a_id, i.b_id, i.inter FROM inter i {pair_filter})
-        SELECT i.a_id, i.b_id, i.inter,
-               sa.sz + sb.sz - i.inter AS un,
-               CAST(i.inter AS DOUBLE) / CAST(sa.sz + sb.sz - i.inter AS DOUBLE) AS jaccard
-        FROM interf i
-        JOIN sz sa ON i.a_id = sa.doc
-        JOIN sz sb ON i.b_id = sb.doc
-        """,
-        **refs,
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.2
 ) -> DataFrame:
-    """Near-dup pairs by exact (df-capped) n-gram Jaccard >= threshold.
+    """Near-dup pairs by exact (df-capped) n-gram Jaccard >= threshold:
+    |A∩B| from the inverted-index self-join and |A|,|B| from per-doc
+    shingle counts, over every pair of docs sharing >= 1 shingle. The
+    df-cap is the candidate pruning: a shingle in more than
+    ``MAX_SHINGLE_DF`` docs never generates a pair.
 
     The shingle table is built PRE-HASHED (no shingle strings exist at
     any point — see _shingle_table(hashed=True)): every downstream use
     here is equality-only (df-cap counts, intersection join, per-doc
     sizes), with the documented 64-bit collision caveat.
 
-    No persist (r14): the sizes now ride the shingle rows into the
-    intersection join (see _jaccard_on), leaving the self-join as the
-    only consumer — its two identical sides share one exchange
-    (ReusedExchange). r15: the df-cap is the hot-hash anti-join
-    (``cap="anti"``, one corpus-wide exchange removed at the price of a
-    second explode pass for the bounded hot list) and the self-join is
-    pinned to sort-merge (see _jaccard_on's MERGE note)."""
+    No persist: the self-join is the shingle table's only consumer, and
+    its two identical sides share one exchange (ReusedExchange). The
+    df-cap is the hot-hash anti-join (``cap="anti"``: one corpus-wide
+    exchange removed at the price of a second explode pass for the
+    bounded hot list)."""
     sh = _shingle_table(df, id_col, text_col, n, persist=False, hashed=True, cap="anti")
-    return _track(_jaccard_on(sh, prehashed=True).filter(F.col("jaccard") >= threshold))
+    # Single spark.sql() construction (PySpark {df} parameter binding):
+    # building this graph Column-by-Column cost ~0.15 s of py4j round
+    # trips PER INVOCATION on the driver (the d02/d03 bench profile);
+    # one SQL parse is a single round trip for the identical plan.
+    #
+    # The intersection join only tests shingle EQUALITY, so it keys on
+    # xxhash64 longs — the co-shingle shuffle carries 8 bytes instead of
+    # full n-gram strings (same trick as sampling.contamination_report;
+    # a 64-bit collision inflates one pair's |A∩B| with probability
+    # ~d^2/2^65 — negligible and deterministic). The hashed shingle
+    # table arrives as longs already — no string ever exists.
+    #
+    # r14 restructure: the per-doc size rides ALONG the shingle rows
+    # (count window on doc) into the self-join, and the pair groupBy
+    # takes min(sz) per side — constant within a (doc) group, so values
+    # are identical to a joined sizes table. The previous shape joined a
+    # per-doc sizes aggregate back onto the pair stream twice; at corpus
+    # scale that sizes table cannot broadcast, so each join was a full
+    # extra exchange of the pair stream. Cost: one 8-byte int per
+    # shingle row through the intersection shuffle.
+    #
+    # /*+ MERGE */ pins the co-shingle self-join to sort-merge (r15,
+    # guide §3.1 "pick the strategy deliberately"): both sides are the
+    # SAME corpus-sized shingle table, but the planner's size estimate
+    # predates the explode/window (at sf1 the "small" side is already
+    # 33 MB against the 10 MB broadcast threshold), so it broadcast the
+    # entire shingle table — a serial driver collect+build on the
+    # query's critical path and a driver-OOM hazard at any real scale.
+    # Measured at sf1/local[32], settled C2 state: 8.4 s (BHJ) -> 3.4 s
+    # (SMJ), and the join stays on the one ReusedExchange
+    # (plans/r15/d02_dedup_ngram_jaccard_after.txt). Identical rows —
+    # join strategy only.
+    out = sh.sparkSession.sql(
+        """
+        WITH shj AS (SELECT doc, sh, count(1) OVER (PARTITION BY doc) AS sz FROM {sh})
+        SELECT a_id, b_id, inter, sza + szb - inter AS un,
+               CAST(inter AS DOUBLE) / CAST(sza + szb - inter AS DOUBLE) AS jaccard
+        FROM (
+          SELECT /*+ MERGE(a) */ a.doc AS a_id, b.doc AS b_id, count(*) AS inter,
+                 min(a.sz) AS sza, min(b.sz) AS szb
+          FROM shj a JOIN shj b ON a.sh = b.sh AND a.doc < b.doc
+          GROUP BY a.doc, b.doc)
+        """,
+        sh=sh,
+    )
+    return _track(out.filter(F.col("jaccard") >= threshold))
 
 
 def minhash_signatures(
@@ -312,6 +244,44 @@ def minhash_signatures(
         F.min(F.substring("hx", 1 + 8 * i, 8)).alias(f"h{i}") for i in range(num_hashes)
     ]
     return hashed.groupBy("doc").agg(*aggs)
+
+
+def _lsh_band_sql(
+    carry: tuple[str, ...], bands: int, rows_per_band: int, max_bucket: int | None
+) -> tuple[str, str]:
+    """SQL text shared by the MinHash band joins: the ``NUM_HASHES``
+    chunk-min aggregate columns over a sha256 ``hx`` column, and the
+    ``banded``/``long``/``capped`` CTEs that turn a ``stats`` relation
+    (doc, the ``carry`` columns, h0..h7) into one (band_idx, band_key)
+    row per doc and band, the ``carry`` columns riding along, each
+    bucket cut to its ``max_bucket`` lowest doc ids (as
+    :func:`_cap_buckets`)."""
+    cols = ", ".join(("doc", *carry))
+    min_cols = ", ".join(
+        f"min(substring(hx, {1 + 8 * i}, 8)) AS h{i}" for i in range(NUM_HASHES)
+    )
+    band_exprs = ", ".join(
+        "md5(concat_ws('|', "
+        + ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
+        + f")) AS b{b}"
+        for b in range(bands)
+    )
+    stack_args = ", ".join(f"{b}, b{b}" for b in range(bands))
+    cap_cte = (
+        """, capped AS (
+          SELECT {cols}, band_idx, band_key FROM (
+            SELECT *, row_number() OVER (
+              PARTITION BY band_idx, band_key ORDER BY doc ASC) AS __rn
+            FROM long) WHERE __rn <= {mb})""".format(cols=cols, mb=int(max_bucket))
+        if max_bucket is not None
+        else ", capped AS (SELECT * FROM long)"
+    )
+    band_ctes = (
+        f"banded AS (SELECT {cols}, {band_exprs} FROM stats),\n"
+        f"        long AS (SELECT {cols}, stack({bands}, {stack_args}) AS (band_idx, band_key)\n"
+        f"                 FROM banded){cap_cte}"
+    )
+    return min_cols, band_ctes
 
 
 def minhash_lsh_pairs(
@@ -399,25 +369,7 @@ def minhash_lsh_pairs(
     # pays k array_intersects (k <= bands; set SIZE is order-invariant,
     # so duplicates collapse identically). Single SQL call, no persist:
     # the self-join's two identical sides share one exchange.
-    min_cols = ", ".join(
-        f"min(substring(hx, {1 + 8 * i}, 8)) AS h{i}" for i in range(NUM_HASHES)
-    )
-    band_exprs = ", ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"h{b * rows_per_band + r}" for r in range(rows_per_band))
-        + f")) AS b{b}"
-        for b in range(bands)
-    )
-    stack_args = ", ".join(f"{b}, b{b}" for b in range(bands))
-    cap_cte = (
-        """, capped AS (
-          SELECT doc, sz, shset, band_idx, band_key FROM (
-            SELECT *, row_number() OVER (
-              PARTITION BY band_idx, band_key ORDER BY doc ASC) AS __rn
-            FROM long) WHERE __rn <= {mb})""".format(mb=int(max_bucket))
-        if max_bucket is not None
-        else ", capped AS (SELECT * FROM long)"
-    )
+    min_cols, band_ctes = _lsh_band_sql(("sz", "shset"), bands, rows_per_band, max_bucket)
     # r15 restructure, measured at sf1 (shuffle_write 212 MB -> 34 MB,
     # identical 727 output rows; guide §2.3 "shuffle keys, not
     # payloads"):
@@ -456,9 +408,7 @@ def minhash_lsh_pairs(
         stats AS (
           SELECT doc, count(*) AS sz, collect_set(shh) AS shset, {min_cols}
           FROM shf GROUP BY doc),
-        banded AS (SELECT doc, sz, shset, {band_exprs} FROM stats),
-        long AS (SELECT doc, sz, shset, stack({bands}, {stack_args}) AS (band_idx, band_key)
-                 FROM banded){cap_cte},
+        {band_ctes},
         j AS (
           SELECT x.doc AS a_id, y.doc AS b_id, x.sz AS sza, y.sz AS szb,
                  CAST(size(array_intersect(x.shset, y.shset)) AS BIGINT) AS inter
@@ -925,56 +875,6 @@ def passage_dedup(
     )
 
 
-def prefix_filter_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.5, n: int = 3
-) -> DataFrame:
-    """PPJoin-style prefix-filtered set-similarity join — the
-    database-literature alternative to MinHash-LSH candidate
-    generation, and unlike LSH it is EXACT: every pair with Jaccard >=
-    ``threshold`` survives (no probabilistic misses).
-
-    Shingles are globally ordered by rarity (document frequency asc);
-    each doc's PREFIX is its |d| - ceil(t*|d|) + 1 rarest shingles. Two
-    docs with Jaccard >= t must share a prefix shingle (the classic
-    prefix-filter bound with o = ceil(t*max(|a|,|b|)) — the per-doc
-    ceil(t*|d|) only lengthens the prefix, preserving completeness), so
-    the candidate join runs on prefixes only: frequent shingles never
-    generate candidates, which is the skew story the df-cap solves more
-    bluntly for LSH. Exact Jaccard verification then makes the filter
-    threshold authoritative.
-
-    Scale shape: the rarity ORDER is consumed directly as the per-doc
-    window's sort key (_df asc, sh asc) — no materialized global rank
-    over the vocabulary (a single-partition row_number that would
-    bottleneck on web-scale vocabularies); prefix assignment shuffles
-    once on doc; the candidate join's key distribution is by
-    construction biased toward rare shingles (small buckets).
-    """
-    sh = _shingle_table(df, id_col, text_col, n)
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    # (_df, sh) is the same strict total order the global rank encoded
-    pos = F.row_number().over(Window.partitionBy("doc").orderBy("_df", "sh"))
-    prefix = (
-        sh.join(dfreq, "sh")
-        .join(sizes, "doc")
-        .withColumn("_pos", pos)
-        .filter(F.col("_pos") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1)
-        .select("doc", "sh")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("a_id"), F.col("b.doc").alias("b_id"))
-        .distinct()
-        .persist()
-    )
-    out = _jaccard_on(sh, pairs=cand, sizes=sizes).filter(
-        F.col("jaccard") >= threshold
-    )
-    return _track(out, sh, cand)
-
-
 def duplicated_spans(
     df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
@@ -1036,38 +936,19 @@ def minhash_estimate_pairs(
     Output: a_id, b_id, n_agree (0..NUM_HASHES), est_jaccard."""
     sh = _shingle_table(df, id_col, text_col, n, persist=False)
     spark = sh.sparkSession
-    min_cols = ", ".join(
-        f"min(substring(hx, {1 + 8 * i}, 8)) AS h{i}" for i in range(NUM_HASHES)
-    )
+    min_cols, band_ctes = _lsh_band_sql((), NUM_BANDS, ROWS_PER_BAND, max_bucket)
     stats = spark.sql(
         f"SELECT doc, {min_cols} "
         "FROM (SELECT doc, sha2(sh, 256) AS hx FROM {sh}) GROUP BY doc",
         sh=sh,
     ).persist()
-    band_exprs = ", ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
-        + f")) AS b{b}"
-        for b in range(NUM_BANDS)
-    )
-    stack_args = ", ".join(f"{b}, b{b}" for b in range(NUM_BANDS))
-    cap_cte = (
-        """, capped AS (
-          SELECT doc, band_idx, band_key FROM (
-            SELECT *, row_number() OVER (
-              PARTITION BY band_idx, band_key ORDER BY doc ASC) AS __rn
-            FROM long) WHERE __rn <= {mb})""".format(mb=int(max_bucket))
-        if max_bucket is not None
-        else ", capped AS (SELECT * FROM long)"
-    )
     agree = " + ".join(
         f"(CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES)
     )
     out = spark.sql(
         f"""
-        WITH banded AS (SELECT doc, {band_exprs} FROM {{stats}}),
-        long AS (SELECT doc, stack({NUM_BANDS}, {stack_args}) AS (band_idx, band_key)
-                 FROM banded){cap_cte},
+        WITH stats AS (SELECT * FROM {{stats}}),
+        {band_ctes},
         cand AS (
           SELECT DISTINCT x.doc AS a_id, y.doc AS b_id
           FROM capped x JOIN capped y
@@ -1076,8 +957,8 @@ def minhash_estimate_pairs(
                CAST({agree} AS INT) AS n_agree,
                CAST(({agree}) AS DOUBLE) / {NUM_HASHES}.0 AS est_jaccard
         FROM cand c
-        JOIN {{stats}} sa ON c.a_id = sa.doc
-        JOIN {{stats}} sb ON c.b_id = sb.doc
+        JOIN stats sa ON c.a_id = sa.doc
+        JOIN stats sb ON c.b_id = sb.doc
         """,
         stats=stats,
     )

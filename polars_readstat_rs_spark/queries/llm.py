@@ -24,7 +24,7 @@ _SHINGLE_N = 3
 
 def _sh_ctes(n: int = _SHINGLE_N) -> str:
     """CTEs: df-capped distinct n-gram shingles + sizes + pair intersections
-    (mirrors operators.dedup._shingle_table / _jaccard_on)."""
+    (mirrors operators.dedup.ngram_jaccard_pairs)."""
     return f"""
     toks AS (SELECT doc_id, string_split(lower(text), ' ') AS words FROM documents),
     sh_all AS (

@@ -101,31 +101,31 @@ def v07_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- d10 prefix-filter join
+# --------------------------------------------- d10 exact Jaccard at t=0.5
 
 _D10_T = 0.5
 
 
 @register(
     "d10_prefix_filter",
-    # prefix filtering is COMPLETE for Jaccard >= t and the verify step
-    # is exact, so the result is definitionally the full-join d02 oracle
-    # restricted to the threshold — the oracle needs no prefix CTEs, and
-    # a hash match proves the pruning lost nothing.
+    # the d02 full-join oracle restricted to the threshold: the operator
+    # keeps every pair at or above it, so the filtered oracle is exact
     oracle=f"""
     WITH {_sh_ctes()}
     SELECT * FROM ({_JACCARD_SELECT}) WHERE jaccard >= {_D10_T!r}
     """,
 )
 def d10_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact set-similarity join via prefix filtering
-    (operators/dedup.py:prefix_filter_pairs) — the non-probabilistic
-    alternative to d03's MinHash-LSH."""
+    """The t=0.5 path of the one exact n-gram Jaccard operator
+    (operators/dedup.py:ngram_jaccard_pairs, which d02 checks at
+    t=0.2). The gate keeps its name from the prefix-filtered join it
+    once ran: that join returned the same rows slower at every measured
+    scale and threshold, because the df-cap already does its pruning."""
     from ..operators import dedup
     from ..tables import load_table as _lt
 
     docs = _lt(spark, sf_dir, "documents")
-    return dedup.prefix_filter_pairs(docs, "doc_id", "text", _D10_T)
+    return dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=_D10_T)
 
 
 # --------------------------------------------- v08 incremental IVF append

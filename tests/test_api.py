@@ -636,12 +636,17 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
     raw = open(full, "rb").read()
     cut = str(tmp_path / "cut_p.por")
     open(cut, "wb").write(raw[: raw.rindex(b"/", 0, len(raw) * 95 // 100)])
-    ds = ReadstatDataSource({"path": cut})
-    reader = ds.reader(ds.schema())
-    with pytest.raises(PorError) as err:
-        for part in reader.partitions():
-            list(reader.read(part))
-    assert cut in str(err.value) and "stream offset" in str(err.value)
+    # a plain 95% cut ends inside the last line's string, which the
+    # 80-column padding completes: the missing 'Z' marker catches it
+    cut95 = str(tmp_path / "cut95_p.por")
+    open(cut95, "wb").write(raw[: len(raw) * 95 // 100])
+    for path, msg in ((cut, "terminator"), (cut95, "'Z' end-of-data marker")):
+        ds = ReadstatDataSource({"path": path})
+        reader = ds.reader(ds.schema())
+        with pytest.raises(PorError, match=msg) as err:
+            for part in reader.partitions():
+                list(reader.read(part))
+        assert path in str(err.value) and "stream offset" in str(err.value), path
 
 
 def _write_format(tmp_path, ext: str, n: int) -> str:

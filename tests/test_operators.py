@@ -1386,38 +1386,33 @@ def test_hopping_windows_replicate_events(spark):
     assert out == [(base + 3 * h, 1), (base + 6 * h, 1)]
 
 
-def test_prefix_filter_complete_and_pruning(spark, sf_dir):
-    """The prefix-filtered join finds EXACTLY the threshold pairs the
-    full inverted-index join finds (completeness), while generating
-    strictly fewer candidate comparisons (pruning)."""
+def test_ngram_jaccard_matches_duckdb_oracle(spark, sf_dir):
+    """The one exact-Jaccard operator returns exactly the DuckDB
+    full-join oracle's (a_id, b_id, inter, un, jaccard) rows at d02's
+    threshold (0.2) and d10's (0.5)."""
+    import duckdb
+
+    from polars_readstat_rs_spark.queries import llm
+
     docs = load_table(spark, sf_dir, "documents").limit(120)
     tweaked = docs.limit(6).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" small tail tweak")).alias("text"),
     )
-    corpus = docs.select("doc_id", "text").union(tweaked)
-
-    full = dedup.ngram_jaccard_pairs(corpus, "doc_id", "text").filter(
-        F.col("jaccard") >= 0.5
-    )
-    pref = dedup.prefix_filter_pairs(corpus, "doc_id", "text", 0.5)
-    want = {(r.a_id, r.b_id, r.jaccard) for r in full.collect()}
-    got = {(r.a_id, r.b_id, r.jaccard) for r in pref.collect()}
-    assert want == got and len(got) >= 6
-    dedup.release_cached(pref)
-
-
-def test_jaccard_on_rejects_sizes_without_pairs(spark, sf_dir):
-    """_jaccard_on's no-pairs path window-carries sizes itself; a
-    caller-supplied `sizes` table without `pairs` must fail loudly
-    instead of being silently dropped (r15 ADVICE fix)."""
-    import pytest
-
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    sh = dedup._shingle_table(docs, "doc_id", "text", 3, persist=False, hashed=True)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    with pytest.raises(ValueError, match="sizes.*without.*pairs"):
-        dedup._jaccard_on(sh, sizes=sizes, prehashed=True)
+    # both engines read the same collected rows
+    pdf = docs.select("doc_id", "text").union(tweaked).toPandas()
+    corpus = spark.createDataFrame(pdf)
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    for t in (0.2, 0.5):
+        want = set(con.execute(
+            f"WITH {llm._sh_ctes()} SELECT * FROM ({llm._JACCARD_SELECT}) WHERE jaccard >= {t!r}"
+        ).fetchall())
+        got = {
+            tuple(r) for r in dedup.ngram_jaccard_pairs(corpus, "doc_id", "text", threshold=t)
+            .select("a_id", "b_id", "inter", "un", "jaccard").collect()
+        }
+        assert got == want and len(got) >= 6, t
 
 
 def test_shingle_table_anti_cap_matches_window_cap(spark):

@@ -266,7 +266,6 @@ def main() -> None:
             "pq_topk": lambda: similarity.pq_topk(
                 emb, emb.filter(F.col("vec_id") < 5), k=10
             ),
-            "prefix_filter": lambda: dedup.prefix_filter_pairs(docs, "doc_id", "text"),
             "pagerank": lambda: graph.pagerank_int(edges, iters=5),
             "span_dedup": lambda: dedup.duplicated_spans(docs, "doc_id", "text"),
             "tfidf_terms": lambda: textstats.tfidf_top_terms(docs),
