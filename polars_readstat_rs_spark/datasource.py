@@ -394,7 +394,7 @@ class ReadstatDataSource(DataSource):
             # file, so each task writes a complete file into the output
             # DIRECTORY and commit only renames — the read side already
             # scans directories partition-per-file (expand_paths)
-            return _MultiPartWriter(path, schema, codec, overwrite)
+            return _MultiPartWriter(path, codec, overwrite)
         if not overwrite and os.path.exists(path):
             # single-file stat formats are not appendable containers: a
             # mode("append") here used to silently OVERWRITE the file.
@@ -856,15 +856,18 @@ class _ReadstatReader(_ReadstatScan):
 
 @dataclass(frozen=True)
 class _Codec:
-    """What a readstat sink needs to know about its format: the part-file
-    extension, the executor-side ``spill(batches, blob) -> sections``,
-    the driver-side ``assemble(target, [(blob, sections), ...])`` and the
-    single-shot ``write_table(table, path)`` of the multifile sink."""
+    """A readstat sink's format: the part-file extension, the Arrow
+    schema of the rows, the executor-side ``spill(batches, blob) ->
+    sections`` and the driver-side ``assemble(target, [(blob, sections),
+    ...], schema)``. That pair is the format's one encoder: the staged
+    sinks split it between executors and the driver, the multifile sink
+    and the single-shot ``write_*`` functions run it on one section
+    (``formats.write_one_section``)."""
 
     ext: str
+    schema: object  # pyarrow.Schema
     spill: Callable
     assemble: Callable
-    write_table: Callable
 
 
 def _writer_codec(fmt: str, options, schema) -> _Codec:
@@ -876,23 +879,18 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
     the executors by value."""
     import json
 
-    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     def _json(name: str):
         return json.loads(options.get(name, "{}"))
 
-    def arrow_schema():
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(schema)
-
+    arrow_schema = to_arrow_schema(schema)
     widths = {k: int(v) for k, v in _json("string_widths").items()}
     value_labels = _json("value_labels")
     variable_labels = _json("variable_labels")
     data_label = options.get("data_label", "")
     dsname = options.get("dsname", "DATA")
     compress = options.get("compress")
-    column_order = [(f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields]
 
     if fmt == "stata":
         # option("dta_version", "117"|"119"): default v118
@@ -904,19 +902,14 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
 
             return spill_partition(batches, blob, declared=widths)
 
-        def assemble(target, parts):
+        def assemble(target, parts, schema):
             from .formats.stata.writer import assemble_dta
 
-            assemble_dta(target, arrow_schema(), parts, value_labels=labels,
-                         variable_labels=variable_labels, declared=widths, version=version)
+            assemble_dta(target, schema, parts, value_labels=labels,
+                         variable_labels=variable_labels, data_label=data_label,
+                         declared=widths, version=version)
 
-        def write_table(table, path):
-            from .formats.stata.writer import write_dta
-
-            write_dta(table, path, value_labels=labels, variable_labels=variable_labels,
-                      version=version)
-
-        return _Codec("dta", spill, assemble, write_table)
+        return _Codec("dta", arrow_schema, spill, assemble)
 
     if fmt == "spss":
         # a .zsav target implies the zlib container; otherwise compress
@@ -934,20 +927,14 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
 
             return spill_sav_partition(batches, blob, declared=widths, compress=comp)
 
-        def assemble(target, parts):
+        def assemble(target, parts, schema):
             from .formats.spss.writer import assemble_sav
 
-            assemble_sav(target, arrow_schema(), parts, value_labels=labels,
+            assemble_sav(target, schema, parts, value_labels=labels,
                          variable_labels=variable_labels, data_label=data_label,
                          user_missing=missing, compress=comp, declared=widths)
 
-        def write_table(table, path):
-            from .formats.spss.writer import write_sav
-
-            write_sav(table, path, value_labels=labels, variable_labels=variable_labels,
-                      data_label=data_label, user_missing=missing, compress=comp)
-
-        return _Codec("zsav" if comp == "zsav" else "sav", spill, assemble, write_table)
+        return _Codec("zsav" if comp == "zsav" else "sav", arrow_schema, spill, assemble)
 
     if fmt == "xport":
         # option("xport_version", "8"): TS140-2 V8 headers, 32-char names
@@ -958,19 +945,14 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
 
             return spill_partition(batches, blob, declared=widths)
 
-        def assemble(target, parts):
-            from .formats.sas.xport import assemble_xpt
+        def assemble(target, parts, schema):
+            from .formats.sas.xport import assemble_xpt, column_order
 
             assemble_xpt(target, parts, dsname=dsname, dslabel=data_label,
-                         column_order=column_order, string_widths=widths, version=version)
+                         column_order=column_order(schema), string_widths=widths,
+                         version=version)
 
-        def write_table(table, path):
-            from .formats.sas.xport import write_xpt
-
-            write_xpt(table, path, dsname=dsname, dslabel=data_label,
-                      string_widths=widths or None, version=version)
-
-        return _Codec("xpt", spill, assemble, write_table)
+        return _Codec("xpt", arrow_schema, spill, assemble)
 
     if fmt == "sas":
         # option("compress", "rle"|"rdc"|"true"): SASYZCRL / SASYZCR2 row
@@ -988,21 +970,15 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
 
             return spill_partition(batches, blob, declared=widths, column_formats=formats)
 
-        def assemble(target, parts):
+        def assemble(target, parts, schema):
             from .formats.sas.bdat_writer import assemble_sas7bdat
+            from .formats.sas.xport import column_order
 
-            assemble_sas7bdat(target, parts, dsname=dsname, column_order=column_order,
+            assemble_sas7bdat(target, parts, dsname=dsname, column_order=column_order(schema),
                               string_widths=widths, variable_labels=variable_labels,
                               compress=comp)
 
-        def write_table(table, path):
-            from .formats.sas.bdat_writer import write_sas7bdat
-
-            write_sas7bdat(table, path, dsname=dsname, string_widths=widths or None,
-                           variable_labels=variable_labels, compress=comp,
-                           column_formats=formats)
-
-        return _Codec("sas7bdat", spill, assemble, write_table)
+        return _Codec("sas7bdat", arrow_schema, spill, assemble)
 
     if fmt == "por":
 
@@ -1011,18 +987,12 @@ def _writer_codec(fmt: str, options, schema) -> _Codec:
 
             return spill_por_partition(batches, blob)
 
-        def assemble(target, parts):
+        def assemble(target, parts, schema):
             from .formats.spss.portable import assemble_por_parts
 
-            assemble_por_parts(target, arrow_schema(), parts, variable_labels, value_labels)
+            assemble_por_parts(target, schema, parts, variable_labels, value_labels)
 
-        def write_table(table, path):
-            from .formats.spss.portable import write_por
-
-            write_por(table, path, variable_labels=variable_labels or None,
-                      value_labels=value_labels or None)
-
-        return _Codec("por", spill, assemble, write_table)
+        return _Codec("por", arrow_schema, spill, assemble)
 
     raise ValueError(
         f"readstat writes .dta, .sav, .xpt, .por or .sas7bdat, not format {fmt!r} "
@@ -1074,7 +1044,7 @@ class _StagedWriter(DataSourceArrowWriter):
     def commit(self, messages):
         import shutil
 
-        self.codec.assemble(self.path, _committed(messages))
+        self.codec.assemble(self.path, _committed(messages), self.codec.schema)
         shutil.rmtree(self.stage_dir, ignore_errors=True)
 
     def abort(self, messages):
@@ -1099,7 +1069,7 @@ class _StagedStreamWriter(_StagedWriter, DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
         os.makedirs(self.path, exist_ok=True)
         final = os.path.join(self.path, f"part-{batchId:05d}.{self.codec.ext}")
-        self.codec.assemble(final + ".tmp_", _committed(messages))
+        self.codec.assemble(final + ".tmp_", _committed(messages), self.codec.schema)
         os.replace(final + ".tmp_", final)
         self.abort(messages, batchId)
 
@@ -1128,51 +1098,46 @@ class _PartFileCommit(WriterCommitMessage):
 
 class _MultiPartWriter(DataSourceArrowWriter):
     """Partitioned DIRECTORY sink (option("multifile","true")): each
-    task single-shot-writes its partition as one complete standalone
-    file of the target format — part-{partitionId}-{uuid}.{ext} — fully
-    executor-side. Two-phase exactly-once: tasks write to dot-tmp names
-    and return them in the commit message; the driver commit() renames
-    exactly the committed set (task retries leave only unreferenced
-    tmps, removed by abort/cleanup). The read side lists the directory
-    and plans one partition per file, so write->read round-trips at any
-    file count.
+    task writes its partition as one complete standalone file of the
+    target format — part-{partitionId}-{uuid}.{ext} — fully
+    executor-side, through the codec's own spill and assemble on one
+    section (``formats.write_one_section``). Two-phase exactly-once:
+    tasks write to dot-tmp names and return them in the commit message;
+    the driver commit() renames exactly the committed set (task retries
+    leave only unreferenced tmps, removed by abort/cleanup). The read
+    side lists the directory and plans one partition per file, so
+    write->read round-trips at any file count.
 
-    Memory shape: a task buffers ITS partition as one Arrow table (the
-    single-shot writers need the full table for width decisions) —
-    bounded by upstream partition sizing, the same contract as columnar
-    writers that buffer a row group.
+    Memory shape: a task buffers ITS partition as one Arrow table (one
+    section, so its global layout is decided in the task) — bounded by
+    upstream partition sizing, the same contract as columnar writers
+    that buffer a row group.
     """
 
-    def __init__(self, path: str, schema, codec: _Codec, overwrite: bool = False):
+    def __init__(self, path: str, codec: _Codec, overwrite: bool = False):
         self.path = path
-        self.schema = schema
         self.codec = codec
         self.overwrite = overwrite
         os.makedirs(path, exist_ok=True)
 
-    def _arrow_schema(self):
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def _write(self, table, path: str) -> None:
+        from .formats import write_one_section
 
-        return to_arrow_schema(self.schema)
+        write_one_section(table, path, self.codec.spill, self.codec.assemble)
 
     def write(self, batches):
         import uuid
 
         from pyspark import TaskContext
 
-        batches = list(batches)
-        table = (
-            pa_lib.Table.from_batches(batches)
-            if batches
-            else pa_lib.Table.from_batches([], schema=self._arrow_schema())
-        )
-        if table.num_rows == 0:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return _PartFileCommit("", "")
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         base = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.{self.codec.ext}"
         tmp = os.path.join(self.path, f".{base}.tmp_")
-        self.codec.write_table(table, tmp)
+        self._write(pa_lib.Table.from_batches(batches), tmp)
         return _PartFileCommit(tmp, os.path.join(self.path, base))
 
     def commit(self, messages):
@@ -1195,8 +1160,8 @@ class _MultiPartWriter(DataSourceArrowWriter):
         if not published:
             # empty result: one zero-row file so directory reads still
             # see the schema (same stance as the single-file writers)
-            self.codec.write_table(
-                pa_lib.Table.from_batches([], schema=self._arrow_schema()),
+            self._write(
+                self.codec.schema.empty_table(),
                 os.path.join(self.path, f"part-00000-empty.{self.codec.ext}"),
             )
 

@@ -23,12 +23,20 @@ Parser modules import lazily (numpy/pyarrow stay out of planning
 workers that never decode), and ``parser()`` looks the module up at
 every call, so a caller that replaces ``module.read_metadata`` (the
 header-cache probes do) is seen everywhere.
+
+Every writer has ONE encoder: the executor-side ``spill`` of Arrow
+batches to record sections and the driver-side ``assemble`` of those
+sections into the file. The single-shot ``write_*`` functions and the
+multifile sink's part files run the same pair on one section
+(``write_one_section``).
 """
 
 from __future__ import annotations
 
 import importlib
 import os
+import tempfile
+from contextlib import suppress
 
 # format name -> (extensions, parser module relative to this package).
 # .sas7bcat catalogs share the sas7bdat page format (src/lib.rs:389).
@@ -64,6 +72,33 @@ def check_format(name: str) -> str:
 def parser(name: str):
     """The parser module of format ``name``."""
     return importlib.import_module(FORMATS[check_format(name)][1], __name__)
+
+
+def write_one_section(table, path: str, spill, assemble) -> None:
+    """Write ``table`` (Arrow table, Spark or pandas DataFrame) to
+    ``path`` through a format's staged encoder: the whole table spilled
+    as ONE section (``spill(batches, blob) -> sections``) to a temp blob
+    beside ``path``, then ``assemble(path, parts, schema)``. The blob
+    goes whatever happens."""
+    import pyarrow as pa
+
+    if hasattr(table, "toArrow"):
+        table = table.toArrow()
+    elif hasattr(table, "to_arrow"):
+        table = table.to_arrow()
+    elif not isinstance(table, pa.Table):
+        table = pa.Table.from_pandas(table, preserve_index=False)
+    fd, blob = tempfile.mkstemp(
+        prefix=f".{os.path.basename(path)}.", suffix=".spill",
+        dir=os.path.dirname(os.path.abspath(path)),
+    )
+    os.close(fd)
+    try:
+        sections = spill(table.combine_chunks().to_batches(), blob)
+        assemble(path, [(blob, sections)] if sections else [], table.schema)
+    finally:
+        with suppress(OSError):
+            os.unlink(blob)
 
 
 def fixed_records(path: str, data_offset: int, record_len: int, start: int, count: int,

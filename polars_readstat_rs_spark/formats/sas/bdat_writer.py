@@ -26,11 +26,12 @@ Layout written (64-bit LE, uncompressed):
   bit_offset+8; numerics are plain LE IEEE doubles (missing = NaN),
   chars are space-padded bytes in the declared encoding.
 
-Distributed write follows the house two-phase shape (XPORT/W1/W2
-pattern): executors spill fixed-width row sections with local string
-widths; the driver commit re-strides each section to the global widths
-and streams pages — one section of memory at a time, no row
-materialization.
+Every write follows the house two-phase shape (XPORT/W1/W2 pattern):
+``spill_partition`` encodes fixed-width row sections with local string
+widths (on the executors, or the whole table as one section for
+``write_sas7bdat``); ``assemble_sas7bdat`` re-strides each section to
+the global widths and streams pages — one section of memory at a time,
+no row materialization.
 """
 
 from __future__ import annotations
@@ -40,7 +41,8 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-from .xport import _sanitize_names
+from .. import write_one_section
+from .xport import _sanitize_names, column_order
 
 _MAGIC = bytes(
     [
@@ -471,44 +473,17 @@ def write_sas7bdat(
     compress: bool = False,
     column_formats: dict[str, str] | None = None,
 ) -> None:
-    """Single-shot writer for an Arrow table / Spark / pandas DataFrame."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    cols, data = encode_row_sections(table, string_widths, column_formats)
-    n = table.num_rows
-    sections = [("", [(0, len(data), n, cols)])] if n else []
-    import os
-    import tempfile
-
-    if not sections:
-        assemble_sas7bdat(
-            path, [],
-            dsname=dsname,
-            column_order=[(c, ch) for c, ch, _, _ in cols],
-            string_widths={c: ln for c, ch, ln, _ in cols if ch} or string_widths,
-            variable_labels=variable_labels,
-        )
-        return
-    fd, blob = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(path)) or ".")
-    try:
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        assemble_sas7bdat(
-            path,
-            [(blob, [(0, len(data), n, cols)])],
-            dsname=dsname,
-            column_order=list(table.column_names),
-            string_widths=string_widths,
-            variable_labels=variable_labels,
-            compress=compress,
-        )
-    finally:
-        try:
-            os.unlink(blob)
-        except OSError:
-            pass
+    """Write an Arrow table (or Spark/pandas DataFrame) as .sas7bdat:
+    one section through ``spill_partition`` + ``assemble_sas7bdat``."""
+    write_one_section(
+        table, path,
+        lambda batches, blob: spill_partition(
+            batches, blob, declared=string_widths, column_formats=column_formats
+        ),
+        lambda target, parts, schema: assemble_sas7bdat(
+            target, parts, dsname, column_order(schema), string_widths, variable_labels, compress
+        ),
+    )
 
 
 # ------------------------------------------------------- RLE compression

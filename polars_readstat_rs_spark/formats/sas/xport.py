@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records
+from .. import fixed_records, write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -585,17 +585,21 @@ def write_xpt(
     version: int = 5,
 ) -> None:
     """Write an Arrow table (or Spark/pandas DataFrame) as XPORT v5 or
-    (``version=8``) TS140-2 V8 with 32-char long names in LABELV8."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    variables, data = encode_sections(table, string_widths)
-    longs = _sanitize_names(list(table.column_names), 32) if version == 8 else None
-    with open(path, "wb") as f:
-        f.write(write_header(variables, dsname, dslabel, version, longs))
-        f.write(data)
-        f.write(b" " * (-len(data) % _REC))
+    (``version=8``) TS140-2 V8 with 32-char long names in LABELV8: one
+    section through ``spill_partition`` + ``assemble_xpt``."""
+    write_one_section(
+        table, path,
+        lambda batches, blob: spill_partition(batches, blob, declared=string_widths),
+        lambda target, parts, schema: assemble_xpt(
+            target, parts, dsname, dslabel, column_order(schema), string_widths, version
+        ),
+    )
+
+
+def column_order(schema: pa.Schema) -> list[tuple[str, bool]]:
+    """``[(name, is_char)]`` of an Arrow schema: the ``column_order``
+    the assemblers take."""
+    return [(f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in schema]
 
 
 def spill_partition(batches, blob_path: str, declared: dict[str, int] | None = None):
@@ -659,7 +663,7 @@ def assemble_xpt(
         shorts = _sanitize_names([n for n, _ in cols])
         for (name, is_char), short in zip(cols, shorts):
             ln = max(1, int((string_widths or {}).get(name, 1))) if is_char else 8
-            variables.append(XportVariable(short, name, is_char, ln, pos))
+            variables.append(XportVariable(short, name if short != name else "", is_char, ln, pos))
             pos += ln
         if not variables:
             raise ValueError("cannot write an empty XPORT file with no schema")
@@ -702,9 +706,11 @@ def assemble_xpt(
                 f"(short {short!r}) which is not in the written schema"
             )
         widths[short] = max(widths[short], int(w))
+    # a truncated name keeps the original in its label (encode_sections)
+    label_of = {short: long for long, short in short_of.items() if short != long}
     variables, pos = [], 0
     for n, c, _ in first:
-        variables.append(XportVariable(n, "", c, widths[n] if c else 8, pos))
+        variables.append(XportVariable(n, label_of.get(n, ""), c, widths[n] if c else 8, pos))
         pos += variables[-1].length
     out_len = pos
 

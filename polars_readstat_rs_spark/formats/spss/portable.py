@@ -41,6 +41,7 @@ from fractions import Fraction
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from .. import write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -727,24 +728,14 @@ def write_header(
     return "".join(out)
 
 
+def _lines(s: str) -> bytes:
+    """``s`` (a whole number of lines long) as 80-character lines."""
+    return "".join(s[i : i + _LINE] + "\n" for i in range(0, len(s), _LINE)).encode("ascii")
+
+
 def _wrap(stream: str) -> bytes:
     # at least one 'Z': the end-of-data marker, then padding
-    stream += "Z" * (_LINE - len(stream) % _LINE)
-    lines = [stream[i : i + _LINE] for i in range(0, len(stream), _LINE)]
-    return ("\n".join(lines) + "\n").encode("ascii")
-
-
-def assemble_por(
-    path: str,
-    header: str,
-    case_blobs: list[str],
-) -> None:
-    """Driver commit: header + concatenated executor case streams,
-    re-wrapped to 80-character lines and 'Z'-padded."""
-    _ = [b for b in case_blobs]
-    stream = header + "".join(case_blobs)
-    with open(path, "wb") as f:
-        f.write(_wrap(stream))
+    return _lines(stream + "Z" * (_LINE - len(stream) % _LINE))
 
 
 def spill_por_partition(batches, blob_path: str) -> list[dict]:
@@ -785,14 +776,15 @@ def assemble_por_parts(
     variables = [_var_of_field(f, widths.get(f.name, 1)) for f in schema]
     header = write_header(variables, variable_labels, value_labels)
     carry = ""
-    with open(path, "w", encoding="ascii", newline="") as out:
+    with open(path, "wb") as out:
 
         def emit(chunk: str) -> None:
+            # whole lines by offset; only the short remainder carries
             nonlocal carry
             carry += chunk
-            while len(carry) >= _LINE:
-                out.write(carry[:_LINE] + "\n")
-                carry = carry[_LINE:]
+            cut = len(carry) - len(carry) % _LINE
+            out.write(_lines(carry[:cut]))
+            carry = carry[cut:]
 
         emit(header)
         for blob, _ in parts:
@@ -802,8 +794,7 @@ def assemble_por_parts(
                     if not chunk:
                         break
                     emit(chunk)
-        # at least one 'Z': the end-of-data marker, then padding
-        out.write(carry.ljust(_LINE, "Z") + "\n")
+        out.write(_wrap(carry))
 
 
 def write_por(
@@ -812,19 +803,11 @@ def write_por(
     variable_labels: dict[str, str] | None = None,
     value_labels: dict[str, dict] | None = None,
 ) -> None:
-    """Single-shot write of an Arrow table (or Spark/pandas DataFrame)."""
-    if hasattr(table, "toArrow"):
-        table = table.toArrow()
-    elif hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    variables = []
-    for i, f in enumerate(table.schema):
-        width = 0
-        if pa.types.is_string(f.type) or pa.types.is_large_string(f.type):
-            col = table.column(i).to_pylist()
-            width = max([len(str(v)) for v in col if v is not None] or [1])
-        variables.append(_var_of_field(f, width))
-    header = write_header(variables, variable_labels, value_labels)
-    assemble_por(path, header, [encode_cases(table)])
+    """Write an Arrow table (or Spark/pandas DataFrame) as .por: one
+    section through ``spill_por_partition`` + ``assemble_por_parts``."""
+    write_one_section(
+        table, path, spill_por_partition,
+        lambda target, parts, schema: assemble_por_parts(
+            target, schema, parts, variable_labels, value_labels
+        ),
+    )

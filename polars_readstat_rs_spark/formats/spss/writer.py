@@ -22,6 +22,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 
+from .. import write_one_section
 from .parser import SAV_MISSING, SPSS_SEC_SHIFT
 
 _MAX_STR = 255
@@ -56,9 +57,8 @@ def _short_names(names: list[str]) -> list[str]:
 
 
 class _Col:
-    def __init__(self, name: str, short: str, arr, declared_len: int | None = None):
+    def __init__(self, name: str, arr, declared_len: int | None = None):
         self.name = name
-        self.short = short
         self.arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
         t = self.arr.type
         n = len(self.arr)
@@ -132,8 +132,8 @@ from dataclasses import dataclass
 
 @dataclass
 class SavSpec:
-    """Column layout for the dictionary — no data attached, so the same
-    builder serves the eager writer and the distributed commit."""
+    """Column layout for the dictionary — no data attached; the commit
+    decides it from section metadata."""
 
     name: str
     short: str
@@ -299,96 +299,28 @@ def write_sav(
     endian: str = "<",
     compress: bool | str = False,
 ) -> None:
-    """``user_missing``: up to 3 discrete user-declared missing doubles
+    """Write an Arrow table (or Spark/pandas DataFrame) as .sav: one
+    section through ``spill_sav_partition`` + ``assemble_sav``.
+    ``user_missing``: up to 3 discrete user-declared missing doubles
     per numeric column (reference W2 / F3 fixture semantics).
     ``endian``: "<" (default) or ">" — big-endian output exists mainly to
     exercise the reader's byte-order handling.
     ``compress``: False = raw fixed-width records; True = bytecode RLE
     (.sav compression=1); "zsav" = the RLE stream wrapped in zlib blocks
     with a ztrailer index (compression=2) — smallest output, and the
-    reader still splits it block-parallel."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    value_labels = value_labels or {}
-    variable_labels = variable_labels or {}
-    user_missing = user_missing or {}
-
-    names = list(table.column_names)
-    shorts = _short_names(names)
-    cols = [_Col(n, s, table.column(i)) for i, (n, s) in enumerate(zip(names, shorts))]
-    nobs = table.num_rows
-
-    specs = [
-        SavSpec(c.name, s, c.is_str, c.string_len, c.width, c.fmt_code, c.seg_units)
-        for c, s in zip(cols, shorts)
-    ]
-    out = bytearray(
-        _dictionary_bytes(
-            specs, nobs, value_labels, variable_labels, data_label, user_missing, endian
-        )
+    reader still splits it block-parallel. The section spills
+    uncompressed and the driver compresses it, so the end-of-data code
+    shares the stream's last control group."""
+    write_one_section(
+        table, path, spill_sav_partition,
+        lambda target, parts, schema: assemble_sav(
+            target, schema, parts, value_labels, variable_labels, data_label,
+            user_missing, compress, endian=endian,
+        ),
     )
-
-    # ---- data (uncompressed, fixed 8-byte segments)
-    case_size = sum(c.width for c in cols)
-    dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(cols))],
-            "formats": [endian + "f8" if not c.is_str else f"S{c.width * 8}" for c in cols],
-            "offsets": np.cumsum([0] + [c.width * 8 for c in cols[:-1]]).tolist(),
-            "itemsize": case_size * 8,
-        }
-    )
-    rec = np.zeros(nobs, dtype=dt)
-    for i, c in enumerate(cols):
-        rec[f"f{i}"] = c.data
-    if compress:
-        if endian != "<":
-            raise ValueError("compress supports little-endian output only")
-        units, codes = _unit_codes(rec, [(c.is_str, c.width) for c in cols])
-        rle = _rle_encode(units, codes)
-        if compress == "zsav":
-            # zlib-block container over the bytecode stream (the reference
-            # READS zsav but never writes it; our reader splits the result
-            # block-parallel via the ztrailer index + checkpoint recovery)
-            out[0:4] = b"$FL3"
-            struct.pack_into("<i", out, 72, 2)
-            out += _zsav_body(bytes(rle), len(out), int(100))
-        else:
-            struct.pack_into("<i", out, 72, 1)  # header: bytecode RLE
-            out += rle
-    else:
-        out += rec.tobytes()
-
-    with open(path, "wb") as f:
-        f.write(out)
 
 
 ZSAV_BLOCK_BYTES = 0x3FF000  # SPSS's standard uncompressed block size
-
-
-def _zsav_body(rle: bytes, zheader_ofs: int, bias: int,
-               block_bytes: int = ZSAV_BLOCK_BYTES) -> bytes:
-    """zheader + zlib blocks + ztrailer for an RLE bytecode stream
-    (layout per the reference reader, src/spss/data.rs:1687-1761)."""
-    import zlib
-
-    blocks = [rle[i : i + block_bytes] for i in range(0, len(rle), block_bytes)] or [b""]
-    comp = [zlib.compress(b) for b in blocks]
-    body_start = zheader_ofs + 24
-    ztrailer_ofs = body_start + sum(len(c) for c in comp)
-    out = bytearray()
-    out += struct.pack("<3Q", zheader_ofs, ztrailer_ofs, 24 + 24 * len(blocks))
-    for c in comp:
-        out += c
-    out += struct.pack("<qqii", bias, 0, block_bytes, len(blocks))
-    uofs, cofs = zheader_ofs, body_start
-    for b, c in zip(blocks, comp):
-        out += struct.pack("<qqii", uofs, cofs, len(b), len(c))
-        uofs += len(b)
-        cofs += len(c)
-    return bytes(out)
 
 
 # ------------------------------------------------- distributed write path
@@ -409,8 +341,8 @@ def encode_sav_section(batch, declared: dict[str, int] | None = None) -> tuple[b
     declared = declared or {}
     names = batch.schema.names
     cols = [
-        _Col(n, n.upper()[:8] or f"V{i}", batch.column(i), declared_len=declared.get(n))
-        for i, (n) in enumerate(names)
+        _Col(n, batch.column(i), declared_len=declared.get(n))
+        for i, n in enumerate(names)
     ]
     n = batch.num_rows
     case_size = sum(c.width for c in cols)
@@ -505,16 +437,22 @@ def assemble_sav(
     user_missing: dict[str, list[float]] | None = None,
     compress: bool | str = False,
     declared: dict[str, int] | None = None,
+    endian: str = "<",
 ) -> None:
     """Driver side: global layout from section metadata, then stream
     every section into the final file. Sections already in the global
     layout (``final``/``rle`` from :func:`spill_sav_partition`) are
     byte-copied; only local-layout sections pay a numpy re-stride (and,
-    under ``compress``, driver-side RLE). ``compress`` accepts False /
+    under ``compress``, driver-side RLE; the last such section carries
+    the end-of-data code in its final group). ``compress`` accepts False /
     True ("bytecode" RLE, compression=1) / "zsav": the same RLE stream
     spooled to a temp file beside the output and wrapped block-by-block
-    in the zlib container (compression=2) — one block of driver memory
-    at a time, so the distributed path stays dataset-size-independent."""
+    in the zlib container (compression=2, magic ``$FL3``) — one block of
+    driver memory at a time, so the staged path stays
+    dataset-size-independent. ``endian=">"`` writes an uncompressed
+    big-endian file (sections are re-strided to big-endian doubles)."""
+    if compress and endian != "<":
+        raise ValueError("compress supports little-endian output only")
     value_labels = value_labels or {}
     variable_labels = variable_labels or {}
     user_missing = user_missing or {}
@@ -556,19 +494,23 @@ def assemble_sav(
     g_dt = np.dtype(
         {
             "names": [f"f{i}" for i in range(len(specs))],
-            "formats": ["<f8" if not c.is_str else f"S{c.width * 8}" for c in specs],
+            "formats": [endian + "f8" if not c.is_str else f"S{c.width * 8}" for c in specs],
             "offsets": np.cumsum([0] + [c.width * 8 for c in specs[:-1]]).tolist(),
             "itemsize": sum(c.width for c in specs) * 8,
         }
     )
     col_infos = [(c.is_str, c.width) for c in specs]
     zsav = compress == "zsav"
+    last = all_secs[-1] if all_secs else None
+    eof_written = False
     with open(path, "wb") as out:
         header = bytearray(
             _dictionary_bytes(
-                specs, nobs, value_labels, variable_labels, data_label, user_missing, "<"
+                specs, nobs, value_labels, variable_labels, data_label, user_missing, endian
             )
         )
+        if zsav:
+            header[0:4] = b"$FL3"
         if compress:
             struct.pack_into("<i", header, 72, 2 if zsav else 1)
         out.write(header)
@@ -588,7 +530,7 @@ def assemble_sav(
             with open(blob_path, "rb") as blob:
                 for sec in secs:
                     blob.seek(sec["rec_off"])
-                    if sec.get("rle") or (sec.get("final") and not compress):
+                    if sec.get("rle") or (sec.get("final") and not compress and endian == "<"):
                         # executor emitted the final (possibly compressed)
                         # byte stream — pure copy, bounded chunks
                         left = sec["rec_len"]
@@ -612,16 +554,17 @@ def assemble_sav(
                                 continue
                             gw = spec.width * 8
                             lw = sec["cols"][i]["width"] * 8
-                            src = local[fld].view(np.uint8).reshape(n, lw)
+                            src = np.ascontiguousarray(local[fld]).view(np.uint8).reshape(n, lw)
                             dst = np.full((n, gw), 0x20, np.uint8)  # space padding
                             dst[:, :lw] = src
                             rec[fld] = np.ascontiguousarray(dst).view(f"S{gw}").reshape(n)
                     if compress:
                         units, codes = _unit_codes(rec, col_infos)
-                        sink.write(_rle_encode(units, codes, final=False))
+                        eof_written = sec is last
+                        sink.write(_rle_encode(units, codes, final=eof_written))
                     else:
                         sink.write(rec.tobytes())
-        if compress:
+        if compress and not eof_written:
             sink.write(bytes([252]) + bytes(7))  # single EOF group
         if zsav:
             _zsav_stream(out, spool, zheader_ofs=len(header))
@@ -696,11 +639,11 @@ def _rle_encode(units: np.ndarray, codes: np.ndarray, final: bool = True) -> byt
 
 def _zsav_stream(out, spool, zheader_ofs: int, bias: int = 100,
                  block_bytes: int = ZSAV_BLOCK_BYTES) -> None:
-    """Streaming counterpart of :func:`_zsav_body` for the distributed
-    commit: the RLE bytecode spool is zlib-compressed one
-    ``block_bytes`` chunk at a time into ``out`` (zheader placeholder
-    patched after the block index is known), so the zsav container
-    never holds more than one block in driver memory."""
+    """The zsav container (layout per the reference reader,
+    src/spss/data.rs:1687-1761): the RLE bytecode spool is
+    zlib-compressed one ``block_bytes`` chunk at a time into ``out``
+    (zheader placeholder patched after the block index is known), so
+    the container never holds more than one block in driver memory."""
     import zlib
 
     spool.seek(0)

@@ -1389,7 +1389,9 @@ def test_hopping_windows_replicate_events(spark):
 def test_ngram_jaccard_matches_duckdb_oracle(spark, sf_dir):
     """The one exact-Jaccard operator returns exactly the DuckDB
     full-join oracle's (a_id, b_id, inter, un, jaccard) rows at d02's
-    threshold (0.2) and d10's (0.5)."""
+    threshold (0.2) and d10's (0.5). Documents cut to their first 35%
+    of words pair with their source below 0.5 but above 0.2, so the two
+    thresholds return different sets."""
     import duckdb
 
     from polars_readstat_rs_spark.queries import llm
@@ -1399,20 +1401,28 @@ def test_ngram_jaccard_matches_duckdb_oracle(spark, sf_dir):
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" small tail tweak")).alias("text"),
     )
+    cut = docs.limit(6).select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.expr("array_join(slice(split(text, ' '), 1, int(size(split(text, ' ')) * 0.35)), ' ')")
+        .alias("text"),
+    )
     # both engines read the same collected rows
-    pdf = docs.select("doc_id", "text").union(tweaked).toPandas()
+    pdf = docs.select("doc_id", "text").union(tweaked).union(cut).toPandas()
     corpus = spark.createDataFrame(pdf)
     con = duckdb.connect()
     con.register("documents", pdf)
+    got = {}
     for t in (0.2, 0.5):
         want = set(con.execute(
             f"WITH {llm._sh_ctes()} SELECT * FROM ({llm._JACCARD_SELECT}) WHERE jaccard >= {t!r}"
         ).fetchall())
-        got = {
+        got[t] = {
             tuple(r) for r in dedup.ngram_jaccard_pairs(corpus, "doc_id", "text", threshold=t)
             .select("a_id", "b_id", "inter", "un", "jaccard").collect()
         }
-        assert got == want and len(got) >= 6, t
+        assert got[t] == want and len(got[t]) >= 6, t
+    assert got[0.5] < got[0.2]
+    assert all(0.2 <= r[4] < 0.5 for r in got[0.2] - got[0.5])
 
 
 def test_shingle_table_anti_cap_matches_window_cap(spark):

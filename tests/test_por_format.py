@@ -197,7 +197,8 @@ def test_user_missing_values(tmp_path):
     hdr = P.write_header([var])
     assert hdr.endswith("F")
     hdr = hdr[:-1] + "8" + P._enc_num(9.0) + "F"
-    P.assemble_por(p, hdr, [P.encode_cases(t)])
+    with open(p, "wb") as f:
+        f.write(P._wrap(hdr + P.encode_cases(t)))
     meta = P.read_metadata(p)
     assert meta.variables[0].missing_values == [9.0]
     out = P.read_table(p)

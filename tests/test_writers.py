@@ -78,3 +78,126 @@ def test_stream_commit_publishes_one_part(tmp_path, ext):
     _, table = _read(str(out / f"part-00007.{ext}"))
     assert [float(v) for v in table.column("id").to_pylist()] == list(map(float, range(100)))
     assert table.column("s").to_pylist() == TABLE.column("s").to_pylist()
+
+
+# the single-shot writer of each sink case; every sink runs the same
+# spill + assemble pair, so the three write paths give the same bytes
+def _write_single(ext, table, path, **kw):
+    from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
+    from polars_readstat_rs_spark.formats.spss.portable import write_por
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+    from polars_readstat_rs_spark.formats.stata.writer import write_dta
+
+    writer = {"dta": write_dta, "sav": write_sav, "zsav": write_sav, "xpt": write_xpt,
+              "por": write_por, "sas7bdat": write_sas7bdat}[ext]
+    writer(table, path, **kw)
+
+
+SINK_CASES = {
+    "dta": ({}, {}),
+    "sav": ({}, {}),
+    "bytecode-sav": ({"compress": "true"}, {"compress": True}),
+    "zsav": ({"compress": "zsav"}, {"compress": "zsav"}),
+    "xpt": ({}, {}),
+    "por": ({}, {}),
+    "sas7bdat": ({}, {}),
+}
+
+
+@pytest.mark.parametrize("case", SINK_CASES)
+def test_sinks_write_identical_files(tmp_path, case):
+    """write_X, a single-file sink commit of two spilled partitions and
+    a multifile part of one partition write byte-identical files. The
+    first partition is 40 rows, so a bytecode stream's 8-code control
+    groups (each partition's stream is padded to one) fall on the same
+    boundaries in all three."""
+    opts, kw = SINK_CASES[case]
+    ext = case.rsplit("-", 1)[-1]
+    fmt = {**FORMATS, "zsav": "spss"}[ext]
+    single = str(tmp_path / f"single.{ext}")
+    _write_single(ext, TABLE, single, **kw)
+
+    staged = str(tmp_path / f"staged.{ext}")
+    w = ReadstatDataSource({"path": staged, **opts}).writer(SCHEMA, True)
+    w.commit([w.write(iter(TABLE.slice(0, 40).to_batches())),
+              w.write(iter(TABLE.slice(40).to_batches()))])
+
+    multi = tmp_path / "multi"
+    m = ReadstatDataSource({"path": str(multi), "format": fmt, "multifile": "true", **opts})
+    mw = m.writer(SCHEMA, True)
+    mw.commit([mw.write(iter(TABLE.to_batches(max_chunksize=30)))])
+    (part,) = multi.iterdir()
+    assert part.name.endswith(f".{ext}")
+
+    want = open(single, "rb").read()
+    assert open(staged, "rb").read() == want
+    assert part.read_bytes() == want
+    assert want.startswith(b"$FL3") == (ext == "zsav")
+    assert not [f for f in os.listdir(tmp_path) if f.endswith(".spill") or "._stage_" in f]
+
+
+def test_zsav_sinks_write_fl3_magic(tmp_path):
+    """A zlib-compressed .sav starts with the $FL3 magic from the
+    single-file sink (a .zsav path) and the stream sink alike."""
+    path = str(tmp_path / "out.zsav")
+    w = ReadstatDataSource({"path": path}).writer(SCHEMA, True)
+    w.commit([w.write(iter(TABLE.to_batches()))])
+    out = tmp_path / "sink"
+    opts = {"path": str(out), "format": "spss", "compress": "zsav"}
+    s = ReadstatDataSource(opts).streamWriter(SCHEMA, True)
+    s.commit([s.write(iter(TABLE.to_batches()))], 0)
+    for p in (path, str(out / "part-00000.zsav")):
+        assert open(p, "rb").read(4) == b"$FL3"
+        _, table = _read(p)
+        assert table.column("s").to_pylist() == TABLE.column("s").to_pylist()
+
+
+def test_sav_sections_with_different_string_widths(tmp_path):
+    """Sections whose string columns are narrower than the global width
+    re-stride beside a numeric column (space-padded), compressed or not."""
+    for comp in ("false", "true"):
+        path = str(tmp_path / f"w_{comp}.sav")
+        w = ReadstatDataSource({"path": path, "compress": comp}).writer(SCHEMA, True)
+        wide = TABLE.slice(50).set_column(2, "s", pa.array(["a much longer value"] * 50))
+        w.commit([w.write(iter(TABLE.slice(0, 50).to_batches())), w.write(iter(wide.to_batches()))])
+        _, table = _read(path)
+        assert table.column("s").to_pylist() == TABLE.column("s").to_pylist()[:50] + ["a much longer value"] * 50
+        assert table.column("x").to_pylist() == TABLE.column("x").to_pylist()
+
+
+def test_write_sav_long_string_table_in_chunks(tmp_path):
+    """A two-chunk table with a string over 255 bytes is one section to
+    write_sav, so it needs no string_widths declaration (two undeclared
+    staged sections of such a column do)."""
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+
+    long = "v" * 300
+    t = pa.concat_tables([
+        pa.table({"k": pa.array([1.0, 2.0]), "s": pa.array(["short", long])}),
+        pa.table({"k": pa.array([3.0]), "s": pa.array([long + "w"])}),
+    ])
+    assert t.column("s").num_chunks == 2
+    path = str(tmp_path / "long.sav")
+    write_sav(t, path)
+    _, back = _read(path)
+    assert back.column("s").to_pylist() == ["short", long, long + "w"]
+
+    w = ReadstatDataSource({"path": str(tmp_path / "staged.sav")}).writer(
+        _from_arrow_schema(t.schema), True)
+    msgs = [w.write(iter(t.slice(0, 1).to_batches())), w.write(iter(t.slice(1).to_batches()))]
+    with pytest.raises(ValueError, match="require a string_widths declaration"):
+        w.commit(msgs)
+
+
+@pytest.mark.parametrize("ext", ["dta", "sav", "xpt"])
+def test_sinks_write_the_data_label(tmp_path, ext):
+    """option("data_label") reaches the file header in every format
+    that has one, Stata included."""
+    from polars_readstat_rs_spark import formats
+
+    path = str(tmp_path / f"lab.{ext}")
+    w = ReadstatDataSource({"path": path, "data_label": "survey wave 3"}).writer(SCHEMA, True)
+    w.commit([w.write(iter(TABLE.to_batches()))])
+    meta = formats.parser(formats.format_of(path)).read_metadata(path)
+    assert getattr(meta, "dataset_label" if ext == "xpt" else "data_label") == "survey wave 3"
