@@ -29,6 +29,12 @@ batches to record sections and the driver-side ``assemble`` of those
 sections into the file. The single-shot ``write_*`` functions and the
 multifile sink's part files run the same pair on one section
 (``write_one_section``).
+
+Fixed-width records are shared too: every fixed-width parser reads its
+row ranges through ``fixed_records``, and every format's fixed-width
+string cells go through ONE codec, ``fixed_width_bytes`` (encode: pad
+each value's bytes to the column width) and ``fixed_width_strings``
+(decode: trim the padding back off by the format's rule).
 """
 
 from __future__ import annotations
@@ -123,3 +129,93 @@ def fixed_records(path: str, data_offset: int, record_len: int, start: int, coun
                 )
             yield decode(raw, start + done)
             done += take
+
+
+def fixed_width_bytes(arr, width: int = 1, pad: int = 0):
+    """Arrow string/binary array (or ChunkedArray) -> ``(n, w)`` uint8
+    matrix of each value's bytes padded with ``pad``, where ``w =
+    max(widest value, width, 1)``. Nulls become empty values. No per-row
+    Python: each row's bytes are a prefix of its row, so the packed data
+    buffer lands with one boolean-mask assignment."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    big = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    a = arr.cast(pa.large_binary() if big else pa.binary())
+    if a.null_count:
+        a = a.fill_null(b"")
+    n = len(a)
+    off = np.frombuffer(a.buffers()[1], np.int64 if big else np.int32)[a.offset : a.offset + n + 1]
+    lens = np.diff(off)
+    w = max(int(lens.max()) if n else 0, width, 1)
+    out = np.full((n, w), pad, np.uint8)
+    if n and off[n] > off[0]:
+        data = np.frombuffer(a.buffers()[2], np.uint8)
+        out[np.arange(w) < lens[:, None]] = data[off[0] : off[n]]
+    return out
+
+
+def fixed_width_strings(u8, encoding: str, null_empty: bool, nul_terminated: bool):
+    """``(n, w)`` uint8 matrix of fixed-width cells -> Arrow strings.
+
+    ``nul_terminated`` (Stata, SAS, XPORT; the reference's C-string rule,
+    src/stata/data.rs:818-835, src/sas/value.rs:94-120): the value ends at
+    the first NUL, then trailing spaces are trimmed. Otherwise (SPSS,
+    src/spss/data.rs:840-843) only the trailing run of spaces and NULs
+    is trimmed; leading whitespace and interior NULs are kept. Empty
+    values become null when ``null_empty``. Values that are not valid in
+    ``encoding`` fall back to latin-1 one by one (files sometimes declare
+    UTF-8 but hold legacy bytes); otherwise no per-row Python.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    n, w = u8.shape
+    idx = np.arange(w)
+    if w == 0:
+        length = np.zeros(n, np.int64)
+    else:
+        rows = np.arange(n)
+        is_nul = u8 == 0
+        keep = ~is_nul & (u8 != 0x20)
+        if nul_terminated:
+            # argmax + single-element gather instead of a full .any() reduce
+            fn = is_nul.argmax(axis=1)
+            keep &= idx[None, :] < np.where(is_nul[rows, fn], fn, w)[:, None]
+        last = keep[:, ::-1].argmax(axis=1)
+        length = np.where(keep[rows, w - 1 - last], w - last, 0).astype(np.int64)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(length, out=offsets[1:])
+    # only trailing bytes are trimmed, so each value is a PREFIX of its
+    # row and the packed data buffer is one boolean-mask gather
+    data = np.ascontiguousarray(u8)[idx[None, :] < length[:, None]]
+    mask = length == 0 if null_empty else None
+    if encoding == "utf-8" or not (data & 0x80).any():
+        try:
+            arr = pa.Array.from_buffers(
+                pa.large_binary(), n,
+                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data.tobytes())],
+            ).cast(pa.string())
+            if mask is not None and mask.any():
+                # imported here: a decode worker without empty values
+                # never pays pyarrow.compute's ~50 ms first import
+                import pyarrow.compute as pc
+
+                arr = pc.if_else(pa.array(~mask), arr, pa.scalar(None, pa.string()))
+            return arr
+        except pa.ArrowInvalid:
+            pass  # declared UTF-8 but invalid payload -> per-value fallback
+    blob = data.tobytes()
+    vals = []
+    for i in range(n):
+        if mask is not None and mask[i]:
+            vals.append(None)
+            continue
+        chunk = blob[offsets[i] : offsets[i + 1]]
+        try:
+            vals.append(chunk.decode(encoding))
+        except (UnicodeDecodeError, LookupError):
+            vals.append(chunk.decode("latin-1"))
+    return pa.array(vals, type=pa.string())

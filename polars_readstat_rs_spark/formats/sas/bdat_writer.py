@@ -41,7 +41,7 @@ import struct
 import numpy as np
 import pyarrow as pa
 
-from .. import write_one_section
+from .. import fixed_width_bytes, write_one_section
 from .xport import _sanitize_names, column_order
 
 _MAGIC = bytes(
@@ -83,13 +83,8 @@ def encode_row_sections(
         col = table.column(name).combine_chunks()
         typ = table.schema.field(name).type
         if pa.types.is_string(typ) or pa.types.is_large_string(typ):
-            enc = [(x or "").encode("utf-8", "replace") for x in col.to_pylist()]
-            width = max([len(e) for e in enc] + [int((string_widths or {}).get(name, 1)), 1])
-            buf = np.full((n, width), 0x20, dtype=np.uint8)
-            for i, e in enumerate(enc):
-                b = e[:width]
-                buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-            cols.append((short, True, width, (column_formats or {}).get(name, "")))
+            buf = fixed_width_bytes(col, int((string_widths or {}).get(name, 1)), 0x20)
+            cols.append((short, True, buf.shape[1], (column_formats or {}).get(name, "")))
             parts.append(buf)
             continue
         if pa.types.is_timestamp(typ):

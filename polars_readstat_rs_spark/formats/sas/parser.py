@@ -35,6 +35,7 @@ from dataclasses import dataclass, field, replace
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from .. import fixed_width_strings
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -925,12 +926,8 @@ def _decode_column(arr, c: Column, meta: SasMetadata, opts: ReadOptions) -> pa.A
     u8 = np.ascontiguousarray(arr).view(np.uint8).reshape(-1, c.length) if c.length else np.zeros((len(arr), 0), np.uint8)
     n = len(u8)
     if c.is_char:
-        from ..stata.parser import fixed_width_strings
-
-        # SAS strings share the C-string semantics of the stata reader:
-        # stop at first NUL, trim trailing spaces, "" -> null.
         s = fixed_width_strings(
-            u8, meta.encoding, null_empty=opts.missing_string_as_null, trim_spaces=True
+            u8, meta.encoding, null_empty=opts.missing_string_as_null, nul_terminated=True
         )
         cat_fmt = opts.catalog_format_for(c)
         if cat_fmt is not None:

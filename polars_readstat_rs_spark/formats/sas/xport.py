@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records, write_one_section
+from .. import fixed_records, fixed_width_bytes, fixed_width_strings, write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -40,6 +40,7 @@ pa = lazy_import("pyarrow", globals(), "pa")
 
 _REC = 80
 _NAMESTR = 140
+_MAX_CHAR = 32767  # NAMESTR nlng is a signed 16-bit length
 _LIB_HDR = b"HEADER RECORD*******LIBRARY HEADER RECORD!!!!!!!"
 _MEM_HDR = b"HEADER RECORD*******MEMBER  HEADER RECORD!!!!!!!"
 _DSC_HDR = b"HEADER RECORD*******DSCRPTR HEADER RECORD!!!!!!!"
@@ -226,6 +227,15 @@ def read_metadata(path: str) -> XportMetadata:
     row_length = sum(v.length for v in variables)
     if row_length <= 0:
         raise ValueError(f"{path!r}: zero-width observation record")
+    # the row count comes from the file size, so a cut is only visible
+    # as a file that is not whole 80-byte records (a cut exactly on a
+    # record boundary is not: XPORT stores no observation count)
+    if size % _REC:
+        raise EOFError(
+            f"truncated file {path!r}: {size} bytes is not a whole number of "
+            f"{_REC}-byte records (the next record boundary is byte offset "
+            f"{size + (-size % _REC)})"
+        )
     total = size - data_offset
     n = total // row_length
     # trailing-blank padding: the data section is space-padded to an
@@ -385,14 +395,10 @@ def read_partition(
                 continue
             colbytes = rows[:, v.position : v.position + v.length]
             if v.is_char:
-                flat = colbytes.tobytes()
-                vals = [
-                    flat[i * v.length : (i + 1) * v.length].rstrip(b" ").decode("ascii", "replace")
-                    for i in range(take)
-                ]
-                if opts.missing_string_as_null:
-                    vals = [s if s else None for s in vals]
-                arrays.append(pa.array(vals, type=pa.string()))
+                # XPORT declares no encoding: UTF-8, latin-1 per invalid value
+                arrays.append(fixed_width_strings(
+                    colbytes, "utf-8", opts.missing_string_as_null, nul_terminated=True
+                ))
                 names.append(v.name)
             else:
                 vals, nullmask, tags = _ibm_to_ieee(colbytes, v.length)
@@ -463,6 +469,8 @@ def encode_sections(
     """(variables, raw fixed-width record bytes) for a table chunk —
     the concatenatable unit the distributed writer needs: record bytes
     from different chunks of the same schema concatenate directly."""
+    import pyarrow.compute as pc
+
     n = table.num_rows
     cols = []
     pos = 0
@@ -472,16 +480,16 @@ def encode_sections(
         col = table.column(name).combine_chunks()
         typ = table.schema.field(name).type
         if pa.types.is_string(typ) or pa.types.is_large_string(typ):
-            pylist = col.to_pylist()
-            enc = [(x or "").encode("ascii", "replace") for x in pylist]
-            width = max(
-                [len(e) for e in enc] + [int((string_widths or {}).get(name, 1)), 1]
-            )
-            buf = np.zeros((n, width), dtype=np.uint8)
-            buf[:] = 0x20
-            for i, e in enumerate(enc):
-                b = e[:width]
-                buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
+            # XPORT is ASCII: every non-ASCII code point becomes one '?',
+            # the bytes str.encode("ascii", "replace") gives
+            ascii_col = pc.replace_substring_regex(col, r"[^\x00-\x7f]", "?")
+            buf = fixed_width_bytes(ascii_col, int((string_widths or {}).get(name, 1)), 0x20)
+            width = buf.shape[1]
+            if width > _MAX_CHAR:
+                raise ValueError(
+                    f"column {name!r}: character width {width} exceeds the XPORT "
+                    f"limit of {_MAX_CHAR} bytes"
+                )
             variables.append(
                 XportVariable(short, name if short != name else "", True, width, pos)
             )

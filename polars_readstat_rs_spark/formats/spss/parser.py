@@ -32,13 +32,14 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records
+from .. import fixed_records, fixed_width_strings
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
 # their ~140 ms import cost — see _lazy.py
 np = lazy_import("numpy", globals(), "np")
 pa = lazy_import("pyarrow", globals(), "pa")
+pc = lazy_import("pyarrow.compute", globals(), "pc")
 
 # plain ints (not np.uint64) so the module imports numpy-free; numpy
 # comparisons/assignments against uint64 arrays accept Python ints of
@@ -882,24 +883,10 @@ def _decode_column(col, v: Variable, meta: SpssMetadata, opts: ReadOptions) -> p
             return pa.array(ns, mask=mask)
         return pa.array(vals, mask=mask)
 
-    # string column
-    u8 = np.ascontiguousarray(col).view(np.uint8).reshape(-1, v.width * 8)
-    u8 = _vls_squeeze(u8, v)
-    cut = v.string_len if 0 < v.string_len <= u8.shape[1] else u8.shape[1]
-    u8 = u8[:, :cut]
-    vals = _decode_strings(u8, meta.encoding)
-    missing_set = set(v.missing_strings) if opts.user_missing_as_null else set()
-    out = []
-    for s in vals:
-        if opts.missing_string_as_null and not s:
-            out.append(None)
-        elif s in missing_set:
-            out.append(None)
-        elif use_labels and s in labels:
-            out.append(labels[s])
-        else:
-            out.append(s)
-    return pa.array(out, type=pa.string())
+    s = _strings(col, v, meta, opts.missing_string_as_null)
+    if opts.user_missing_as_null and v.missing_strings:
+        s = _null_where(s, _is_in(s, v.missing_strings))
+    return _label_strings(s, labels) if use_labels else s
 
 
 def _vls_squeeze(u8: np.ndarray, v) -> np.ndarray:
@@ -917,23 +904,6 @@ def _vls_squeeze(u8: np.ndarray, v) -> np.ndarray:
         parts.append(u8[:, off : off + take])
         off += w
     return np.hstack(parts)
-
-
-def _decode_strings(u8: np.ndarray, encoding: str) -> list[str]:
-    """Decode with the reference's data-string trim: strip only the
-    trailing run of spaces/NULs (src/spss/data.rs:840-843) — leading
-    whitespace and interior control characters are significant."""
-    n = len(u8)
-    blob = u8.tobytes()
-    w = u8.shape[1] if n else 0
-    out = []
-    for i in range(n):
-        chunk = blob[i * w : (i + 1) * w].rstrip(b" \0")
-        try:
-            out.append(chunk.decode(encoding))
-        except (UnicodeDecodeError, LookupError):
-            out.append(chunk.decode("latin-1"))
-    return out
 
 
 def _indicator_column(col, v: Variable, meta: SpssMetadata, use_labels: bool = True) -> pa.Array:
@@ -969,14 +939,40 @@ def _indicator_column(col, v: Variable, meta: SpssMetadata, use_labels: bool = T
 def _string_indicator_column(col, v, meta, use_labels: bool = True) -> pa.Array:
     """Declared-missing-string indicator: the declared value's label if
     one exists, else the string itself; null when not user-missing."""
+    s = _strings(col, v, meta, null_empty=False)
+    labels = meta.value_labels.get(v.value_label, {}) if use_labels else {}
+    return _null_where(_label_strings(s, labels), pc.invert(_is_in(s, v.missing_strings)))
+
+
+def _strings(col, v, meta: SpssMetadata, null_empty: bool) -> pa.Array:
+    """A string variable's record slots decoded with the reference's
+    data-string trim: only the trailing run of spaces/NULs goes
+    (src/spss/data.rs:840-843); leading whitespace and interior control
+    characters are significant."""
     u8 = np.ascontiguousarray(col).view(np.uint8).reshape(len(col), -1)
     u8 = _vls_squeeze(u8, v)
     cut = v.string_len if 0 < v.string_len <= u8.shape[1] else u8.shape[1]
-    vals = _decode_strings(u8[:, :cut], meta.encoding)
-    labels = meta.value_labels.get(v.value_label, {}) if use_labels else {}
-    missing = set(v.missing_strings)
-    out = [labels.get(s, s) if s in missing else None for s in vals]
-    return pa.array(out, type=pa.string())
+    return fixed_width_strings(u8[:, :cut], meta.encoding, null_empty, nul_terminated=False)
+
+
+def _is_in(s: pa.Array, values: list[str]) -> pa.Array:
+    return pc.is_in(s, value_set=pa.array(values, pa.string()))
+
+
+def _null_where(s: pa.Array, mask: pa.Array) -> pa.Array:
+    """``s`` with null where ``mask`` holds. A take, not an if_else, so
+    the nulled values' bytes leave the data buffer too."""
+    return s.take(pa.array(np.arange(len(s)), mask=np.asarray(mask)))
+
+
+def _label_strings(s: pa.Array, labels: dict) -> pa.Array:
+    """Each value with a string value label replaced by its label."""
+    keys = [k for k in labels if isinstance(k, str)]
+    if not keys:
+        return s
+    idx = pc.index_in(s, value_set=pa.array(keys, pa.string()))
+    named = pa.array([labels[k] for k in keys], pa.string()).take(idx)
+    return pc.if_else(pc.is_null(idx), s, named)
 
 
 def _labeled_numeric(vals, bits, mask, labels: dict) -> pa.Array:

@@ -21,8 +21,9 @@ import struct
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from .. import write_one_section
+from .. import fixed_width_bytes, write_one_section
 from .parser import SAV_MISSING, SPSS_SEC_SHIFT
 
 _MAX_STR = 255
@@ -65,8 +66,7 @@ class _Col:
         self.null_mask = ~np.asarray(self.arr.is_valid()) if self.arr.null_count else np.zeros(n, bool)
         self.fmt_code = 5  # F (plain numeric)
         if pa.types.is_string(t) or pa.types.is_large_string(t):
-            vals = [(x or "").encode("utf-8") for x in self.arr.to_pylist()]
-            w = max(max((len(b) for b in vals), default=1), 1)
+            w = max(pc.max(pc.binary_length(self.arr)).as_py() or 0, 1)
             if w > _MAX_VLS:
                 raise ValueError(
                     f"column {name}: string values over {_MAX_VLS} bytes exceed "
@@ -85,24 +85,21 @@ class _Col:
             if w <= _MAX_STR:
                 self.seg_units = None
                 self.width = (w + 7) // 8
-                pad_w = self.width * 8
-                self.data = np.array([b.ljust(pad_w, b" ") for b in vals], dtype=f"S{pad_w}")
-                return
-            # very long string (beyond the reference's 255-byte writer
-            # limit): SPSS subtype-14 segmentation — non-final segments
-            # are 255-byte variables whose record slot (256 bytes) holds
-            # 252 DATA bytes + padding; the final segment is exact.
-            self.seg_units = _vls_seg_units(w)
-            self.width = sum(self.seg_units)
-            nseg = len(self.seg_units)
-            rows = []
-            for b in vals:
-                chunks = []
-                for k, su in enumerate(self.seg_units):
-                    piece = b[252 * k : 252 * k + (252 if k < nseg - 1 else su * 8)]
-                    chunks.append(piece.ljust(su * 8, b" "))
-                rows.append(b"".join(chunks))
-            self.data = np.array(rows, dtype=f"S{self.width * 8}")
+                u8 = fixed_width_bytes(self.arr, self.width * 8, 0x20)
+            else:
+                # very long string (beyond the reference's 255-byte writer
+                # limit): SPSS subtype-14 segmentation — the k non-final
+                # segments are 255-byte variables whose record slot (256
+                # bytes) holds 252 DATA bytes + padding; the final segment
+                # is exact.
+                self.seg_units = _vls_seg_units(w)
+                self.width = sum(self.seg_units)
+                k = len(self.seg_units) - 1
+                flat = fixed_width_bytes(self.arr, 252 * k + self.seg_units[-1] * 8, 0x20)
+                u8 = np.full((n, self.width * 8), 0x20, np.uint8)
+                u8[:, : 256 * k].reshape(n, k, 256)[:, :, :252] = flat[:, : 252 * k].reshape(n, k, 252)
+                u8[:, 256 * k :] = flat[:, 252 * k :]
+            self.data = u8.view(f"S{self.width * 8}").reshape(n)
             return
         self.is_str = False
         self.string_len = 0

@@ -44,7 +44,7 @@ import warnings
 import numpy as np
 import pyarrow as pa
 
-from .. import write_one_section
+from .. import fixed_width_bytes, write_one_section
 from .parser import DAY_MS, STATA_EPOCH_OFFSET_DAYS, STATA_EPOCH_OFFSET_MS  # noqa: F401
 
 _MISS_I8 = 101
@@ -93,38 +93,6 @@ def _max_byte_width(arr) -> int:
         return 0
     w = pa.compute.max(pa.compute.binary_length(arr)).as_py()
     return int(w) if w is not None else 0
-
-
-def _fixed_width_bytes(arr: pa.Array) -> tuple[np.ndarray, int]:
-    """Arrow string/binary array -> (numpy S{w} array, w) without per-row
-    Python. Nulls become empty strings (Stata convention)."""
-    a = arr
-    if isinstance(a, pa.ChunkedArray):
-        a = a.combine_chunks()
-    big = pa.types.is_large_string(a.type) or pa.types.is_large_binary(a.type)
-    a = a.cast(pa.large_binary() if big else pa.binary()).fill_null(b"")
-    n = len(a)
-    if n == 0:
-        return np.zeros(0, dtype="S1"), 0
-    off_dt = np.int64 if big else np.int32
-    off = np.frombuffer(a.buffers()[1], dtype=off_dt)[a.offset : a.offset + n + 1]
-    data_buf = a.buffers()[2]
-    data = np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None else np.zeros(0, np.uint8)
-    lens = np.diff(off).astype(np.int64)
-    w = int(lens.max()) if n else 0
-    if w == 0:
-        return np.zeros(n, dtype="S1"), 0
-    out = np.zeros((n, w), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        rows = np.repeat(np.arange(n, dtype=np.int64), lens)
-        # char position inside its own string, then gather by absolute offset
-        within = np.arange(total, dtype=np.int64) - np.repeat(
-            np.concatenate(([0], np.cumsum(lens[:-1]))), lens
-        )
-        src = np.repeat(off[:-1].astype(np.int64), lens) + within
-        out[rows, within] = data[src]
-    return out.reshape(n * w).view(f"S{w}"), w
 
 
 class _Col:
@@ -520,7 +488,6 @@ def encode_section(
                 col_metas.append({"kind": "strl", "np": "V8", "width": 8})
                 datas.append(refs.view("V8"))
             else:
-                sbytes, wmax = _fixed_width_bytes(arr)
                 w = max(1, wmax)
                 dw = declared.get(f.name)
                 if dw is not None:
@@ -531,9 +498,7 @@ def encode_section(
                         )
                     w = max(1, min(int(dw), _MAX_STR))
                 col_metas.append({"kind": "str", "np": f"S{w}", "width": w})
-                datas.append(
-                    sbytes if sbytes.dtype == np.dtype(f"S{w}") else sbytes.astype(f"S{w}")
-                )
+                datas.append(fixed_width_bytes(arr, w).view(f"S{w}").reshape(n))
         else:
             c = _Col(f.name, arr)
             col_metas.append(

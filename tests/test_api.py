@@ -581,15 +581,19 @@ def test_corrupt_inputs_fail_loudly(tmp_path):
 
     from polars_readstat_rs_spark.datasource import ReadstatDataSource
     from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
     from polars_readstat_rs_spark.formats.spss.writer import write_sav
     from polars_readstat_rs_spark.formats.stata.writer import write_dta
 
     n = 4000
     t = pa.table({"a": np.arange(n, dtype=np.float64), "s": [f"v{i}" for i in range(n)]})
+    # an .xpt holds no row count: a cut shows as a file that is not whole
+    # 80-byte records (a cut on a record boundary stays undetectable)
     writers = {"d.dta": write_dta, "u.sav": write_sav,
                "c.sav": partial(write_sav, compress=True), "b.sas7bdat": write_sas7bdat,
                "r.sas7bdat": partial(write_sas7bdat, compress="RLE"),
-               "x.sas7bdat": partial(write_sas7bdat, compress="RDC")}
+               "x.sas7bdat": partial(write_sas7bdat, compress="RDC"),
+               "v5.xpt": write_xpt, "v8.xpt": partial(write_xpt, version=8)}
     for name, write in writers.items():
         full = str(tmp_path / name)
         write(t, full)

@@ -395,3 +395,104 @@ def test_dta_strl_sections_property_v118_v119(texts, version, tmp_path_factory):
     assert got == want
     ref = pd.read_stata(out, convert_categoricals=False)
     assert ["" if pd.isna(x) else x for x in ref["s"]] == want
+
+
+# ------------------------------------- the shared fixed-width string codec
+#
+# The per-value loops the formats used before they shared one codec are
+# the oracles here: pad each value's bytes; cut at the first NUL then
+# trim trailing spaces (Stata, SAS, XPORT) or trim only the trailing
+# run of spaces and NULs (SPSS); decode, else latin-1.
+
+_cells = st.one_of(
+    st.none(),
+    st.text(alphabet=st.sampled_from(["a", "z", " ", "\x00", "é", "日", "\x7f"]), max_size=12),
+)
+
+
+def _oracle_bytes(vals, width, pad):
+    enc = [(v or "").encode("utf-8") for v in vals]
+    w = max([len(e) for e in enc] + [width, 1])
+    return [e + bytes([pad]) * (w - len(e)) for e in enc]
+
+
+def _oracle_string(row: bytes, encoding, null_empty, nul_terminated):
+    cell = row.split(b"\0", 1)[0].rstrip(b" ") if nul_terminated else row.rstrip(b" \0")
+    if null_empty and not cell:
+        return None
+    try:
+        return cell.decode(encoding)
+    except UnicodeDecodeError:
+        return cell.decode("latin-1")
+
+
+def _as_input(vals, kind):
+    if kind == "large":
+        return pa.array(vals, pa.large_string())
+    if kind == "sliced":  # offset != 0 into shared buffers
+        return pa.array(["pre", *vals, "post"]).slice(1, len(vals))
+    if kind == "chunked":
+        return pa.chunked_array([pa.array(vals[:1], pa.string()), pa.array(vals[1:], pa.string())])
+    return pa.array(vals, pa.string())
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    vals=st.lists(_cells, max_size=12),
+    width=st.integers(min_value=0, max_value=20),
+    pad=st.sampled_from([0x00, 0x20]),
+    kind=st.sampled_from(["plain", "large", "sliced", "chunked"]),
+)
+def test_fixed_width_codec_matches_per_value_reference(vals, width, pad, kind):
+    """fixed_width_bytes equals the per-value pad loop, and
+    fixed_width_strings equals the per-value trim + decode, for both pad
+    bytes, both trim rules, declared widths, nulls, empty values,
+    leading/interior/trailing spaces, interior NULs, non-ASCII text and
+    large_string, sliced and chunked input."""
+    import numpy as np
+
+    from polars_readstat_rs_spark.formats import fixed_width_bytes, fixed_width_strings
+
+    u8 = fixed_width_bytes(_as_input(vals, kind), width, pad)
+    assert u8.dtype == np.uint8
+    assert [bytes(r) for r in u8] == _oracle_bytes(vals, width, pad)
+    for nul_terminated in (True, False):
+        for null_empty in (True, False):
+            got = fixed_width_strings(u8, "utf-8", null_empty, nul_terminated)
+            assert got.type == pa.string()
+            assert got.to_pylist() == [
+                _oracle_string(bytes(r), "utf-8", null_empty, nul_terminated) for r in u8
+            ]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    rows=st.integers(min_value=0, max_value=8).flatmap(
+        lambda w: st.lists(st.binary(min_size=w, max_size=w), min_size=1, max_size=10)
+    ),
+    encoding=st.sampled_from(["utf-8", "cp1252"]),
+    nul_terminated=st.booleans(),
+)
+def test_fixed_width_strings_decodes_any_bytes(rows, encoding, nul_terminated):
+    """Arbitrary cell bytes (invalid UTF-8 included, and zero-width
+    cells) decode as the per-value reference does: in the declared
+    encoding, else latin-1, value by value."""
+    import numpy as np
+
+    from polars_readstat_rs_spark.formats import fixed_width_strings
+
+    u8 = np.frombuffer(b"".join(rows), np.uint8).reshape(len(rows), len(rows[0]))
+    got = fixed_width_strings(u8, encoding, True, nul_terminated).to_pylist()
+    assert got == [_oracle_string(r, encoding, True, nul_terminated) for r in rows]
+
+
+def test_fixed_width_bytes_all_empty_column():
+    """A column of only empty values and nulls, no declared width, is
+    one pad byte wide; its cells decode back to empty/null."""
+    from polars_readstat_rs_spark.formats import fixed_width_bytes, fixed_width_strings
+
+    u8 = fixed_width_bytes(pa.array(["", None, ""]), 0, 0x20)
+    assert u8.shape == (3, 1) and u8.tobytes() == b"   "
+    assert fixed_width_bytes(pa.array([], pa.string()), 0, 0).shape == (0, 1)
+    assert fixed_width_strings(u8, "utf-8", True, False).to_pylist() == [None] * 3
+    assert fixed_width_strings(u8[:, :0], "utf-8", False, True).to_pylist() == [""] * 3

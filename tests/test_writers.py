@@ -201,3 +201,118 @@ def test_sinks_write_the_data_label(tmp_path, ext):
     w.commit([w.write(iter(TABLE.to_batches()))])
     meta = formats.parser(formats.format_of(path)).read_metadata(path)
     assert getattr(meta, "dataset_label" if ext == "xpt" else "data_label") == "survey wave 3"
+
+
+# every fixed-width string shape the codec handles: nulls, empty, leading,
+# interior and trailing spaces, an interior NUL, non-ASCII text, and a
+# column whose values straddle the 255-byte .sav very-long-string limit
+STRING_SHAPES = ["", None, "plain", " lead", "mid dle", "trail ", "a\0b", "café", "日本語", "  ", "x" * 40]
+
+
+def _pinned_table():
+    import random
+
+    rng = random.Random(7)
+    n = 60
+    return pa.table({
+        "id": pa.array(range(n), type=pa.int64()),
+        "x": pa.array([None if i % 5 == 0 else rng.uniform(-1e3, 1e3) for i in range(n)]),
+        "s": pa.array([STRING_SHAPES[i % len(STRING_SHAPES)] for i in range(n)]),
+        "r": pa.array([rng.choice(STRING_SHAPES[2:]) + str(rng.randrange(100)) for _ in range(n)]),
+        "long": pa.array([None if i % 4 == 0 else "é" * rng.randrange(120, 180) for i in range(n)]),
+    })
+
+
+PINNED = {
+    "dta": ("dta", {}, "4712dc04c401ef099504f7ab71bc36885712c1d0ebac703147963620adef7787"),
+    "sav": ("sav", {}, "4c069423054a6874803a723f093a3cfd244896c05c72b0c6e19a5695f0b5f855"),
+    "bytecode-sav": ("sav", {"compress": True},
+                     "6825dbe96b82bb6eef346a8aa9fea0ed4fae1097ca262b212ce9f92b1f335fe9"),
+    "zsav": ("zsav", {"compress": "zsav"},
+             "28bdec0d08dfc1834a03e5c8b176d7f08f9e6e52fce039968801ca1fbb077ab8"),
+    "xpt-v5": ("xpt", {}, "83619124a700420edcea4d154ec100178595bdaf232cedc4703da2ca41e0fc3e"),
+    "xpt-v8": ("xpt", {"version": 8},
+               "4dc88fbf2f644b5110ed96efdfa184a13b8571520956b2916523f38ad44a26aa"),
+    "sas7bdat": ("sas7bdat", {}, "0d2f0068a2a8d302548032a4f88e722128bebe7a84866d26f3e106d04650142f"),
+    "rle-sas7bdat": ("sas7bdat", {"compress": "RLE"},
+                     "d95529b94c3f08afc6be1c7483983e0d305b02e5c632404e544d15ef310427a2"),
+    "por": ("por", {}, "63da734f807c8853ae03bb621de5cb61972cd2d1fd5c842a6915acd705b72c76"),
+}
+
+
+@pytest.mark.parametrize("case", PINNED)
+def test_writer_bytes_are_pinned(tmp_path, case):
+    """Writer output is deterministic, so its sha256 pins every encoder
+    change: a refactor of a writer must keep these bytes."""
+    import hashlib
+
+    ext, kw, want = PINNED[case]
+    path = str(tmp_path / f"pinned.{ext}")
+    _write_single(ext, _pinned_table(), path, **kw)
+    assert hashlib.sha256(open(path, "rb").read()).hexdigest() == want
+
+
+def _c_string(v):
+    return v.split("\0", 1)[0].rstrip(" ")
+
+
+# each format's read rule for a fixed-width string cell; "" reads as null
+STRING_RULES = {
+    "dta": ({}, _c_string),
+    "sav": ({}, lambda v: v.rstrip(" \0")),
+    "bytecode-sav": ({"compress": True}, lambda v: v.rstrip(" \0")),
+    "zsav": ({"compress": "zsav"}, lambda v: v.rstrip(" \0")),
+    # XPORT is ASCII: the writer writes '?' for each non-ASCII code point
+    "xpt": ({}, lambda v: _c_string(v.encode("ascii", "replace").decode())),
+    "sas7bdat": ({}, _c_string),
+}
+
+
+@pytest.mark.parametrize("case", STRING_RULES)
+def test_string_matrix_roundtrip(tmp_path, case):
+    """Every string shape written by write_X reads back through the
+    DataSource by the format's fixed-width rule: a NUL ends the value
+    and trailing spaces go (Stata, SAS, XPORT), or only the trailing run
+    of spaces and NULs goes (SPSS). Stata routes a column holding
+    trailing-space values to strL, so it writes only column "f", whose
+    values have none."""
+    kw, rule = STRING_RULES[case]
+    ext = case.rsplit("-", 1)[-1]
+    shapes = STRING_SHAPES + ["\0", " \0 x", "\0 lead"]
+    cols = {"s": shapes, "f": [v if v is None else v.rstrip(" ") for v in shapes]}
+    if ext == "dta":
+        cols.pop("s")
+    table = pa.table({k: pa.array(v, pa.string()) for k, v in cols.items()})
+    path = str(tmp_path / f"m.{ext}")
+    _write_single(ext, table, path, **kw)
+    _, back = _read(path)
+    for name, vals in cols.items():
+        want = [None if v is None else rule(v) or None for v in vals]
+        assert back.column(name).to_pylist() == want, name
+    if ext == "xpt":
+        # a byte >= 0x80 (not valid UTF-8) reads as latin-1, as in
+        # every other reader
+        raw = open(path, "rb").read()
+        assert raw.count(b"caf?") == 2
+        latin = str(tmp_path / "latin.xpt")
+        open(latin, "wb").write(raw.replace(b"caf?", b"caf\xe9"))
+        _, back = _read(latin)
+        assert back.column("s").to_pylist()[STRING_SHAPES.index("café")] == "café"
+
+
+def test_xpt_rejects_over_long_character_values(tmp_path):
+    """An XPORT character value over 32,767 bytes fails by column name
+    in write_xpt and in an executor's spill, before any assemble."""
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
+
+    t = pa.table({"id": pa.array([1.0, 2.0]), "big": pa.array(["x", "y" * 32768])})
+    with pytest.raises(ValueError, match=r"'big'.*32767"):
+        write_xpt(t, str(tmp_path / "w.xpt"))
+    w = ReadstatDataSource({"path": str(tmp_path / "s.xpt")}).writer(
+        _from_arrow_schema(t.schema), True)
+    with pytest.raises(ValueError, match=r"'big'.*32767"):
+        w.write(iter(t.to_batches()))
+    ok = t.set_column(1, "big", pa.array(["x", "y" * 32767]))
+    write_xpt(ok, str(tmp_path / "ok.xpt"))
+    _, back = _read(str(tmp_path / "ok.xpt"))
+    assert back.column("big").to_pylist() == ["x", "y" * 32767]
