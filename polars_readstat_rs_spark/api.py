@@ -124,6 +124,56 @@ def _spss_meta(path: str):
         return None
 
 
+def _reader_options(
+    columns: list[str] | None = None,
+    offset: int = 0,
+    limit: int | None = None,
+    value_labels_as_strings: bool = True,
+    missing_string_as_null: bool = True,
+    row_index: bool = False,
+    partitions: int | None = None,
+    informative_nulls: bool | str = False,
+    informative_null_columns: list[str] | None = None,
+    informative_null_suffix: str | None = None,
+    informative_null_use_value_labels: bool = True,
+    catalog: str | None = None,
+    batch_size: int | None = None,
+) -> dict[str, str]:
+    """The DataSource option strings for the api's reader keyword
+    arguments; an argument left at its default sets no option."""
+    opts = {
+        "value_labels_as_strings": str(value_labels_as_strings).lower(),
+        "missing_string_as_null": str(missing_string_as_null).lower(),
+        "row_index": str(row_index).lower(),
+    }
+    if columns:
+        opts["columns"] = ",".join(columns)
+    if offset:
+        opts["offset"] = str(offset)
+    if limit is not None:
+        opts["limit"] = str(limit)
+    if partitions:
+        opts["partitions"] = str(partitions)
+    if batch_size:
+        opts["batch_size"] = str(batch_size)
+    if catalog:
+        # SAS value labels live in a separate .sas7bcat catalog; columns
+        # whose display format matches a catalog entry decode to label
+        # strings (P5 parity for SAS — formats/sas/catalog.py)
+        opts["catalog"] = catalog
+    if informative_nulls:
+        # False | "separate"/True | "struct" | "merged" (reference
+        # InformativeNullMode, src/lib.rs:71-81)
+        opts["informative_nulls"] = str(informative_nulls).lower()
+    if informative_null_columns:
+        opts["informative_null_columns"] = ",".join(informative_null_columns)
+    if informative_null_suffix is not None:
+        opts["informative_null_suffix"] = informative_null_suffix
+    if not informative_null_use_value_labels:
+        opts["informative_null_use_value_labels"] = "false"
+    return opts
+
+
 def readstat_scan(
     spark: SparkSession,
     path: str,
@@ -158,12 +208,11 @@ def readstat_scan(
         cached = _SCAN_CACHE.get(cache_key)
         if cached is not None:
             return cached
-    r = spark.read.format("readstat")
-    if catalog:
-        # SAS value labels live in a separate .sas7bcat catalog; columns
-        # whose display format matches a catalog entry decode to label
-        # strings (P5 parity for SAS — formats/sas/catalog.py)
-        r = r.option("catalog", catalog)
+    r = spark.read.format("readstat").options(**_reader_options(
+        columns, offset, limit, value_labels_as_strings, missing_string_as_null, row_index,
+        partitions, informative_nulls, informative_null_columns, informative_null_suffix,
+        informative_null_use_value_labels, catalog,
+    ))
     if not split_compressed and offset == 0 and limit is None:
         # Auto-route: splitting a SINGLE compressed .sav/.zsav otherwise
         # falls to an O(file-bytes) control-stream scan inside the
@@ -184,27 +233,6 @@ def readstat_scan(
         plan = plan_rle_partitions(spark, path, partitions or 0)
         if plan:
             r = r.option("rle_plan", json.dumps(plan))
-    if columns:
-        r = r.option("columns", ",".join(columns))
-    if offset:
-        r = r.option("offset", str(offset))
-    if limit is not None:
-        r = r.option("limit", str(limit))
-    if partitions:
-        r = r.option("partitions", str(partitions))
-    if informative_nulls:
-        # False | "separate"/True | "struct" | "merged" (reference
-        # InformativeNullMode, src/lib.rs:71-81)
-        r = r.option("informative_nulls", str(informative_nulls).lower())
-    if informative_null_columns:
-        r = r.option("informative_null_columns", ",".join(informative_null_columns))
-    if informative_null_suffix is not None:
-        r = r.option("informative_null_suffix", informative_null_suffix)
-    if not informative_null_use_value_labels:
-        r = r.option("informative_null_use_value_labels", "false")
-    r = r.option("value_labels_as_strings", str(value_labels_as_strings).lower())
-    r = r.option("missing_string_as_null", str(missing_string_as_null).lower())
-    r = r.option("row_index", str(row_index).lower())
     df = r.load(path)
     if cache_key is not None:
         bounded_put(_SCAN_CACHE, cache_key, df)
@@ -274,29 +302,12 @@ def readstat_read_local(
             f"readstat_read_local reads ONE file, got {len(files)} from {path!r}; "
             "use readstat_scan for directories/globs"
         )
-    opts: dict[str, str] = {
-        "path": files[0],
-        "value_labels_as_strings": str(value_labels_as_strings).lower(),
-        "missing_string_as_null": str(missing_string_as_null).lower(),
-        "row_index": str(row_index).lower(),
-        "batch_size": str(batch_size),
-        "offset": str(offset),
-    }
-    if columns:
-        opts["columns"] = ",".join(columns)
-    if limit is not None:
-        opts["limit"] = str(limit)
-    if informative_nulls:
-        opts["informative_nulls"] = str(informative_nulls).lower()
-    if informative_null_columns:
-        opts["informative_null_columns"] = ",".join(informative_null_columns)
-    if informative_null_suffix is not None:
-        opts["informative_null_suffix"] = informative_null_suffix
-    if not informative_null_use_value_labels:
-        opts["informative_null_use_value_labels"] = "false"
-    if catalog:
-        opts["catalog"] = catalog
-
+    opts = _reader_options(
+        columns, offset, limit, value_labels_as_strings, missing_string_as_null, row_index,
+        None, informative_nulls, informative_null_columns, informative_null_suffix,
+        informative_null_use_value_labels, catalog, batch_size,
+    )
+    opts["path"] = files[0]
     ds = ReadstatDataSource(opts)
     n_rows = readstat_row_count(files[0])
     if n_rows >= 0:  # .por headers don't carry a count (-1): skip guard
@@ -784,12 +795,8 @@ def _local_reader(path: str, columns: list[str] | None = None, batch_size: int =
     driver-local reads decode with the executors' code for every format."""
     from .datasource import ReadstatDataSource
 
-    opts = {"path": path, "partitions": "1", "batch_size": str(batch_size), "offset": str(offset)}
-    if columns:
-        opts["columns"] = ",".join(columns)
-    if limit is not None:
-        opts["limit"] = str(limit)
-    return ReadstatDataSource(opts).reader(None)
+    opts = _reader_options(columns, offset, limit, partitions=1, batch_size=batch_size)
+    return ReadstatDataSource({"path": path, **opts}).reader(None)
 
 
 def infer_schema(

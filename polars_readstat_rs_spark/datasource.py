@@ -282,13 +282,18 @@ class ReadstatDataSource(DataSource):
             path = expand_paths(path)[0]
         return formats.format_of(path)
 
-    def _read_opts(self):
-        """The format's ReadOptions, built from the fields it declares."""
-        from dataclasses import fields
-
+    def _read_opts(self) -> formats.ReadOptions:
         opt = self.options.get
         inc = opt("informative_null_columns")
-        values = dict(
+        catalog = None
+        if opt("catalog"):
+            # P5 for SAS: value labels live in a sibling .sas7bcat.
+            # Loaded ONCE on the driver; the small dict pickles to
+            # executors with the reader (no catalog I/O per task).
+            from .formats.sas.catalog import read_catalog
+
+            catalog = read_catalog(opt("catalog"))
+        return formats.ReadOptions(
             value_labels_as_strings=_true(opt("value_labels_as_strings")),
             missing_string_as_null=_true(opt("missing_string_as_null")),
             user_missing_as_null=_true(opt("user_missing_as_null")),
@@ -299,17 +304,8 @@ class ReadstatDataSource(DataSource):
             informative_null_columns=[c.strip() for c in inc.split(",")] if inc else None,
             informative_null_suffix=opt("informative_null_suffix", "__missing"),
             informative_null_use_value_labels=_true(opt("informative_null_use_value_labels")),
+            catalog_formats=catalog,
         )
-        cls = formats.parser(self._fmt()).ReadOptions
-        declared = {f.name for f in fields(cls)}
-        if "catalog_formats" in declared and opt("catalog"):
-            # P5 for SAS: value labels live in a sibling .sas7bcat.
-            # Loaded ONCE on the driver; the small dict pickles to
-            # executors with the reader (no catalog I/O per task).
-            from .formats.sas.catalog import read_catalog
-
-            values["catalog_formats"] = read_catalog(opt("catalog"))
-        return cls(**{k: v for k, v in values.items() if k in declared})
 
     def _columns(self) -> list[str] | None:
         cols = self.options.get("columns")
@@ -647,7 +643,7 @@ class _ReadstatScan(DataSourceReader):
             # RLE/RDC rows are independent subheaders -> page-parallel
             # (improvement over the reference's sequential-only path),
             # unless a row slice / row index needs global ordering.
-            plain = self.offset == 0 and self.limit < 0 and not getattr(self.opts, "row_index", False)
+            plain = self.offset == 0 and self.limit < 0 and not self.opts.row_index
             if plain and meta.page_count > 1:
                 n = self.n_partitions or min(16, split_count(self._decode_bytes(path), target))
                 return [

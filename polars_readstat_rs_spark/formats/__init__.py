@@ -16,8 +16,18 @@ the driver-local API dispatch through this table alone:
 - ``arrow_schema(meta, opts, columns)``.
 - ``read_partition(path, start, count, columns, opts=None,
   batch_size=65536)``: Arrow record batches for a row range.
-- ``ReadOptions``: a dataclass whose fields are the options the format
-  honours.
+- ``ReadOptions``: the ONE options class below, re-exported; a format
+  ignores a field it has no use for.
+
+Column assembly is shared too (the reference declares its options once,
+``InformativeNullOpts`` src/lib.rs:62-115, rewrites the schema once,
+src/lib.rs:217-278, and applies informative nulls per batch once,
+src/lib.rs:282-355): every parser builds a ``Columns`` for its read, so
+projection (``select``), informative-null fields and values
+(``nulls.informative_fields``/``nulls.combine``) and the trailing
+``_row_idx`` follow one rule in every format. A parser supplies only its
+Arrow field, its value decode and its indicator decode per column, plus
+each column's numpy code and record offset for fixed-width records.
 
 Parser modules import lazily (numpy/pyarrow stay out of planning
 workers that never decode), and ``parser()`` looks the module up at
@@ -43,6 +53,7 @@ import importlib
 import os
 import tempfile
 from contextlib import suppress
+from dataclasses import dataclass
 
 # format name -> (extensions, parser module relative to this package).
 # .sas7bcat catalogs share the sas7bdat page format (src/lib.rs:389).
@@ -78,6 +89,139 @@ def check_format(name: str) -> str:
 def parser(name: str):
     """The parser module of format ``name``."""
     return importlib.import_module(FORMATS[check_format(name)][1], __name__)
+
+
+@dataclass
+class ReadOptions:
+    """Every reader option, for every format."""
+
+    # P5: value-labelled numerics decode to their label strings
+    value_labels_as_strings: bool = True
+    # P8: an empty string cell reads as null
+    missing_string_as_null: bool = True
+    # SPSS/.por: declared user-missing values read as null
+    user_missing_as_null: bool = True
+    # P10: a trailing ``_row_idx`` long column numbers each row in the file
+    row_index: bool = False
+    # P6 informative nulls: False = off; "separate" (or True) = a
+    # parallel "<col><suffix>" string column; "struct" = Struct{value,
+    # null_indicator}; "merged" = coalesce(cast(value, string),
+    # indicator) (nulls.py). System missing stays a plain null.
+    informative_nulls: bool | str = False
+    # None = every eligible column; else only the named ones (reference
+    # InformativeNullColumns::Selected)
+    informative_null_columns: list[str] | None = None
+    # reference SeparateColumn { suffix } (its default "_null"; ours
+    # "__missing" — documented deviation, configurable per scan)
+    informative_null_suffix: str = "__missing"
+    # reference InformativeNullOpts.use_value_labels: an SPSS indicator
+    # is the missing value's label when it has one, else the raw value
+    informative_null_use_value_labels: bool = True
+    # SAS (beyond the reference): {format name: SasFormat} from a
+    # .sas7bcat catalog (sas/catalog.py); columns whose display format
+    # names an entry decode to label strings
+    catalog_formats: dict | None = None
+
+    def null_mode(self) -> str | None:
+        if not self.informative_nulls:
+            return None  # off: no nulls.py (pyarrow.compute) import
+        from .nulls import normalize_mode
+
+        return normalize_mode(self.informative_nulls)
+
+    def tracks(self, name: str, eligible: bool) -> bool:
+        """Whether column ``name`` gets an informative-null indicator."""
+        if not eligible or self.null_mode() is None:
+            return False
+        cols = self.informative_null_columns
+        return cols is None or name in cols
+
+
+def select(items, columns: list[str] | None) -> list:
+    """The items (anything with a ``name``) a projection selects, in the
+    requested order (reference P1); unknown names drop."""
+    if columns is None:
+        return list(items)
+    by_name = {c.name: c for c in items}
+    return [by_name[c] for c in columns if c in by_name]
+
+
+class Columns:
+    """One read's column assembly: the selected columns, their Arrow
+    schema, and the record batches built from their cells.
+
+    ``field(col)`` is the format's Arrow field for a column and
+    ``eligible(col)`` whether it can carry an informative-null
+    indicator. A tracked column expands through
+    ``nulls.informative_fields``; ``_row_idx`` comes last."""
+
+    def __init__(self, items, columns, opts: ReadOptions, field, eligible=lambda col: False):
+        import pyarrow as pa
+
+        self.items = select(items, columns)
+        self.opts = opts
+        self.mode = opts.null_mode()
+        self.tracked = [opts.tracks(c.name, eligible(c)) for c in self.items]
+        fields = []
+        for c, tracked in zip(self.items, self.tracked):
+            f = field(c)
+            if tracked:
+                from .nulls import informative_fields
+
+                fields.extend(
+                    informative_fields(c.name, f.type, self.mode, opts.informative_null_suffix)
+                )
+            else:
+                fields.append(f)
+        if opts.row_index:
+            fields.append(pa.field("_row_idx", pa.int64()))
+        self.schema = pa.schema(fields)
+
+    def batch(self, cells, nrows: int, first_row: int, decode, indicator=None):
+        """Record batch of ``nrows`` rows from file row ``first_row`` on:
+        ``cells[i]`` holds the i-th selected column's cells, which
+        ``decode(cells, col)`` turns into its values and, for a tracked
+        column, ``indicator(cells, col)`` into its indicator strings."""
+        import numpy as np
+        import pyarrow as pa
+
+        arrays = []
+        for c, cell, tracked in zip(self.items, cells, self.tracked):
+            value = decode(cell, c)
+            if tracked:
+                from .nulls import combine
+
+                arrays.extend(combine(
+                    c.name, value, indicator(cell, c), self.mode, self.opts.informative_null_suffix
+                ).values())
+            else:
+                arrays.append(value)
+        if self.opts.row_index:
+            arrays.append(pa.array(np.arange(first_row, first_row + nrows, dtype=np.int64)))
+        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+
+    def records(self, record_len: int, cell, decode, indicator=None):
+        """``decode(raw, first_row) -> RecordBatch`` over a block of
+        fixed-width records (the callback ``fixed_records`` takes): one
+        numpy structured view of the selected columns, where ``cell(col)``
+        is a column's ``(numpy code, record offset)``."""
+        import numpy as np
+
+        layout = [cell(c) for c in self.items]
+        names = [f"f{i}" for i in range(len(layout))]
+        dt = np.dtype({
+            "names": names,
+            "formats": [code for code, _ in layout],
+            "offsets": [off for _, off in layout],
+            "itemsize": record_len,
+        })
+
+        def run(raw: bytes, first_row: int):
+            nrows = len(raw) // record_len if record_len else 0
+            rec = np.frombuffer(raw, dtype=dt, count=nrows)
+            return self.batch([rec[n] for n in names], nrows, first_row, decode, indicator)
+
+        return run
 
 
 def write_one_section(table, path: str, spill, assemble) -> None:

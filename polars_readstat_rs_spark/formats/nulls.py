@@ -1,4 +1,4 @@
-"""Informative-null output modes, shared by all three format readers.
+"""Informative-null output modes, shared by every reader through ``formats.Columns``.
 
 Parity target: the reference's ``InformativeNullOpts`` /
 ``InformativeNullMode`` (/root/reference/src/lib.rs:62-115), schema
@@ -7,7 +7,8 @@ rewrite (src/lib.rs:217-278) and per-batch expression application
 
 - ``separate`` (reference SeparateColumn): a parallel String column
   ``<col>__missing`` right after the value column holding the
-  user-missing indicator ('.a'..'.z' for Stata/SAS tagged missings,
+  user-missing indicator ('.a'..'.z' for Stata, '.A'..'.Z'/'._' for SAS
+  and XPORT tagged missings,
   the declared-missing value/label for SPSS); null where the value is
   present or system-missing.
 - ``struct``: each tracked column becomes

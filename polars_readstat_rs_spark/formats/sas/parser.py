@@ -35,7 +35,7 @@ from dataclasses import dataclass, field, replace
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_width_strings
+from .. import Columns, ReadOptions, fixed_width_strings
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -193,50 +193,20 @@ class SasMetadata:
         return 8 if self.bit64 else 4
 
 
-@dataclass
-class ReadOptions:
-    missing_string_as_null: bool = True
-    row_index: bool = False
-    # P6 informative nulls (reference InformativeNullOpts, src/lib.rs:
-    # 62-115). Indicator text: '.A'..'.Z' / '._' from the NaN payload
-    # bits[47:40] (src/sas/value.rs:171-214), null when the value is
-    # present or system-missing. Modes: "separate"/True, "struct",
-    # "merged" (see formats/nulls.py).
-    informative_nulls: bool | str = False
-    informative_null_columns: list[str] | None = None
-    # reference SeparateColumn { suffix } (its default "_null"; ours
-    # "__missing" — documented deviation, configurable per scan)
-    informative_null_suffix: str = "__missing"
-    # P5 for SAS (beyond reference): value labels live in a separate
-    # .sas7bcat catalog — a pre-loaded {format_name: SasFormat} dict
-    # (formats/sas/catalog.py). Columns whose display format matches a
-    # catalog entry decode to label strings, mirroring Stata/SPSS
-    # value_labels_as_strings.
-    catalog_formats: dict | None = None
+def _catalog_format(c: Column, opts: ReadOptions):
+    """The ``opts.catalog_formats`` entry labelling column ``c``, or None
+    (P5 for SAS, beyond the reference: value labels live in a separate
+    .sas7bcat catalog, formats/sas/catalog.py)."""
+    if not opts.catalog_formats or not c.fmt:
+        return None
+    if c.kind not in ("numeric", "char"):
+        return None  # date/time formats never name catalog entries
+    from .catalog import normalize_format_name
 
-    def null_mode(self):
-        from ..nulls import normalize_mode
-
-        return normalize_mode(self.informative_nulls)
-
-    def tracks_nulls(self, name: str, eligible: bool) -> bool:
-        if not eligible or self.null_mode() is None:
-            return False
-        cols = self.informative_null_columns
-        return cols is None or name in cols
-
-    def catalog_format_for(self, c: "Column"):
-        if not self.catalog_formats or not c.fmt:
-            return None
-        if c.kind not in ("numeric", "char"):
-            return None  # date/time formats never name catalog entries
-        from .catalog import normalize_format_name
-
-        key = normalize_format_name(c.fmt)
-        fmt = self.catalog_formats.get(key)
-        if fmt is None or fmt.is_char != c.is_char:
-            return None
-        return fmt
+    fmt = opts.catalog_formats.get(normalize_format_name(c.fmt))
+    if fmt is None or fmt.is_char != c.is_char:
+        return None
+    return fmt
 
 
 def _column_kind(col_type_char: bool, fmt: str) -> str:
@@ -295,8 +265,13 @@ def _read_metadata_uncached(path: str) -> SasMetadata:
         # 0x63 = catalog (.sas7bcat) — both share the page format, and
         # the reference routes both through this reader (detect_format,
         # src/lib.rs:389)
-        if not (hdr[:15] == MAGIC[:15] and hdr[15] in (0x60, 0x63) and hdr[16:32] == MAGIC[16:32]):
-            raise ValueError("invalid sas7bdat magic number")
+        if not (hdr[:15] == MAGIC[:15] and hdr[15:16] in (b"\x60", b"\x63") and hdr[16:32] == MAGIC[16:32]):
+            raise ValueError(f"{path!r}: invalid sas7bdat magic number")
+        if len(hdr) < 288:
+            raise EOFError(
+                f"truncated file {path!r}: the file ends at byte offset {len(hdr)}, "
+                "inside its 288-byte header"
+            )
         meta.is_catalog = hdr[15] == 0x63
         meta.bit64 = hdr[32] == ord("3")
         align2 = 4 if meta.bit64 else 0
@@ -882,46 +857,6 @@ def iter_row_blocks(path: str, meta: SasMetadata, page_range: tuple[int, int] | 
                         yield page[start : start + nrows * meta.row_length], nrows
 
 
-def decode_rows(
-    raw: bytes,
-    meta: SasMetadata,
-    columns: list[str] | None = None,
-    opts: ReadOptions | None = None,
-    row_offset: int = 0,
-) -> dict[str, pa.Array]:
-    opts = opts or ReadOptions()
-    rl = meta.row_length
-    nrows = len(raw) // rl if rl else 0
-    sel_names = {c.name for c in _select(meta.columns, columns)}
-
-    out: dict[str, pa.Array] = {}
-    names, formats, offsets = [], [], []
-    for i, c in enumerate(meta.columns):
-        if c.name not in sel_names:
-            continue
-        names.append(f"f{i}")
-        formats.append(f"S{c.length}")
-        offsets.append(c.offset)
-    dt = np.dtype({"names": names, "formats": formats, "offsets": offsets, "itemsize": rl})
-    rec = np.frombuffer(raw, dtype=dt, count=nrows)
-
-    mode = opts.null_mode()
-    for i, c in enumerate(meta.columns):
-        if c.name not in sel_names:
-            continue
-        val = _decode_column(rec[f"f{i}"], c, meta, opts)
-        if opts.tracks_nulls(c.name, not c.is_char):
-            from ..nulls import combine
-
-            ind = _indicator_column(rec[f"f{i}"], c, meta)
-            out.update(combine(c.name, val, ind, mode, opts.informative_null_suffix))
-        else:
-            out[c.name] = val
-    if opts.row_index:
-        out["_row_idx"] = pa.array(np.arange(row_offset, row_offset + nrows, dtype=np.int64))
-    return out
-
-
 def _decode_column(arr, c: Column, meta: SasMetadata, opts: ReadOptions) -> pa.Array:
     u8 = np.ascontiguousarray(arr).view(np.uint8).reshape(-1, c.length) if c.length else np.zeros((len(arr), 0), np.uint8)
     n = len(u8)
@@ -929,7 +864,7 @@ def _decode_column(arr, c: Column, meta: SasMetadata, opts: ReadOptions) -> pa.A
         s = fixed_width_strings(
             u8, meta.encoding, null_empty=opts.missing_string_as_null, nul_terminated=True
         )
-        cat_fmt = opts.catalog_format_for(c)
+        cat_fmt = _catalog_format(c, opts)
         if cat_fmt is not None:
             from .catalog import label_char
 
@@ -953,7 +888,7 @@ def _decode_column(arr, c: Column, meta: SasMetadata, opts: ReadOptions) -> pa.A
     mask = abs_bits >= np.uint64(0x7FF0_0000_0000_0000)
     vals = np.where(mask, 0.0, vals).astype(np.float64)
 
-    cat_fmt = opts.catalog_format_for(c)
+    cat_fmt = _catalog_format(c, opts)
     if cat_fmt is not None and c.kind == "numeric":
         from .catalog import label_numeric
 
@@ -992,6 +927,9 @@ def _tag_lut():
 
 
 def _indicator_column(arr, c: Column, meta: SasMetadata) -> pa.Array:
+    """Tagged-missing indicator '.A'..'.Z' / '._' from the NaN payload
+    bits[47:40] (src/sas/value.rs:171-214); null when the value is
+    present or system-missing."""
     u8 = np.ascontiguousarray(arr).view(np.uint8).reshape(-1, c.length)
     n = len(u8)
     full = np.zeros((n, 8), dtype=np.uint8)
@@ -1012,6 +950,12 @@ def _indicator_column(arr, c: Column, meta: SasMetadata) -> pa.Array:
     k[lettered] = (0xFF ^ type_byte[lettered]) - 0x40  # .A(0xBE)->1 .. .Z(0xA5)->26
     k[type_byte == 0xD2] = 27  # ._
     k[~is_nan] = 0
+    return tag_indicator(k)
+
+
+def tag_indicator(k) -> pa.Array:
+    """Indicator strings for tag indexes ``k`` (0 none, 1..26 '.A'..'.Z',
+    27 '._'), shared with the XPORT reader."""
     return pa.array(_tag_lut()[k], type=pa.string(), mask=k == 0)
 
 
@@ -1028,35 +972,48 @@ def arrow_field(c: Column) -> pa.Field:
     return pa.field(c.name, t)
 
 
-def _select(cols, columns):
-    if columns is None:
-        return list(cols)
-    by_name = {c.name: c for c in cols}
-    return [by_name[c] for c in columns if c in by_name]
+def _columns(meta: SasMetadata, opts: ReadOptions, columns: list[str] | None) -> Columns:
+    # catalog-labeled columns surface as strings (P5, like Stata)
+    return Columns(
+        meta.columns, columns, opts,
+        lambda c: pa.field(c.name, pa.string()) if _catalog_format(c, opts) else arrow_field(c),
+        lambda c: not c.is_char,
+    )
 
 
 def arrow_schema(
     meta: SasMetadata, opts: ReadOptions | None = None, columns: list[str] | None = None
 ) -> pa.Schema:
-    from ..nulls import informative_fields
+    return _columns(meta, opts or ReadOptions(), columns).schema
 
-    opts = opts or ReadOptions()
-    mode = opts.null_mode()
-    sel = _select(meta.columns, columns)
-    fields = []
-    for c in sel:
-        # catalog-labeled columns surface as strings (P5, like Stata)
-        if opts.catalog_format_for(c) is not None:
-            f = pa.field(c.name, pa.string())
-        else:
-            f = arrow_field(c)
-        if opts.tracks_nulls(c.name, not c.is_char):
-            fields.extend(informative_fields(c.name, f.type, mode, opts.informative_null_suffix))
-        else:
-            fields.append(f)
-    if opts.row_index:
-        fields.append(pa.field("_row_idx", pa.int64()))
-    return pa.schema(fields)
+
+def record_decoder(meta: SasMetadata, opts: ReadOptions, columns: list[str] | None):
+    """``decode(raw, first_row) -> RecordBatch`` over row bytes."""
+    return _columns(meta, opts, columns).records(
+        meta.row_length,
+        lambda c: (f"S{c.length}", c.offset),
+        lambda cells, c: _decode_column(cells, c, meta, opts),
+        lambda cells, c: _indicator_column(cells, c, meta),
+    )
+
+
+def _joined(blocks, min_rows: int):
+    """Join ``(row bytes, first row, rows)`` blocks of consecutive rows
+    into ``(row bytes, first row)`` runs of at least ``min_rows`` rows:
+    one numpy decode per run instead of one per page (page-sized calls
+    drown in per-call overhead on many-page files)."""
+    pending: list[bytes] = []
+    rows = first = 0
+    for block, start, n in blocks:
+        if not rows:
+            first = start
+        pending.append(block)
+        rows += n
+        if rows >= min_rows:
+            yield b"".join(pending), first
+            pending, rows = [], 0
+    if rows:
+        yield b"".join(pending), first
 
 
 # --------------------------------------------------------------- eager API
@@ -1079,52 +1036,24 @@ def read_table(
 ) -> pa.Table:
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    schema = arrow_schema(meta, opts, columns)
     want_end = meta.row_count if limit is None else min(meta.row_count, offset + limit)
-    tables = []
-    seen = 0
-    # accumulate page blocks into big decode batches: one numpy decode per
-    # ~64k rows instead of one per page (page-sized calls drown in per-call
-    # numpy overhead on many-page compressed files)
-    pending: list[bytes] = []
-    pend_rows = 0
-    pend_base = 0
+    held = 0
 
-    def _flush():
-        nonlocal pending, pend_rows
-        if pend_rows:
-            cols = decode_rows(b"".join(pending), meta, columns, opts, row_offset=pend_base)
-            tables.append(pa.table({n: cols[n] for n in schema.names}, schema=schema))
-        pending, pend_rows = [], 0
-
-    for block, nrows in iter_row_blocks(path, meta):
-        if seen + nrows <= offset:
-            seen += nrows
-            continue
-        lo = max(0, offset - seen)
-        hi = min(nrows, want_end - seen)
-        if hi <= lo:
-            seen += nrows
-            if seen >= want_end:
+    def blocks():
+        nonlocal held
+        for block, nrows in iter_row_blocks(path, meta):
+            lo, hi = max(0, offset - held), min(nrows, want_end - held)
+            if hi > lo:
+                yield block[lo * meta.row_length : hi * meta.row_length], held + lo, hi - lo
+            held += nrows
+            if held >= want_end:
                 break
-            continue
-        sub = block[lo * meta.row_length : hi * meta.row_length]
-        if not pend_rows:
-            pend_base = seen + lo
-        pending.append(sub)
-        pend_rows += hi - lo
-        if pend_rows >= 65536:
-            _flush()
-        seen += nrows
-        if seen >= want_end:
-            break
-    _flush()
-    if seen < want_end:
-        raise _short_file(path, meta, seen)
-    if not tables:
-        empty = decode_rows(b"", meta, columns, opts)
-        return pa.table({n: empty.get(n, pa.array([], type=f.type)) for n, f in zip(schema.names, schema)}, schema=schema)
-    return pa.concat_tables(tables)
+
+    decode = record_decoder(meta, opts, columns)
+    batches = [decode(raw, first) for raw, first in _joined(blocks(), 65536)]
+    if held < want_end:
+        raise _short_file(path, meta, held)
+    return pa.Table.from_batches(batches or [decode(b"", 0)])
 
 
 def read_page_range(
@@ -1137,25 +1066,21 @@ def read_page_range(
     (PARALLELIZATION.md: 1.0x scaling), this engine page-parallelizes
     them across Spark tasks."""
     meta = read_metadata(path)
-    opts = opts or ReadOptions()
     # row_index stays False: the planner never page-parallelizes a
     # compressed read when row_index is set (datasource.py "plain" gate),
-    # and decode_rows here has no global row offset to number from.
-    schema = arrow_schema(meta, replace(opts, row_index=False), columns)
-    pending: list[bytes] = []
-    pending_rows = 0
+    # and a page range has no global row offset to number from.
+    opts = replace(opts or ReadOptions(), row_index=False)
     held = 0
-    for block, nrows in iter_row_blocks(path, meta, (page_lo, page_hi)):
-        pending.append(block)
-        pending_rows += nrows
-        held += nrows
-        if pending_rows >= batch_size:
-            cols = decode_rows(b"".join(pending), meta, columns, opts)
-            yield pa.table({n: cols[n] for n in schema.names}, schema=schema).to_batches()[0]
-            pending, pending_rows = [], 0
-    if pending_rows:
-        cols = decode_rows(b"".join(pending), meta, columns, opts)
-        yield pa.table({n: cols[n] for n in schema.names}, schema=schema).to_batches()[0]
+
+    def blocks():
+        nonlocal held
+        for block, nrows in iter_row_blocks(path, meta, (page_lo, page_hi)):
+            yield block, held, nrows
+            held += nrows
+
+    decode = record_decoder(meta, opts, columns)
+    for raw, first in _joined(blocks(), batch_size):
+        yield decode(raw, first)
     # only a range over every page can check the header's row count
     if page_lo == 0 and page_hi >= meta.page_count and held < meta.row_count:
         raise _short_file(path, meta, held)
@@ -1177,7 +1102,6 @@ def read_partition(
     """
     meta = read_metadata(path)
     opts = opts or ReadOptions()
-    schema = arrow_schema(meta, opts, columns)
     if meta.compression or not count:
         t = read_table(path, columns, offset=start, limit=count, opts=opts)
         yield from t.to_batches(max_chunksize=batch_size)
@@ -1190,40 +1114,28 @@ def read_partition(
     held = index[-1][1] + index[-1][2] if index else 0
     if held < end:
         raise _short_file(path, meta, held)
-    # accumulate page slices into ~batch_size-row decode calls: one
-    # numpy decode + one Arrow table per big batch instead of one per
-    # PAGE — small-page files (hundreds of rows/page) otherwise pay
-    # per-batch Arrow/IPC overhead thousands of times (r8: a 100k x 43
-    # file read 16x faster after this change)
-    pending: list[bytes] = []
-    pend_rows = 0
-    pend_base = 0
-    with open(path, "rb") as f:
-        for page_idx, row_start, nrows in index:
-            if row_start + nrows <= start:
-                continue
-            if row_start >= end:
-                break
-            f.seek(meta.header_length + page_idx * meta.page_length)
-            page = f.read(meta.page_length)
-            pstart, pn = page_row_layout(page, meta)
-            lo = max(0, start - row_start)
-            hi = min(pn, end - row_start)
-            if hi <= lo:
-                continue
-            if not pend_rows:
-                pend_base = row_start + lo
-            pending.append(page[pstart + lo * meta.row_length : pstart + hi * meta.row_length])
-            pend_rows += hi - lo
-            if pend_rows >= batch_size:
-                cols = decode_rows(b"".join(pending), meta, columns, opts, row_offset=pend_base)
-                tbl = pa.table({n: cols[n] for n in schema.names}, schema=schema)
-                pending, pend_rows = [], 0
-                yield from tbl.to_batches(max_chunksize=batch_size)
-    if pend_rows:
-        cols = decode_rows(b"".join(pending), meta, columns, opts, row_offset=pend_base)
-        tbl = pa.table({n: cols[n] for n in schema.names}, schema=schema)
-        yield from tbl.to_batches(max_chunksize=batch_size)
+
+    def blocks():
+        rl = meta.row_length
+        with open(path, "rb") as f:
+            for page_idx, row_start, nrows in index:
+                if row_start + nrows <= start:
+                    continue
+                if row_start >= end:
+                    break
+                f.seek(meta.header_length + page_idx * meta.page_length)
+                page = f.read(meta.page_length)
+                pstart, pn = page_row_layout(page, meta)
+                lo, hi = max(0, start - row_start), min(pn, end - row_start)
+                if hi > lo:
+                    yield page[pstart + lo * rl : pstart + hi * rl], row_start + lo, hi - lo
+
+    # page slices join into ~batch_size-row decode calls: small-page
+    # files (hundreds of rows/page) otherwise pay per-batch Arrow/IPC
+    # overhead thousands of times (r8: a 100k x 43 file read 16x faster)
+    decode = record_decoder(meta, opts, columns)
+    for raw, first in _joined(blocks(), batch_size):
+        yield from pa.Table.from_batches([decode(raw, first)]).to_batches(max_chunksize=batch_size)
 
 
 def metadata_frame(spark, path: str):

@@ -26,11 +26,14 @@ from __future__ import annotations
 
 import os
 import struct
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records, fixed_width_bytes, fixed_width_strings, write_one_section
+from .. import (
+    Columns, ReadOptions, fixed_records, fixed_width_bytes, fixed_width_strings,
+    write_one_section,
+)
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -91,33 +94,17 @@ class XportMetadata:
         return {v.name: v.length for v in self.variables}
 
 
-@dataclass
-class ReadOptions:
-    """Mirrors the sas7bdat reader's option surface where the format can
-    honor it. ``informative_nulls`` supports False / "separate" (tagged
-    missing .A-.Z / ._ surface as a companion string column, the
-    reference's InformativeNullMode::Separate shape)."""
-
-    missing_string_as_null: bool = True
-    row_index: bool = False
-    informative_nulls: bool | str = False
-    informative_null_columns: list[str] | None = None
-    informative_null_suffix: str = "__missing"
-
-    def normalized_mode(self) -> str | None:
-        m = self.informative_nulls
-        if not m:
-            return None
-        if m is True or str(m).lower() in ("separate", "true"):
-            return "separate"
-        raise ValueError(
-            f"xport informative_nulls supports only 'separate', got {m!r}"
-        )
-
-
 @stat_keyed_cache
 def read_metadata(path: str) -> XportMetadata:
     size = os.path.getsize(path)
+    try:
+        return _read_metadata(path, size)
+    except (struct.error, IndexError) as e:
+        # a cut on a record boundary inside the header records
+        raise EOFError(f"truncated file {path!r}: the header ends at byte offset {size} ({e})") from e
+
+
+def _read_metadata(path: str, size: int) -> XportMetadata:
     with open(path, "rb") as f:
         head = f.read(min(size, 4 * 1024 * 1024))
     if head.startswith(_LIB_HDR):
@@ -126,6 +113,15 @@ def read_metadata(path: str) -> XportMetadata:
         version = 8
     else:
         raise ValueError(f"{path!r} is not an XPORT v5/v8 file (bad library header)")
+    # the row count comes from the file size, so a cut is only visible
+    # as a file that is not whole 80-byte records (a cut exactly on a
+    # record boundary is not: XPORT stores no observation count)
+    if size % _REC:
+        raise EOFError(
+            f"truncated file {path!r}: {size} bytes is not a whole number of "
+            f"{_REC}-byte records (the next record boundary is byte offset "
+            f"{size + (-size % _REC)})"
+        )
 
     def _find(marker: bytes, start: int) -> int:
         # headers are record-aligned; scan on 80-byte boundaries
@@ -227,15 +223,6 @@ def read_metadata(path: str) -> XportMetadata:
     row_length = sum(v.length for v in variables)
     if row_length <= 0:
         raise ValueError(f"{path!r}: zero-width observation record")
-    # the row count comes from the file size, so a cut is only visible
-    # as a file that is not whole 80-byte records (a cut exactly on a
-    # record boundary is not: XPORT stores no observation count)
-    if size % _REC:
-        raise EOFError(
-            f"truncated file {path!r}: {size} bytes is not a whole number of "
-            f"{_REC}-byte records (the next record boundary is byte offset "
-            f"{size + (-size % _REC)})"
-        )
     total = size - data_offset
     n = total // row_length
     # trailing-blank padding: the data section is space-padded to an
@@ -336,28 +323,36 @@ def _ieee_to_ibm(vals: np.ndarray, null: np.ndarray) -> np.ndarray:
     return out
 
 
+def _columns(meta: XportMetadata, opts: ReadOptions, columns: list[str] | None) -> Columns:
+    return Columns(
+        meta.variables, columns, opts,
+        lambda v: pa.field(v.name, pa.string() if v.is_char else pa.float64()),
+        lambda v: not v.is_char,
+    )
+
+
 def arrow_schema(
     meta: XportMetadata, opts: ReadOptions | None = None, columns: list[str] | None = None
 ) -> pa.Schema:
-    opts = opts or ReadOptions()
-    sel = set(columns) if columns is not None else None
-    mode = opts.normalized_mode()
-    inf_sel = set(opts.informative_null_columns or []) if mode else set()
-    fields = []
-    if opts.row_index:
-        fields.append(pa.field("_row_idx", pa.int64()))
-    order = (
-        [v for c in columns for v in meta.variables if v.name == c]
-        if columns is not None
-        else meta.variables
-    )
-    for v in order:
-        if sel is not None and v.name not in sel:
-            continue
-        fields.append(pa.field(v.name, pa.string() if v.is_char else pa.float64()))
-        if mode and not v.is_char and (not inf_sel or v.name in inf_sel):
-            fields.append(pa.field(v.name + opts.informative_null_suffix, pa.string()))
-    return pa.schema(fields)
+    return _columns(meta, opts or ReadOptions(), columns).schema
+
+
+def _decode(cells, v: XportVariable, opts: ReadOptions) -> pa.Array:
+    u8 = np.ascontiguousarray(cells).view(np.uint8).reshape(-1, v.length)
+    if v.is_char:
+        # XPORT declares no encoding: UTF-8, latin-1 per invalid value
+        return fixed_width_strings(u8, "utf-8", opts.missing_string_as_null, nul_terminated=True)
+    vals, null, _ = _ibm_to_ieee(u8, v.length)
+    return pa.array(vals, type=pa.float64(), mask=null)
+
+
+def _indicator(cells, v: XportVariable) -> pa.Array:
+    """Tagged missing .A-.Z / ._ with the .sas7bdat reader's text; a
+    system missing '.' has none."""
+    from .parser import tag_indicator
+
+    _, _, tags = _ibm_to_ieee(np.ascontiguousarray(cells).view(np.uint8).reshape(-1, v.length), v.length)
+    return tag_indicator(np.where(tags == ord("_"), 27, np.where(tags, tags.astype(np.int64) - 0x40, 0)))
 
 
 def read_partition(
@@ -372,50 +367,13 @@ def read_partition(
     fixed-width byte-range unit the partition planner hands executors."""
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    schema = arrow_schema(meta, opts, columns)
-    mode = opts.normalized_mode()
-    inf_sel = set(opts.informative_null_columns or []) if mode else set()
-    sel = set(columns) if columns is not None else None
-    order = (
-        [v for c in columns for v in meta.variables if v.name == c]
-        if columns is not None
-        else meta.variables
+    decode = _columns(meta, opts, columns).records(
+        meta.row_length,
+        lambda v: (f"S{v.length}", v.position),
+        lambda cells, v: _decode(cells, v, opts),
+        _indicator,
     )
-    rec = meta.row_length
-
-    def decode(buf: bytes, first: int):
-        take = len(buf) // rec
-        rows = np.frombuffer(buf, dtype=np.uint8, count=take * rec).reshape(take, rec)
-        arrays, names = [], []
-        if opts.row_index:
-            names.append("_row_idx")
-            arrays.append(pa.array(np.arange(first, first + take), type=pa.int64()))
-        for v in order:
-            if sel is not None and v.name not in sel:
-                continue
-            colbytes = rows[:, v.position : v.position + v.length]
-            if v.is_char:
-                # XPORT declares no encoding: UTF-8, latin-1 per invalid value
-                arrays.append(fixed_width_strings(
-                    colbytes, "utf-8", opts.missing_string_as_null, nul_terminated=True
-                ))
-                names.append(v.name)
-            else:
-                vals, nullmask, tags = _ibm_to_ieee(colbytes, v.length)
-                arrays.append(pa.array(vals, type=pa.float64(), mask=nullmask))
-                names.append(v.name)
-                if mode and (not inf_sel or v.name in inf_sel):
-                    tag_strs = [
-                        (chr(t) if t else ".") if m else None
-                        for t, m in zip(tags.tolist(), nullmask.tolist())
-                    ]
-                    arrays.append(pa.array(tag_strs, type=pa.string()))
-                    names.append(v.name + opts.informative_null_suffix)
-        return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(
-            [schema.field(n) for n in names]
-        ))
-
-    yield from fixed_records(path, meta.data_offset, rec, start, count, batch_size, decode)
+    yield from fixed_records(path, meta.data_offset, meta.row_length, start, count, batch_size, decode)
 
 
 def read_table(
@@ -463,6 +421,17 @@ def _sanitize_names(names: list[str], maxlen: int = 8) -> list[str]:
     return out
 
 
+def _char_width(name: str, width: int) -> int:
+    """``width``, or ValueError naming the column when it exceeds the
+    signed 16-bit NAMESTR length."""
+    if width > _MAX_CHAR:
+        raise ValueError(
+            f"column {name!r}: character width {width} exceeds the XPORT "
+            f"limit of {_MAX_CHAR} bytes"
+        )
+    return width
+
+
 def encode_sections(
     table: pa.Table, string_widths: dict[str, int] | None = None
 ) -> tuple[list[XportVariable], bytes]:
@@ -484,12 +453,7 @@ def encode_sections(
             # the bytes str.encode("ascii", "replace") gives
             ascii_col = pc.replace_substring_regex(col, r"[^\x00-\x7f]", "?")
             buf = fixed_width_bytes(ascii_col, int((string_widths or {}).get(name, 1)), 0x20)
-            width = buf.shape[1]
-            if width > _MAX_CHAR:
-                raise ValueError(
-                    f"column {name!r}: character width {width} exceeds the XPORT "
-                    f"limit of {_MAX_CHAR} bytes"
-                )
+            width = _char_width(name, buf.shape[1])
             variables.append(
                 XportVariable(short, name if short != name else "", True, width, pos)
             )
@@ -670,7 +634,7 @@ def assemble_xpt(
         variables, pos = [], 0
         shorts = _sanitize_names([n for n, _ in cols])
         for (name, is_char), short in zip(cols, shorts):
-            ln = max(1, int((string_widths or {}).get(name, 1))) if is_char else 8
+            ln = _char_width(name, max(1, int((string_widths or {}).get(name, 1)))) if is_char else 8
             variables.append(XportVariable(short, name if short != name else "", is_char, ln, pos))
             pos += ln
         if not variables:
@@ -713,7 +677,7 @@ def assemble_xpt(
                 f"xpt writer: string_widths declares column {n!r} "
                 f"(short {short!r}) which is not in the written schema"
             )
-        widths[short] = max(widths[short], int(w))
+        widths[short] = _char_width(n, max(widths[short], int(w)))
     # a truncated name keeps the original in its label (encode_sections)
     label_of = {short: long for long, short in short_of.items() if short != long}
     variables, pos = [], 0

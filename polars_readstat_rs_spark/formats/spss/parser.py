@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records, fixed_width_strings
+from .. import Columns, ReadOptions, fixed_records, fixed_width_strings
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -118,45 +118,6 @@ class SpssMetadata:
         return "rows" if self.compression == 0 else "rle"
 
 
-@dataclass
-class ReadOptions:
-    value_labels_as_strings: bool = True
-    missing_string_as_null: bool = True
-    user_missing_as_null: bool = True
-    row_index: bool = False
-    # P6 informative nulls: indicator per column with user-declared
-    # missings (numeric missing values/ranges, or declared missing
-    # strings) — the value's label (if any), the stringified value for
-    # discrete missings, or 'MISSING' for range hits
-    # (src/spss/data.rs:938-992). System missing -> null indicator.
-    # Modes: "separate"/True, "struct", "merged" (formats/nulls.py).
-    informative_nulls: bool | str = False
-    informative_null_columns: list[str] | None = None
-    # reference SeparateColumn { suffix } (its default "_null"; ours
-    # "__missing" — documented deviation, configurable per scan)
-    informative_null_suffix: str = "__missing"
-    # reference InformativeNullOpts.use_value_labels (default true):
-    # indicator strings use the missing value's label when one exists;
-    # False emits the raw value string instead
-    informative_null_use_value_labels: bool = True
-
-    def null_mode(self):
-        from ..nulls import normalize_mode
-
-        return normalize_mode(self.informative_nulls)
-
-    def tracks_nulls(self, v) -> bool:
-        if self.null_mode() is None:
-            return False
-        eligible = (not v.is_str and (v.missing_doubles or v.missing_range)) or (
-            v.is_str and v.missing_strings
-        )
-        if not eligible:
-            return False
-        cols = self.informative_null_columns
-        return cols is None or v.name in cols
-
-
 def _format_class(code: int) -> str | None:
     if code in (20, 23, 24, 38, 39):
         return "date"
@@ -170,14 +131,18 @@ def _format_class(code: int) -> str | None:
 # ---------------------------------------------------------------- metadata
 
 class _R:
-    def __init__(self, f):
+    def __init__(self, f, path: str):
         self.f = f
+        self.path = path
         self.endian = "<"
 
     def take(self, n: int) -> bytes:
         b = self.f.read(n)
         if len(b) < n:
-            raise EOFError("truncated .sav file")
+            raise EOFError(
+                f"truncated file {self.path!r}: the header ends at byte offset "
+                f"{self.f.tell()}, {n - len(b)} bytes short of its next field"
+            )
         return b
 
     def u32(self) -> int:
@@ -210,7 +175,12 @@ def _read_metadata_uncached(path: str) -> SpssMetadata:
     with open(path, "rb") as f:
         head = f.read(176)
         if head[:4] not in (b"$FL2", b"$FL3"):
-            raise ValueError("invalid SPSS header magic")
+            raise ValueError(f"{path!r}: invalid SPSS header magic")
+        if len(head) < 176:
+            raise EOFError(
+                f"truncated file {path!r}: the file ends at byte offset {len(head)}, "
+                "inside its 176-byte file header record"
+            )
         layout_le = struct.unpack("<i", head[64:68])[0]
         meta.endian = "<" if layout_le in (2, 3) else ">"
         e = meta.endian
@@ -221,7 +191,7 @@ def _read_metadata_uncached(path: str) -> SpssMetadata:
         if head[:4] == b"$FL3" and meta.compression == 0:
             meta.compression = 2  # zsav magic implies zlib
 
-        r = _R(f)
+        r = _R(f, path)
         r.endian = e
         pending_labels: list[tuple[list[bytes], list[str], list[int]]] = []
         raw_records: list[tuple[int, bytes]] = []
@@ -545,7 +515,13 @@ def _zsav_entries(path: str, meta: SpssMetadata) -> list[tuple[int, int, int, in
     e = meta.endian
     with open(path, "rb") as f:
         f.seek(meta.data_offset)
-        zheader_ofs, ztrailer_ofs, _ztrailer_len = struct.unpack(e + "3Q", f.read(24))
+        zheader = f.read(24)
+        if len(zheader) < 24:
+            raise EOFError(
+                f"truncated file {path!r}: the zsav header at byte offset "
+                f"{meta.data_offset} runs past the end of the file"
+            )
+        zheader_ofs, ztrailer_ofs, _ztrailer_len = struct.unpack(e + "3Q", zheader)
         f.seek(ztrailer_ofs)
         head = f.read(24)
         n_blocks = struct.unpack(e + "qqii", head)[3] if len(head) == 24 else 0
@@ -723,7 +699,6 @@ def read_rle_partition(
     """Decode rows [start, start+count) from a recovery point: decompress
     only the blocks/bytes this partition needs, never the whole stream."""
     meta = read_metadata(path)
-    schema = arrow_schema(meta, opts, columns)
     rec = meta.record_len
     need_units = (start + count) * meta.n_segments - unit_base
     # 9 bytes of RLE input per unit (control + literal) is the hard bound
@@ -760,10 +735,9 @@ def read_rle_partition(
         target = grown
     lo = start * rec - unit_base * 8
     raw = _declared_rows(path, units[lo : lo + count * rec], rec, count)
+    decode = record_decoder(meta, opts, columns)
     for done in range(0, count, batch_size):
-        cols = decode_records(raw[done * rec : (done + batch_size) * rec], meta, columns, opts,
-                              row_offset=start + done)
-        yield pa.record_batch([cols[n] for n in schema.names], schema=schema)
+        yield decode(raw[done * rec : (done + batch_size) * rec], start + done)
 
 
 def _data_units(path: str, meta: SpssMetadata, max_units: int | None = None) -> bytes:
@@ -797,54 +771,6 @@ def _fmt_double(x: float) -> str:
     if x.is_integer() and abs(x) < 1e15:
         return str(int(x))
     return repr(x)
-
-
-def decode_records(
-    raw: bytes,
-    meta: SpssMetadata,
-    columns: list[str] | None = None,
-    opts: ReadOptions | None = None,
-    row_offset: int = 0,
-) -> dict[str, pa.Array]:
-    opts = opts or ReadOptions()
-    rec = meta.record_len
-    nrows = len(raw) // rec if rec else 0
-    raw = raw[: nrows * rec]
-    sel = _select(meta.variables, columns)
-
-    names, formats, offsets = [], [], []
-    for i, v in enumerate(meta.variables):
-        if v not in sel:
-            continue
-        names.append(f"f{i}")
-        formats.append(meta.endian + "f8" if not v.is_str else f"S{v.width * 8}")
-        offsets.append(v.offset * 8)
-    dt = np.dtype({"names": names, "formats": formats, "offsets": offsets, "itemsize": rec})
-    arr = np.frombuffer(raw, dtype=dt, count=nrows)
-
-    out: dict[str, pa.Array] = {}
-    mode = opts.null_mode()
-    for i, v in enumerate(meta.variables):
-        if v not in sel:
-            continue
-        val = _decode_column(arr[f"f{i}"], v, meta, opts)
-        if opts.tracks_nulls(v):
-            from ..nulls import combine
-
-            if v.is_str:
-                ind = _string_indicator_column(
-                    arr[f"f{i}"], v, meta, opts.informative_null_use_value_labels
-                )
-            else:
-                ind = _indicator_column(
-                    arr[f"f{i}"], v, meta, opts.informative_null_use_value_labels
-                )
-            out.update(combine(v.name, val, ind, mode, opts.informative_null_suffix))
-        else:
-            out[v.name] = val
-    if opts.row_index:
-        out["_row_idx"] = pa.array(np.arange(row_offset, row_offset + nrows, dtype=np.int64))
-    return out
 
 
 def _decode_column(col, v: Variable, meta: SpssMetadata, opts: ReadOptions) -> pa.Array:
@@ -1007,30 +933,34 @@ def arrow_field(v: Variable, meta: SpssMetadata, opts: ReadOptions) -> pa.Field:
     return pa.field(v.name, pa.float64())
 
 
-def _select(variables, columns):
-    if columns is None:
-        return list(variables)
-    by_name = {v.name: v for v in variables}
-    return [by_name[c] for c in columns if c in by_name]
+def _columns(meta: SpssMetadata, opts: ReadOptions, columns: list[str] | None) -> Columns:
+    # indicators exist only for declared user missings
+    return Columns(meta.variables, columns, opts, lambda v: arrow_field(v, meta, opts),
+                   lambda v: bool(v.missing_strings if v.is_str else v.missing_doubles or v.missing_range))
 
 
 def arrow_schema(
     meta: SpssMetadata, opts: ReadOptions, columns: list[str] | None = None
 ) -> pa.Schema:
-    from ..nulls import informative_fields
+    return _columns(meta, opts, columns).schema
 
-    sel = _select(meta.variables, columns)
-    mode = opts.null_mode()
-    fields = []
-    for v in sel:
-        f = arrow_field(v, meta, opts)
-        if opts.tracks_nulls(v):
-            fields.extend(informative_fields(v.name, f.type, mode, opts.informative_null_suffix))
-        else:
-            fields.append(f)
-    if opts.row_index:
-        fields.append(pa.field("_row_idx", pa.int64()))
-    return pa.schema(fields)
+
+def record_decoder(meta: SpssMetadata, opts: ReadOptions, columns: list[str] | None):
+    """``decode(raw, first_row) -> RecordBatch`` over blocks of this
+    file's (decompressed) records."""
+    use_labels = opts.informative_null_use_value_labels
+
+    def indicator(cells, v):
+        if v.is_str:
+            return _string_indicator_column(cells, v, meta, use_labels)
+        return _indicator_column(cells, v, meta, use_labels)
+
+    return _columns(meta, opts, columns).records(
+        meta.record_len,
+        lambda v: (f"S{v.width * 8}" if v.is_str else meta.endian + "f8", v.offset * 8),
+        lambda cells, v: _decode_column(cells, v, meta, opts),
+        indicator,
+    )
 
 
 # --------------------------------------------------------------- readers
@@ -1062,13 +992,8 @@ def read_partition(
     """DataSource partition read: yields Arrow record batches."""
     opts = opts or ReadOptions()
     meta = read_metadata(path)
-    schema = arrow_schema(meta, opts, columns)
     rec = meta.record_len
-
-    def decode(raw: bytes, first: int):
-        cols = decode_records(raw, meta, columns, opts, row_offset=first)
-        return pa.record_batch([cols[n] for n in schema.names], schema=schema)
-
+    decode = record_decoder(meta, opts, columns)
     if meta.compression == 0:
         yield from fixed_records(path, meta.data_offset, rec, start, count, batch_size, decode)
         return

@@ -41,7 +41,7 @@ from fractions import Fraction
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import write_one_section
+from .. import Columns, ReadOptions, write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -114,23 +114,6 @@ class PorMetadata:
     row_count: int = -1  # unknown until the data section is walked
 
     split_unit = "stream"
-
-
-@dataclass
-class ReadOptions:
-    value_labels_as_strings: bool = True
-    missing_string_as_null: bool = True
-    user_missing_as_null: bool = True
-    row_index: bool = False
-    # accepted for datasource option-surface parity; .por has no
-    # informative-null support (fail loudly rather than silently drop)
-    informative_nulls: bool | str = False
-    informative_null_columns: list | None = None
-    informative_null_suffix: str = "__missing"
-
-    def __post_init__(self):
-        if self.informative_nulls:
-            raise PorError(".por reader does not support informative_nulls")
 
 
 # ------------------------------------------------------------ stream
@@ -303,11 +286,21 @@ def _compose(m: int, e: int) -> float:
 # ------------------------------------------------------------ reader
 
 
-def _parse_header(stream: str) -> tuple[PorMetadata, _Cursor]:
-    stream = _translate(stream)
-    if stream[456:464] != "SPSSPORT":
-        raise PorError("not a por file: missing SPSSPORT signature")
-    cur = _Cursor(stream, 464)
+def _parse_header(stream: str, path: str) -> tuple[PorMetadata, _Cursor]:
+    """(metadata, cursor at the first case); PorError naming ``path`` and
+    the stream offset where the header parse stopped."""
+    cur = _Cursor(stream, 0)
+    try:
+        cur.s = _translate(stream)
+        if cur.s[456:464] != "SPSSPORT":
+            raise PorError("not a por file: missing SPSSPORT signature")
+        cur.pos = 464
+        return _read_header(cur), cur
+    except (PorError, IndexError) as e:
+        raise PorError(f"{path!r}: {e} (header, stream offset {cur.pos})") from e
+
+
+def _read_header(cur: _Cursor) -> PorMetadata:
     version = cur.tag()
     if version != "A":
         raise PorError(f"unsupported por version {version!r}")
@@ -374,41 +367,40 @@ def _parse_header(stream: str) -> tuple[PorMetadata, _Cursor]:
             if nm in by_name:
                 by_name[nm].value_labels.update(dict(pairs))
     meta.data_pos = cur.pos
-    return meta, cur
+    return meta
 
 
 @stat_keyed_cache
 def read_metadata(path: str) -> PorMetadata:
     with open(path, "rb") as f:
         raw = f.read()
-    meta, _ = _parse_header(_logical_stream(raw))
+    meta, _ = _parse_header(_logical_stream(raw), path)
     return meta
 
 
+def _field(v: PorVariable, opts: ReadOptions):
+    if v.width or (opts.value_labels_as_strings and v.value_labels):
+        t = pa.string()
+    elif v.format_class == "date":
+        t = pa.date32()
+    elif v.format_class == "datetime":
+        t = pa.timestamp("us")
+    elif v.format_class == "time":
+        t = pa.int64()
+    else:
+        t = pa.float64()
+    return pa.field(v.name, t)
+
+
+def _columns(meta: PorMetadata, opts: ReadOptions, columns: list[str] | None) -> Columns:
+    if opts.null_mode():
+        # fail loudly rather than silently drop the option
+        raise PorError(".por reader does not support informative_nulls")
+    return Columns(meta.variables, columns, opts, lambda v: _field(v, opts))
+
+
 def arrow_schema(meta: PorMetadata, opts: ReadOptions, columns: list[str] | None):
-    fields = []
-    for v in meta.variables:
-        if columns is not None and v.name not in columns:
-            continue
-        if v.width:
-            t = pa.string()
-        elif opts.value_labels_as_strings and v.value_labels:
-            t = pa.string()
-        elif v.format_class == "date":
-            t = pa.date32()
-        elif v.format_class == "datetime":
-            t = pa.timestamp("us")
-        elif v.format_class == "time":
-            t = pa.int64()
-        else:
-            t = pa.float64()
-        fields.append(pa.field(v.name, t))
-    if columns is not None:
-        by = {f.name: f for f in fields}
-        fields = [by[c] for c in columns if c in by]
-    if opts.row_index:
-        fields = [pa.field("_row_idx", pa.int64())] + fields
-    return pa.schema(fields)
+    return _columns(meta, opts, columns).schema
 
 
 def _is_user_missing(v: PorVariable, x: float) -> bool:
@@ -436,7 +428,8 @@ def read_table(
     opts = opts or ReadOptions()
     with open(path, "rb") as f:
         raw = f.read()
-    meta, cur = _parse_header(_logical_stream(raw))
+    meta, cur = _parse_header(_logical_stream(raw), path)
+    assembly = _columns(meta, opts, columns)
     nvars = len(meta.variables)
     cells: list[list] = [[] for _ in range(nvars)]
     nrows = 0
@@ -459,60 +452,54 @@ def read_table(
             nrows += 1
     except PorError as e:
         raise PorError(f"{path!r}: {e} (case {nrows + 1}, stream offset {cur.pos})") from e
-    arrays = {}
-    for i, v in enumerate(meta.variables):
-        if columns is not None and v.name not in columns:
-            continue
-        col = cells[i]
-        if v.width:
-            out = []
-            for s in col:
-                s = s.rstrip(" ")
-                if opts.missing_string_as_null and s == "":
-                    out.append(None)
-                elif opts.user_missing_as_null and s in v.missing_values:
-                    out.append(None)
-                else:
-                    out.append(s)
-            arrays[v.name] = pa.array(out, type=pa.string())
-            continue
-        vals = np.array([np.nan if x is None else x for x in col], dtype=np.float64)
-        mask = np.isnan(vals)
-        if opts.user_missing_as_null and (
-            v.missing_values or v.missing_hi is not None or v.missing_lo is not None or v.missing_range
-        ):
-            for j, x in enumerate(col):
-                if x is not None and _is_user_missing(v, x):
-                    mask[j] = True
-        if opts.value_labels_as_strings and v.value_labels:
-            out = []
-            for j, x in enumerate(col):
-                if mask[j]:
-                    out.append(None)
-                else:
-                    lab = v.value_labels.get(x)
-                    out.append(lab if lab is not None else _format_num(x))
-            arrays[v.name] = pa.array(out, type=pa.string())
-        elif v.format_class == "date":
-            secs = np.trunc(np.where(mask, 0, vals)).astype(np.int64) - SPSS_SEC_SHIFT
-            days = (np.abs(secs) // SEC_PER_DAY) * np.sign(secs)
-            arrays[v.name] = pa.array(days.astype(np.int32), type=pa.date32(), mask=mask)
-        elif v.format_class == "datetime":
-            us = (np.trunc(np.where(mask, 0, vals)).astype(np.int64) - SPSS_SEC_SHIFT) * 1_000_000
-            arrays[v.name] = pa.array(us, type=pa.timestamp("us"), mask=mask)
-        elif v.format_class == "time":
-            ns = np.trunc(np.where(mask, 0, vals)).astype(np.int64) * 1_000_000_000
-            arrays[v.name] = pa.array(ns, mask=mask)
-        else:
-            arrays[v.name] = pa.array(vals, mask=mask)
-    names = [v.name for v in meta.variables if v.name in arrays]
-    if columns is not None:
-        names = [c for c in columns if c in arrays]
-    t = pa.table({n: arrays[n] for n in names})
-    if opts.row_index:
-        idx = pa.array(np.arange(offset, offset + len(t), dtype=np.int64))
-        t = t.add_column(0, "_row_idx", idx)
-    return t
+    index = {v.name: i for i, v in enumerate(meta.variables)}
+    return pa.Table.from_batches([assembly.batch(
+        [cells[index[v.name]] for v in assembly.items], max(0, nrows - offset), offset,
+        lambda col, v: _decode(col, v, opts),
+    )])
+
+
+def _decode(col: list, v: PorVariable, opts: ReadOptions) -> pa.Array:
+    """One variable's parsed cells (str, float or None) -> Arrow."""
+    if v.width:
+        out = []
+        for s in col:
+            s = s.rstrip(" ")
+            if opts.missing_string_as_null and s == "":
+                out.append(None)
+            elif opts.user_missing_as_null and s in v.missing_values:
+                out.append(None)
+            else:
+                out.append(s)
+        return pa.array(out, type=pa.string())
+    vals = np.array([np.nan if x is None else x for x in col], dtype=np.float64)
+    mask = np.isnan(vals)
+    if opts.user_missing_as_null and (
+        v.missing_values or v.missing_hi is not None or v.missing_lo is not None or v.missing_range
+    ):
+        for j, x in enumerate(col):
+            if x is not None and _is_user_missing(v, x):
+                mask[j] = True
+    if opts.value_labels_as_strings and v.value_labels:
+        out = []
+        for j, x in enumerate(col):
+            if mask[j]:
+                out.append(None)
+            else:
+                lab = v.value_labels.get(x)
+                out.append(lab if lab is not None else _format_num(x))
+        return pa.array(out, type=pa.string())
+    if v.format_class == "date":
+        secs = np.trunc(np.where(mask, 0, vals)).astype(np.int64) - SPSS_SEC_SHIFT
+        days = (np.abs(secs) // SEC_PER_DAY) * np.sign(secs)
+        return pa.array(days.astype(np.int32), type=pa.date32(), mask=mask)
+    if v.format_class == "datetime":
+        us = (np.trunc(np.where(mask, 0, vals)).astype(np.int64) - SPSS_SEC_SHIFT) * 1_000_000
+        return pa.array(us, type=pa.timestamp("us"), mask=mask)
+    if v.format_class == "time":
+        ns = np.trunc(np.where(mask, 0, vals)).astype(np.int64) * 1_000_000_000
+        return pa.array(ns, mask=mask)
+    return pa.array(vals, mask=mask)
 
 
 def read_partition(

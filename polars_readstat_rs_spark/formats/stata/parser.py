@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
-from .. import fixed_records, fixed_width_strings
+from .. import Columns, ReadOptions, fixed_records, fixed_width_strings
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -100,42 +100,11 @@ class StataMetadata:
         return any(v.kind == "strl" for v in self.variables)
 
 
-@dataclass
-class ReadOptions:
-    value_labels_as_strings: bool = True
-    missing_string_as_null: bool = True
-    row_index: bool = False  # emit _row_idx for order preservation (P10)
-    # P6 informative nulls (reference InformativeNullOpts, src/lib.rs:
-    # 62-115): False = off; "separate" (or True) = parallel
-    # "<col>__missing" string columns; "struct" = Struct{value,
-    # null_indicator}; "merged" = coalesce(cast(value, string),
-    # indicator). Tagged-missing indicators are '.a'..'.z'; system
-    # missing stays a plain null with no indicator.
-    informative_nulls: bool | str = False
-    # None = all eligible (numeric) columns; else only the named ones
-    # (reference InformativeNullColumns::Selected).
-    informative_null_columns: list[str] | None = None
-    # reference SeparateColumn { suffix } (its default "_null"; ours
-    # "__missing" — documented deviation, configurable per scan)
-    informative_null_suffix: str = "__missing"
-
-    def null_mode(self) -> str | None:
-        from ..nulls import normalize_mode
-
-        return normalize_mode(self.informative_nulls)
-
-    def tracks_nulls(self, name: str, eligible: bool) -> bool:
-        if not eligible or self.null_mode() is None:
-            return False
-        cols = self.informative_null_columns
-        return cols is None or name in cols
-
-
 # ----------------------------------------------------------------- layout
 
-def _layout(v: int) -> dict:
+def _layout(v: int, path: str) -> dict:
     if not 102 <= v <= 119:
-        raise ValueError(f"unsupported Stata version: {v}")
+        raise ValueError(f"{path!r}: unsupported Stata version: {v}")
     return {
         "xmlish": v >= 117,
         "fmt_len": 7 if v < 105 else (12 if v < 114 else (49 if v < 118 else 57)),
@@ -154,21 +123,31 @@ def _layout(v: int) -> dict:
 
 
 class _Cursor:
-    def __init__(self, buf: bytes):
+    """Reads ``buf``, the bytes of ``path`` from byte offset ``base`` on."""
+
+    def __init__(self, buf: bytes, path: str, base: int = 0):
         self.buf = buf
+        self.path = path
+        self.base = base
         self.pos = 0
 
     def take(self, n: int) -> bytes:
         b = self.buf[self.pos : self.pos + n]
         if len(b) < n:
-            raise EOFError("truncated .dta file")
+            raise EOFError(
+                f"truncated file {self.path!r}: {n} bytes declared at byte offset "
+                f"{self.base + self.pos}, the file ends at byte offset {self.base + len(self.buf)}"
+            )
         self.pos += n
         return b
 
     def tag(self, t: bytes) -> None:
         got = self.take(len(t))
         if got != t:
-            raise ValueError(f"expected {t!r}, got {got!r} at {self.pos - len(t)}")
+            raise ValueError(
+                f"{self.path!r}: expected {t!r}, got {got!r} at byte offset "
+                f"{self.base + self.pos - len(t)}"
+            )
 
     def maybe_tag(self, t: bytes) -> bool:
         if self.buf[self.pos : self.pos + len(t)] == t:
@@ -258,7 +237,7 @@ def _read_metadata_uncached(path: str) -> StataMetadata:
 
 
 def _read_meta_bytes(buf: bytes, path: str) -> StataMetadata:
-    c = _Cursor(buf)
+    c = _Cursor(buf, path)
     if c.maybe_tag(b"<stata_dta>"):
         c.tag(b"<header>")
         c.tag(b"<release>")
@@ -267,7 +246,7 @@ def _read_meta_bytes(buf: bytes, path: str) -> StataMetadata:
         c.tag(b"<byteorder>")
         endian = ">" if c.take(3) == b"MSF" else "<"
         c.tag(b"</byteorder>")
-        lay = _layout(version)
+        lay = _layout(version, path)
         c.tag(b"<K>")
         nvar = c.uint(4 if version >= 119 else 2, endian)
         c.tag(b"</K>")
@@ -312,7 +291,7 @@ def _read_meta_bytes(buf: bytes, path: str) -> StataMetadata:
     byteorder = c.u8()
     endian = ">" if byteorder == 0x01 else "<"
     c.take(2)  # filetype, unused
-    lay = _layout(version)
+    lay = _layout(version, path)
     nvar = c.uint(2, endian)
     nobs = c.uint(2, endian) if version == 102 else c.uint(4, endian)
     meta = StataMetadata(version, endian, nvar, nobs)
@@ -339,7 +318,7 @@ def _read_meta_bytes(buf: bytes, path: str) -> StataMetadata:
             c.take(ln)
     meta.data_offset = c.pos
     meta.value_labels_offset = meta.data_offset + meta.record_len * meta.nobs
-    _read_value_labels_binary(meta, buf)
+    _read_value_labels_binary(meta, buf, path)
     return meta
 
 
@@ -435,12 +414,12 @@ def _read_value_labels_xmlish(meta: StataMetadata, path: str) -> None:
     with open(path, "rb") as f:
         f.seek(meta.value_labels_offset)
         buf = f.read()
-    c = _Cursor(buf)
+    c = _Cursor(buf, path, meta.value_labels_offset)
     try:
         c.tag(b"<value_labels>")
     except (ValueError, EOFError):
         return
-    lay = _layout(meta.version)
+    lay = _layout(meta.version, path)
     while c.maybe_tag(b"<lbl>"):
         ln = c.uint(4, meta.endian)
         labname = _cstr(c.take(lay["vl_name_len"]), meta.encoding)
@@ -451,13 +430,13 @@ def _read_value_labels_xmlish(meta: StataMetadata, path: str) -> None:
             meta.value_labels[labname] = _parse_vl_modern(meta, table)
 
 
-def _read_value_labels_binary(meta: StataMetadata, buf: bytes) -> None:
+def _read_value_labels_binary(meta: StataMetadata, buf: bytes, path: str) -> None:
     off = meta.value_labels_offset
     if not off or off >= len(buf):
         return
-    c = _Cursor(buf)
+    c = _Cursor(buf, path)
     c.pos = off
-    lay = _layout(meta.version)
+    lay = _layout(meta.version, path)
     while True:
         try:
             if lay["vl_len_len"] == 2:
@@ -491,7 +470,7 @@ def load_strls(path: str, meta: StataMetadata) -> dict[tuple[int, int], str]:
     with open(path, "rb") as f:
         f.seek(meta.strls_offset)
         buf = f.read((meta.value_labels_offset or 0) - meta.strls_offset or -1)
-    c = _Cursor(buf)
+    c = _Cursor(buf, path, meta.strls_offset)
     c.tag(b"<strls>")
     while True:
         tag = c.take(3)
@@ -531,63 +510,6 @@ def _missing_int_sentinel(kind: str, version: int) -> int:
     if version >= 113:
         return {"i8": 101, "i16": 32741, "i32": 2147483621}[kind]
     return {"i8": 127, "i16": 32767, "i32": 2147483647}[kind]
-
-
-def decode_records(
-    raw: bytes,
-    meta: StataMetadata,
-    columns: list[str] | None = None,
-    strl_map: dict[tuple[int, int], str] | None = None,
-    opts: ReadOptions | None = None,
-    row_offset: int = 0,
-) -> dict[str, pa.Array]:
-    """Vectorized decode of a block of fixed-width records.
-
-    One numpy structured view over the whole block; per-column ops only.
-    """
-    opts = opts or ReadOptions()
-    nrows = len(raw) // meta.record_len if meta.record_len else 0
-    sel = _select(meta.variables, columns)
-
-    fields = []
-    pos = 0
-    sel_names = {v.name for v in sel}
-    for v in meta.variables:
-        fname = f"f{len(fields)}"
-        if v.name in sel_names:
-            if v.kind in _NUM_KINDS:
-                np_code = meta.endian + _NUM_KINDS[v.kind][0]
-            elif v.kind == "str":
-                np_code = f"S{v.width}"
-            else:  # strl
-                np_code = "V8"
-            fields.append((fname, np_code, pos, v.name))
-        pos += v.width
-    dt = np.dtype(
-        {
-            "names": [f[0] for f in fields],
-            "formats": [f[1] for f in fields],
-            "offsets": [f[2] for f in fields],
-            "itemsize": meta.record_len,
-        }
-    )
-    rec = np.frombuffer(raw, dtype=dt, count=nrows)
-
-    out: dict[str, pa.Array] = {}
-    by_name = {f[3]: f[0] for f in fields}
-    mode = opts.null_mode()
-    for v in sel:
-        val = _decode_column(rec[by_name[v.name]], v, meta, strl_map, opts)
-        if opts.tracks_nulls(v.name, v.kind in _NUM_KINDS):
-            from ..nulls import combine
-
-            ind = _indicator_column(rec[by_name[v.name]], v, meta)
-            out.update(combine(v.name, val, ind, mode, opts.informative_null_suffix))
-        else:
-            out[v.name] = val
-    if opts.row_index:
-        out["_row_idx"] = pa.array(np.arange(row_offset, row_offset + nrows, dtype=np.int64))
-    return out
 
 
 def _decode_column(arr, v: Variable, meta: StataMetadata, strl_map, opts: ReadOptions) -> pa.Array:
@@ -838,29 +760,33 @@ def arrow_field(v: Variable, meta: StataMetadata, opts: ReadOptions) -> pa.Field
     return pa.field(v.name, t)
 
 
-def _select(variables, columns):
-    """Projection honoring the requested column order (reference P1)."""
-    if columns is None:
-        return list(variables)
-    by_name = {v.name: v for v in variables}
-    return [by_name[c] for c in columns if c in by_name]
+def _columns(meta: StataMetadata, opts: ReadOptions, columns: list[str] | None) -> Columns:
+    return Columns(meta.variables, columns, opts, lambda v: arrow_field(v, meta, opts),
+                   lambda v: v.kind in _NUM_KINDS)
 
 
 def arrow_schema(meta: StataMetadata, opts: ReadOptions, columns: list[str] | None = None) -> pa.Schema:
-    from ..nulls import informative_fields
+    return _columns(meta, opts, columns).schema
 
-    sel = _select(meta.variables, columns)
-    mode = opts.null_mode()
-    fields = []
-    for v in sel:
-        f = arrow_field(v, meta, opts)
-        if opts.tracks_nulls(v.name, v.kind in _NUM_KINDS):
-            fields.extend(informative_fields(v.name, f.type, mode, opts.informative_null_suffix))
-        else:
-            fields.append(f)
-    if opts.row_index:
-        fields.append(pa.field("_row_idx", pa.int64()))
-    return pa.schema(fields)
+
+def _cell(v: Variable, meta: StataMetadata) -> str:
+    """A variable's numpy code in the record view."""
+    if v.kind in _NUM_KINDS:
+        return meta.endian + _NUM_KINDS[v.kind][0]
+    return f"S{v.width}" if v.kind == "str" else "V8"  # strl: 8-byte (v, o) ref
+
+
+def record_decoder(meta: StataMetadata, opts: ReadOptions, columns: list[str] | None = None,
+                   strl_map: dict[tuple[int, int], str] | None = None):
+    """``decode(raw, first_row) -> RecordBatch`` over blocks of this
+    file's fixed-width records."""
+    offsets = dict(zip((v.name for v in meta.variables), meta.offsets))
+    return _columns(meta, opts, columns).records(
+        meta.record_len,
+        lambda v: (_cell(v, meta), offsets[v.name]),
+        lambda cells, v: _decode_column(cells, v, meta, strl_map, opts),
+        lambda cells, v: _indicator_column(cells, v, meta),
+    )
 
 
 # --------------------------------------------------------------- readers
@@ -881,14 +807,9 @@ def read_partition(
         v.kind == "strl" for v in meta.variables if columns is None or v.name in set(columns)
     )
     strl_map = load_strls(path, meta) if need_strl else None
-    schema = arrow_schema(meta, opts, columns)
-
-    def decode(raw: bytes, first: int):
-        cols = decode_records(raw, meta, columns, strl_map, opts, row_offset=first)
-        return pa.record_batch([cols[n] for n in schema.names], schema=schema)
-
     yield from fixed_records(
-        path, meta.data_offset, meta.record_len, start, count, batch_size, decode
+        path, meta.data_offset, meta.record_len, start, count, batch_size,
+        record_decoder(meta, opts, columns, strl_map),
     )
 
 

@@ -261,13 +261,11 @@ def test_informative_nulls_pre_v113_floats():
     rec["f1"][0] = 2.5
     bits[1] = 0x7FE0000000000001  # .a
     bits[2] = 0x7FE0000000000000  # system
-    out = sp.decode_records(
-        rec.tobytes(), meta, opts=sp.ReadOptions(informative_nulls="separate")
-    )
-    assert out["x__missing"].to_pylist() == [None, ".a", None]
-    assert out["x"].to_pylist() == [2.5, None, None]
-    assert out["i__missing"].to_pylist() == [None, None, None]  # no tags pre-113
-    assert out["i"].to_pylist() == [5, None, 9]
+    out = sp.record_decoder(meta, sp.ReadOptions(informative_nulls="separate"))(rec.tobytes(), 0)
+    assert out.column("x__missing").to_pylist() == [None, ".a", None]
+    assert out.column("x").to_pylist() == [2.5, None, None]
+    assert out.column("i__missing").to_pylist() == [None, None, None]  # no tags pre-113
+    assert out.column("i").to_pylist() == [5, None, 9]
 
 
 def test_dta_declared_string_widths(spark, tmp_path):

@@ -316,3 +316,22 @@ def test_xpt_rejects_over_long_character_values(tmp_path):
     write_xpt(ok, str(tmp_path / "ok.xpt"))
     _, back = _read(str(tmp_path / "ok.xpt"))
     assert back.column("big").to_pylist() == ["x", "y" * 32767]
+
+
+def test_xpt_rejects_over_long_declared_widths_without_rows(tmp_path):
+    """A declared XPORT string width over 32,767 fails by column name
+    also when no row reaches the encoder: write_xpt of an empty table and
+    the empty assemble of a staged write."""
+    import json
+
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
+
+    t = pa.table({"id": pa.array([], pa.float64()), "s": pa.array([], pa.string())})
+    with pytest.raises(ValueError, match=r"'s'.*32767"):
+        write_xpt(t, str(tmp_path / "e.xpt"), string_widths={"s": 40000})
+    w = ReadstatDataSource({"path": str(tmp_path / "st.xpt"),
+                            "string_widths": json.dumps({"s": 40000})}).writer(
+        _from_arrow_schema(t.schema), True)
+    msg = w.write(iter(t.to_batches()))
+    with pytest.raises(ValueError, match=r"'s'.*32767"):
+        w.commit([msg])

@@ -178,7 +178,7 @@ def test_xpt_informative_nulls_separate(tmp_path):
     rt = X.read_table(p, opts=X.ReadOptions(informative_nulls="separate"))
     assert rt.column_names == ["X", "X__missing"]
     assert rt.column("X").to_pylist() == [1.0, None, 3.0]
-    assert rt.column("X__missing").to_pylist() == [None, "B", None]
+    assert rt.column("X__missing").to_pylist() == [None, ".B", None]
 
 
 def test_xpt_rejects_non_xport(tmp_path):
@@ -227,7 +227,7 @@ def test_xpt_datasource_partitioned_e2e(spark, tmp_path):
     assert len(rows) == 10 and rows[0].asDict()["_row_idx"] == 100
     # rows are written partition-order; K at _row_idx i is whatever that
     # file row holds — just check the projection pruned to 2 cols
-    assert sl.columns == ["_row_idx", "K"]
+    assert sl.columns == ["K", "_row_idx"]
 
 
 def test_xpt_empty_write(spark, tmp_path):
