@@ -415,9 +415,11 @@ def _read_value_labels_xmlish(meta: StataMetadata, path: str) -> None:
         f.seek(meta.value_labels_offset)
         buf = f.read()
     c = _Cursor(buf, path, meta.value_labels_offset)
+    # only a wrong opening tag means "no labels": a cut anywhere in the
+    # section, closing tag included, raises the cursor's EOFError (file, offset)
     try:
         c.tag(b"<value_labels>")
-    except (ValueError, EOFError):
+    except ValueError:
         return
     lay = _layout(meta.version, path)
     while c.maybe_tag(b"<lbl>"):
@@ -428,6 +430,7 @@ def _read_value_labels_xmlish(meta: StataMetadata, path: str) -> None:
         c.tag(b"</lbl>")
         if ln >= 8:
             meta.value_labels[labname] = _parse_vl_modern(meta, table)
+    c.take(len(b"</value_labels>"))
 
 
 def _read_value_labels_binary(meta: StataMetadata, buf: bytes, path: str) -> None:

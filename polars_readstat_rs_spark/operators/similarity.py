@@ -13,9 +13,18 @@ per-row norms use the codegen fold expression (dot_expr), while PAIR
 tables (millions of candidate rows) use pair_dot_udf — an
 Arrow-vectorized numpy loop that performs the identical IEEE-754
 addition sequence ~30x faster than interpreted higher-order lambdas.
+
+Every top-k operator keeps only its candidate source; three helpers
+below hold the decisions they share. :func:`_rank_topk` is the one
+per-query rank (score DESC, id ASC, ``rank <= k``), :func:`_probe` the
+one IVF probe (queries x broadcast cells, ``prank <= nprobe``) and
+:func:`_score_cells` the one IVF scoring (cell join, self pair dropped,
+``round(dot / (q_norm * c_norm), 6)``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -95,6 +104,52 @@ def pair_cosine_udf(a: str | Column, b: str | Column) -> Column:
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
     return _cos(a, b)
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str = "sim", id: str = "vec_id") -> DataFrame:
+    """Per-query top-k of a scored (q_id, id, score) frame: ``rank`` is the
+    row_number over (score DESC, id ASC), kept while ``rank <= k``."""
+    w = W.partitionBy("q_id").orderBy(F.desc(score), F.asc(id))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probe(
+    q: DataFrame,
+    cells: DataFrame,
+    vec: str,
+    score: Callable[[str, str], Column],
+    ascending: bool,
+    nprobe: int,
+) -> DataFrame:
+    """The IVF probe: every query (q_id, q_vec, ...) scores each broadcast
+    cell's ``vec`` with ``score(q_vec, vec)`` and keeps its ``nprobe``
+    best cells, ties to the lowest cell id. A distance ranks ascending
+    (``pd``), a similarity descending (``psim``). Returns q's columns plus
+    ``cell``."""
+    p = "pd" if ascending else "psim"
+    w = W.partitionBy("q_id").orderBy(F.asc(p) if ascending else F.desc(p), F.asc("cell"))
+    return (
+        q.crossJoin(F.broadcast(cells))
+        .withColumn(p, score("q_vec", vec))
+        .withColumn("prank", F.row_number().over(w))
+        .filter(F.col("prank") <= nprobe)
+        .select(*q.columns, "cell")
+    )
+
+
+def _score_cells(c: DataFrame, probed: DataFrame) -> DataFrame:
+    """The IVF scoring: corpus rows (cell, vec_id, c_vec) join the probed
+    (q_id, q_vec, q_norm, cell) rows on cell, drop the self pair and score
+    the fold-order cosine rounded to 6 places as (q_id, vec_id, sim)."""
+    return (
+        c.withColumn("c_norm", F.sqrt(dot_expr("c_vec", "c_vec")))
+        .join(F.broadcast(probed), ["cell"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .withColumn(
+            "sim", F.round(dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6)
+        )
+        .select("q_id", "vec_id", "sim")
+    )
 
 
 def brute_force_topk(
@@ -232,9 +287,7 @@ def brute_force_topk(
         .filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
         .withColumn("sim", F.round("sim", 6))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return _track(out)
+    return _track(_rank_topk(scored, k))
 
 
 def ann_recall(truth: DataFrame, approx: DataFrame, k: int = 10) -> DataFrame:
@@ -244,7 +297,9 @@ def ann_recall(truth: DataFrame, approx: DataFrame, k: int = 10) -> DataFrame:
     100 TB run.
 
     Both inputs use the (q_id, vec_id, rank) contract that
-    brute_force_topk / ivf_topk / kmeans_ivf_topk emit. Per query:
+    :func:`_rank_topk` gives brute_force_topk, ivf_topk,
+    kmeans_ivf_topk, ivf_append_topk, exact_rerank, filtered_topk and
+    ivf_pq_topk (pq_topk emits it too, ranked on approx_dot). Per query:
     ``n_truth`` ground-truth neighbors (<= k — a query can have fewer
     than k scoreable neighbors), ``n_hit`` of them found by the
     approximate index, ``recall`` = n_hit / n_truth as an exact single
@@ -290,47 +345,21 @@ def ivf_topk(
     brute-forces within them. At 100 TB the probed fraction bounds both
     scan and shuffle: cost scales with nprobe/ncells, not corpus size.
     """
-    w_cell = W.partitionBy("cell").orderBy("vec_id")
+    c = corpus.select(
+        F.col(cell_col).alias("cell"), F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
+    ).persist()
     pivots = (
-        corpus.select(
-            F.col(cell_col).alias("cell"), F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
+        c.withColumn("rn", F.row_number().over(W.partitionBy("cell").orderBy("vec_id")))
         .filter(F.col("rn") == 1)
-        .select("cell", F.col("vec").alias("pivot"))
+        .select("cell", F.col("c_vec").alias("pivot"))
     )
     q = (
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
         .withColumn("q_norm", F.sqrt(dot_expr("q_vec", "q_vec")))
         .persist()
     )
-    # rank cells per query by pivot similarity; keep nprobe
-    w_q = W.partitionBy("q_id").orderBy(F.desc("psim"), F.asc("cell"))
-    probed = (
-        q.crossJoin(F.broadcast(pivots))
-        .withColumn("psim", cosine_expr("q_vec", "pivot"))
-        .withColumn("prank", F.row_number().over(w_q))
-        .filter(F.col("prank") <= nprobe)
-        .select("q_id", "q_vec", "q_norm", "cell")
-    )
-    c = (
-        corpus.select(
-            F.col(cell_col).alias("cell"), F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-        )
-        .withColumn("c_norm", F.sqrt(dot_expr("c_vec", "c_vec")))
-        .persist()
-    )
-    scored = (
-        c.join(F.broadcast(probed), ["cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "sim", F.round(dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6)
-        )
-        .select("q_id", "vec_id", "sim")
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return _track(out, q, c)
+    probed = _probe(q, pivots, "pivot", cosine_expr, False, nprobe)
+    return _track(_rank_topk(_score_cells(c, probed), k), q, c)
 
 
 def blocked_neardup_pairs(
@@ -783,8 +812,7 @@ def srp_ann_join(
         F.col("vec").alias("c_vec"),
         F.sqrt(dot_expr("vec", "vec")).alias("c_norm"),
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("c_id"))
-    out = (
+    scored = (
         cand.join(qn, "q_id")
         .join(cn, "c_id")
         .withColumn(
@@ -792,10 +820,8 @@ def srp_ann_join(
             F.round(pair_dot_udf("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6),
         )
         .select("q_id", "c_id", "sim")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
     )
-    return _track(out, qs, cs)
+    return _track(_rank_topk(scored, k, id="c_id"), qs, cs)
 
 
 def mmr_rerank(
@@ -911,32 +937,7 @@ def _sqdist_expr(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def pair_sqdist_udf(a: str | Column, b: str | Column) -> Column:
-    """Arrow-vectorized squared L2 distance with :func:`_sqdist_expr`'s
-    exact fold order (see pair_dot_udf) — for corpus x centroid
-    assignment tables."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _sqd(sa, sb):
-        if not len(sa):
-            return pd.Series([], dtype="float64")
-        ma = np.array(sa.tolist(), dtype=np.float64)
-        mb = np.array(sb.tolist(), dtype=np.float64)
-        acc = np.zeros(len(ma), dtype=np.float64)
-        for j in range(ma.shape[1]):
-            d = ma[:, j] - mb[:, j]
-            acc += d * d
-        return pd.Series(acc)
-
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _sqd(a, b)
-
-
-def _assign_cells(vecs: DataFrame, cents: DataFrame, vectorized: bool = False) -> DataFrame:
+def _assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-centroid assignment (ties -> lowest cell id), MAP-ONLY.
 
     The centroid model (ncells x dim doubles — a bounded model
@@ -954,9 +955,7 @@ def _assign_cells(vecs: DataFrame, cents: DataFrame, vectorized: bool = False) -
     WITH the corpus (constant cell population), which made assignment
     the one super-linear stage left in the pipeline (r4 40x scale
     smoke: 19x wall at 40x input); the mapped kernel does the same
-    FLOPs with zero extra rows and zero shuffles. ``vectorized`` is
-    kept for API compatibility — both former paths fold identically,
-    so there is nothing left to choose."""
+    FLOPs with zero extra rows and zero shuffles."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -996,7 +995,6 @@ def kmeans_cells(
     ncells: int = 8,
     iters: int = 2,
     exact: bool = True,
-    vectorized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Deterministic distributed Lloyd's k-means over an embedding
     column; returns (assignment: vec_id/vec/cell, centroids:
@@ -1037,7 +1035,7 @@ def kmeans_cells(
         )
     )
     for _ in range(iters):
-        assigned = _assign_cells(vecs, cents, vectorized)
+        assigned = _assign_cells(vecs, cents)
         if exact:
             mem = assigned.groupBy("cell").agg(
                 F.array_sort(F.collect_list(F.struct("vec_id", "vec"))).alias("mem"),
@@ -1069,7 +1067,7 @@ def kmeans_cells(
                 .select("cell", F.transform("pm", lambda s: s["m"]).alias("centroid"))
             )
         cents = _materialize(cents)
-    return _assign_cells(vecs, cents, vectorized), cents
+    return _assign_cells(vecs, cents), cents
 
 
 def kmeans_ivf_topk(
@@ -1082,13 +1080,29 @@ def kmeans_ivf_topk(
     ncells: int = 8,
     iters: int = 2,
     exact: bool = True,
-    vectorized: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k with learned k-means cells (the production
     upgrade over ivf_topk's label cells): cluster once, probe the
     ``nprobe`` nearest centroids per query, brute-force inside the
     probed cells. Cost scales with nprobe/ncells, not corpus size."""
-    assigned, cents = kmeans_cells(corpus, id_col, vec_col, ncells, iters, exact, vectorized)
+    assigned, cents = kmeans_cells(corpus, id_col, vec_col, ncells, iters, exact)
+    return _centroid_topk(assigned, cents, queries, id_col, vec_col, k, nprobe)
+
+
+def _centroid_topk(
+    assigned: DataFrame,
+    cents: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    nprobe: int,
+) -> DataFrame:
+    """Search over k-means cells once they are built (``assigned``:
+    vec_id/vec/cell, ``cents``: cell/centroid): probe the ``nprobe``
+    nearest centroids, score the probed cells, rank the top k. Shared by
+    :func:`kmeans_ivf_topk` and :func:`ivf_append_topk`, which differ
+    only in where their cells come from."""
     assigned = assigned.persist()
     q = (
         queries.select(
@@ -1098,28 +1112,9 @@ def kmeans_ivf_topk(
         .withColumn("q_norm", F.sqrt(dot_expr("q_vec", "q_vec")))
         .persist()
     )
-    w_q = W.partitionBy("q_id").orderBy(F.asc("pd"), F.asc("cell"))
-    probed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("pd", _sqdist_expr("q_vec", "centroid"))
-        .withColumn("prank", F.row_number().over(w_q))
-        .filter(F.col("prank") <= nprobe)
-        .select("q_id", "q_vec", "q_norm", "cell")
-    )
-    c = assigned.select(
-        "cell", F.col("vec_id"), F.col("vec").alias("c_vec")
-    ).withColumn("c_norm", F.sqrt(dot_expr("c_vec", "c_vec")))
-    scored = (
-        c.join(F.broadcast(probed), ["cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "sim", F.round(dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6)
-        )
-        .select("q_id", "vec_id", "sim")
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= k)
-    return _track(out, assigned, q)
+    probed = _probe(q, cents, "centroid", _sqdist_expr, True, nprobe)
+    c = assigned.select("cell", "vec_id", F.col("vec").alias("c_vec"))
+    return _track(_rank_topk(_score_cells(c, probed), k), assigned, q)
 
 
 def ivf_cell_stats(
@@ -1177,7 +1172,6 @@ def semantic_dedup(
     ncells: int = 8,
     iters: int = 2,
     exact: bool = True,
-    vectorized: bool = False,
     max_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: k-means-cluster the
@@ -1208,7 +1202,7 @@ def semantic_dedup(
     """
     from .dedup import neardup_components
 
-    assigned, _ = kmeans_cells(corpus, id_col, vec_col, ncells, iters, exact, vectorized)
+    assigned, _ = kmeans_cells(corpus, id_col, vec_col, ncells, iters, exact)
     assigned = assigned.withColumn("norm", F.sqrt(dot_expr("vec", "vec")))
     if max_cell is not None:
         w = W.partitionBy("cell").orderBy(F.asc("vec_id"))
@@ -1345,11 +1339,7 @@ def _adc_rank(base: DataFrame, luts: list[DataFrame], m: int, k: int) -> DataFra
         scored.select("q_id", "vec_id", approx.alias("approx_dot"))
         .filter(F.col("vec_id") != F.col("q_id"))
     )
-    w = W.partitionBy("q_id").orderBy(F.col("approx_dot").desc(), "vec_id")
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(out, k, score="approx_dot")
 
 
 def ivf_pq_topk(
@@ -1390,13 +1380,8 @@ def ivf_pq_topk(
         F.col(id_col).alias("q_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("q_vec"),
     )
-    w_q = W.partitionBy("q_id").orderBy(F.asc("pd"), F.asc("cell"))
-    probed = (
-        qv.crossJoin(F.broadcast(cents))
-        .withColumn("pd", _sqdist_expr("q_vec", "centroid"))
-        .withColumn("prank", F.row_number().over(w_q))
-        .filter(F.col("prank") <= nprobe)
-        .select("q_id", F.col("cell").alias("_ivf_cell"))
+    probed = _probe(qv, cents, "centroid", _sqdist_expr, True, nprobe).select(
+        "q_id", F.col("cell").alias("_ivf_cell")
     )
     codes, luts = _pq_codes_and_luts(corpus, queries, m, ksub, iters, id_col, vec_col)
     restricted = codes.join(
@@ -1459,11 +1444,7 @@ def exact_rerank(
             ).alias("sim"),
         )
     )
-    w = W.partitionBy("q_id").orderBy(F.col("sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_append_topk(
@@ -1495,39 +1476,8 @@ def ivf_append_topk(
         F.col(id_col).alias("vec_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
-    assigned = assigned_b.select("vec_id", "vec", "cell").unionByName(
-        _assign_cells(newv, cents)
-    ).persist()
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("q_vec"),
-        )
-        .withColumn("q_norm", F.sqrt(dot_expr("q_vec", "q_vec")))
-        .persist()
-    )
-    w_q = W.partitionBy("q_id").orderBy(F.asc("pd"), F.asc("cell"))
-    probed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("pd", _sqdist_expr("q_vec", "centroid"))
-        .withColumn("prank", F.row_number().over(w_q))
-        .filter(F.col("prank") <= nprobe)
-        .select("q_id", "q_vec", "q_norm", "cell")
-    )
-    c = assigned.select(
-        "cell", F.col("vec_id"), F.col("vec").alias("c_vec")
-    ).withColumn("c_norm", F.sqrt(dot_expr("c_vec", "c_vec")))
-    scored = (
-        c.join(F.broadcast(probed), ["cell"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "sim", F.round(dot_expr("q_vec", "c_vec") / (F.col("q_norm") * F.col("c_norm")), 6)
-        )
-        .select("q_id", "vec_id", "sim")
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= k)
-    return _track(out, assigned, q)
+    assigned = assigned_b.select("vec_id", "vec", "cell").unionByName(_assign_cells(newv, cents))
+    return _centroid_topk(assigned, cents, queries, id_col, vec_col, k, nprobe)
 
 
 def filtered_topk(
@@ -1565,9 +1515,7 @@ def filtered_topk(
         .withColumn("sim", F.round(pair_cosine_udf("q_vec", "c_vec"), 6))
         .select("q_id", "vec_id", "sim")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    return _track(out)
+    return _track(_rank_topk(scored, k))
 
 
 def knn_label_vote(

@@ -7,10 +7,10 @@ the read path must keep these bytes (batch boundaries are not part of
 the contract). Tagged missings are hand-patched into the written bytes.
 
 ``test_truncated_file_names_the_file`` cuts each file at seeded offsets
-in its header and its data region: every cut raises a typed error that
-names the file, except an .xpt data cut on an 80-byte record boundary,
-which reads exactly the whole records present (XPORT stores no row
-count).
+in its header and its data region, and the .dta in its value labels:
+every cut raises a typed error that names the file, except an .xpt data
+cut on an 80-byte record boundary, which reads exactly the whole records
+present (XPORT stores no row count).
 """
 
 from __future__ import annotations
@@ -355,8 +355,12 @@ def test_truncated_file_names_the_file(files, tmp_path, name):
     lo, hi = _data_start(full)
     rng = random.Random(name)
     # plus one data cut on an 80-byte boundary
-    cuts = sorted(rng.sample(range(1, lo), 12) + rng.sample(range(lo + 1, hi), 6)
-                  + [(lo + hi) // 160 * 80])
+    cuts = rng.sample(range(1, lo), 12) + rng.sample(range(lo + 1, hi), 6) + [(lo + hi) // 160 * 80]
+    if name == "a.dta":
+        # inside <value_labels>: its opening tag, a <lbl> tag, before its closing tag
+        at = formats.parser("stata").read_metadata(full).value_labels_offset
+        cuts += [at, at + 5, at + 13, at + 16, raw.index(b"</value_labels>", at)]
+    cuts.sort()
     whole, _ = _read(full, {})
     for cut in cuts:
         path = str(tmp_path / f"cut{cut}_{name}")
